@@ -1,4 +1,4 @@
-"""One crawl epoch as a single DataFrame job (SURVEY.md §7 M1/M2/M3).
+"""One crawl epoch, cut at two materialization points (SURVEY.md §7 M1/M2/M3).
 
 The reference's async page loop (/root/reference/src/infrastructure/
 github_api.py:467-686 driving /root/reference/src/application/
@@ -10,10 +10,23 @@ use_cases.py:77-141) becomes a deterministic batch pipeline:
     -> robots split (broadcast dim)                             [north_rule]
     -> backoff gate (not_before_epoch <= epoch)                 [T4/T5]
     -> token-bucket admission, global (priority, seq) order     [O1/T3]
+  == materialization point 1: admitted + robots-denied keys ==
+    -> string materialization for the scheduled key set
     -> deterministic fetch outcomes                             [T5/T6]
     -> payload validation vs the image+caption table            [V4/V5]
+    -> one final status per row (a single CASE)
+  == materialization point 2: the epoch rows ==
     -> ONE atomic commit: crawl_log, url_seen, retries,
        seen_filter, epoch_metrics, crawl_jobs(+meta), budgets   [S7/S13/T11]
+
+The two materialization points are parquet files staged under the
+``epoch_scratch`` table (never committed) and read back as plain scans.
+Spark copies a reused subplan into every query that uses it, so without the
+cut each of the epoch's writes and collects re-planned the whole upstream
+DAG, and re-ran whatever of it was not cached. ``persist`` leaves the plan whole, and
+``localCheckpoint`` was seen to duplicate retry-sourced rows; a file scan
+is a real cut. The scratch files are deleted when the epoch ends, and
+``SnapshotStore.vacuum`` reclaims them after a crash.
 
 Scale levers (explicit, per north_rule):
   * **priority partition pruning** — the frontier is stored one file-set per
@@ -23,8 +36,8 @@ Scale levers (explicit, per north_rule):
     The rest of a 10^10-row frontier is never touched.
   * **salted two-phase per-host top-k** in admission (politeness.admit),
     with **late materialization**: the admission shuffles carry compact
-    hashed keys only; URL/host strings rejoin via a broadcast join of the
-    admitted key set (politeness.admit_late_materialized).
+    hashed keys only; URL/host strings rejoin after the first spill, for the
+    scheduled key set only.
   * **bloom negative-cache** in front of the exact seen anti-join.
   * budgets and robots are **broadcast**; the popped batch is broadcast into
     the image-table join.
@@ -32,6 +45,7 @@ Scale levers (explicit, per north_rule):
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -61,6 +75,10 @@ COMPACT_COLS = ["url_hash", "host_hash", "priority", "seq", "attempt",
                 "not_before_epoch"]
 # string/payload columns read back only for the admitted + denied key set
 MATERIAL_COLS = ["url_hash", "url", "host", "image_id", "discovered_at"]
+
+TERMINAL = ("ok", "invalid_payload", "failed", "robots_denied")
+# per-epoch spill files: staged, read back, deleted — never committed
+SCRATCH = "epoch_scratch"
 
 
 def _job_schema():
@@ -121,6 +139,16 @@ def _ts(epoch: int):
     return F.to_timestamp(F.lit(BASE_TS)) + F.make_interval(secs=F.lit(epoch))
 
 
+def _spill(spark: SparkSession, store: SnapshotStore, df: DataFrame,
+           scratch: list[str]) -> DataFrame:
+    """Write ``df`` to the scratch table and return a scan of the files, so
+    later plans start from a file read instead of ``df``'s whole plan.
+    The staged paths are added to ``scratch`` for the caller to discard."""
+    files = store.stage(df, SCRATCH)
+    scratch.extend(files)
+    return spark.read.parquet(*[os.path.join(store.root, f) for f in files])
+
+
 def run_epoch(spark: SparkSession, store: SnapshotStore, images: DataFrame,
               cfg: CrawlConfig, epoch: int) -> EpochResult:
     snap = store.snapshot()
@@ -135,7 +163,6 @@ def run_epoch(spark: SparkSession, store: SnapshotStore, images: DataFrame,
             files.extend(frontier_files[str(p)])
     res = EpochResult(epoch=epoch, p_max=p_max, remaining_by_priority=dict(remaining))
 
-    import os
     # -- COMPACT scheduling read: every stage up to admission runs on hashed
     # keys + small ints only (parquet column pruning keeps URL/host strings
     # on disk); strings are read back below for the admitted + denied rows
@@ -165,213 +192,210 @@ def run_epoch(spark: SparkSession, store: SnapshotStore, images: DataFrame,
     cand = dedup.supersede(pending)
     cand = dedup.not_seen(cand, url_seen, seen_filter, cfg)
     cand = cand.filter(F.col("attempt") < cfg.max_attempts)
-    denied_c = cand.filter(F.col("robots_denied"))
-    allowed = cand.filter(~F.col("robots_denied"))
-    gated = allowed.filter(F.col("not_before_epoch") <= epoch)
-
+    gated = cand.filter(~F.col("robots_denied")
+                        & (F.col("not_before_epoch") <= epoch))
     admitted_c = politeness.admit_late_materialized(
         gated, budgets, epoch, cfg.batch_size)
 
-    # -- string materialization: second column-pruned scan of the same
-    # frontier files (+ the small retries table), semi-joined down to the
-    # admitted + denied key set. At scale this reads string columns for a
-    # few percent of the slice instead of shuffling them through the dedup
-    # agg and both admission sorts.
-    need = (admitted_c.select("url_hash")
-            .unionByName(denied_c.select("url_hash")))
-    # the supersede order columns (small ints) ride along so the duplicate-
-    # copy dedupe below picks the SAME winner dedup.supersede picked
-    mat_cols = MATERIAL_COLS + ["attempt", "not_before_epoch",
-                                "priority", "seq"]
-    strings = None
-    if files:
-        strings = spark.read.parquet(*frontier_paths).select(*mat_cols)
-    if retries_raw is not None:
-        rs = retries_raw.select(*mat_cols)
-        strings = rs if strings is None else strings.unionByName(rs)
-    # duplicate frontier copies share url_hash but canonicalization twins
-    # differ in raw url/discovered_at — collapse deterministically with the
-    # supersede winner rule (max_by over the shared lexicographic key), so
-    # the materialized strings always match the row admission scheduled
-    strings = (strings.join(need, "url_hash", "left_semi")
-               .groupBy("url_hash")
-               .agg(F.max_by(F.struct(*MATERIAL_COLS), dedup.supersede_key())
-                    .alias("_w"))
-               .select("_w.*"))
+    scratch: list[str] = []
+    try:
+        # -- materialization point 1: the scheduling result. Admitted rows
+        # carry admission_idx and their fetch outcome, robots-denied rows
+        # NULL for both; the robots_denied column is the flag. Every later
+        # plan starts from this file scan instead of re-planning supersede,
+        # the seen gate and admission once per consumer.
+        sched = _spill(spark, store, admitted_c
+                       .withColumn("outcome", outcome_col(cfg, epoch))
+                       .unionByName(cand.filter(F.col("robots_denied")),
+                                    allowMissingColumns=True),
+                       scratch)
 
-    denied = denied_c.join(strings, "url_hash").persist()
-    admitted = admitted_c.join(strings, "url_hash").persist()
+        # -- string materialization: second column-pruned scan of the same
+        # frontier files (+ the small retries table), semi-joined down to
+        # the scheduled key set. At scale this reads string columns for a
+        # few percent of the slice instead of shuffling them through the
+        # dedup agg and both admission sorts. The supersede order columns
+        # ride along so the duplicate-copy dedupe picks the SAME winner
+        # dedup.supersede picked: canonicalization twins share url_hash but
+        # differ in raw url/discovered_at.
+        mat_cols = MATERIAL_COLS + ["attempt", "not_before_epoch",
+                                    "priority", "seq"]
+        strings = None
+        if files:
+            strings = spark.read.parquet(*frontier_paths).select(*mat_cols)
+        if retries_raw is not None:
+            rs = retries_raw.select(*mat_cols)
+            strings = rs if strings is None else strings.unionByName(rs)
+        strings = (strings.join(sched.select("url_hash"), "url_hash",
+                                "left_semi")
+                   .groupBy("url_hash")
+                   .agg(F.max_by(F.struct(*MATERIAL_COLS),
+                                 dedup.supersede_key()).alias("_w"))
+                   .select("_w.*"))
+        rows = sched.join(strings, "url_hash")
+        fetched = rows.filter(F.col("outcome") == OUTCOME_FETCHED)
+        checks = fetch_and_validate(fetched, images).select(
+            "url_hash",
+            # NULL for lossless fmts
+            F.when(F.isnan("psnr_db"), F.lit(None).cast("double"))
+            .otherwise(F.col("psnr_db")).alias("psnr_db"),
+            "caption_ok", "phash_ok", "valid")
+        transient = F.col("outcome") == OUTCOME_RETRY
+        status = (F.when(F.col("robots_denied"), F.lit("robots_denied"))
+                  .when(transient & (F.col("attempt") + 1 >= cfg.max_attempts),
+                        F.lit("failed"))
+                  .when(transient, F.lit("retry"))
+                  .when(F.col("outcome") == OUTCOME_DEFERRED,
+                        F.lit("deferred"))
+                  .when(F.col("valid"), F.lit("ok"))
+                  .otherwise(F.lit("invalid_payload")))
 
-    out = admitted.withColumn("outcome", outcome_col(cfg, epoch)).persist()
-    fetched = out.filter(F.col("outcome") == OUTCOME_FETCHED)
-    transient = out.filter(F.col("outcome") == OUTCOME_RETRY)
-    deferred = out.filter(F.col("outcome") == OUTCOME_DEFERRED)
+        # -- materialization point 2: one row per scheduled URL with its
+        # final status. crawl_log, url_seen, retries, politeness_budget,
+        # epoch_metrics and the counters are all projections of this scan.
+        erows = _spill(spark, store, rows.join(checks, "url_hash", "left")
+                       .select("url_hash", "host_hash", "url", "host",
+                               "image_id", "priority", "seq", "attempt",
+                               "src", "admission_idx", "discovered_at",
+                               status.alias("status"), "psnr_db",
+                               "caption_ok", "phash_ok"),
+                       scratch)
 
-    validated = fetch_and_validate(fetched, images).persist()
+        # ---- counters: one collect ------------------------------------------
+        by_status: dict[str, int] = {}
+        consumed: dict[int, int] = {}
+        for r in (erows.groupBy("status", "src", "priority")
+                  .agg(F.count("*").alias("n")).collect()):
+            by_status[r["status"]] = by_status.get(r["status"], 0) + r["n"]
+            # remaining decrement: frontier-sourced rows left their stratum
+            if r["src"] == "frontier":
+                p = int(r["priority"])
+                consumed[p] = consumed.get(p, 0) + r["n"]
+        res.n_ok = by_status.get("ok", 0)
+        res.n_invalid = by_status.get("invalid_payload", 0)
+        res.n_retry = by_status.get("retry", 0)
+        res.n_deferred = by_status.get("deferred", 0)
+        res.n_failed = by_status.get("failed", 0)
+        res.n_denied = by_status.get("robots_denied", 0)
+        res.n_admitted = (res.n_ok + res.n_invalid + res.n_retry
+                          + res.n_deferred + res.n_failed)
+        for p, n in consumed.items():
+            remaining[p] = max(0, remaining.get(p, 0) - n)
+        res.remaining_by_priority = remaining
 
-    # ---- crawl_log -----------------------------------------------------
-    def _log(df, status_col, admission=True, psnr=None):
-        return df.select(
+        # ---- crawl_log ------------------------------------------------------
+        crawl_log = erows.select(
             F.lit(epoch).cast("int").alias("epoch"),
-            (F.col("admission_idx").cast("long") if admission
-             else F.lit(None).cast("long")).alias("admission_idx"),
-            "url_hash", "url", "host", "image_id",
-            status_col.alias("status"),
+            F.col("admission_idx").cast("long").alias("admission_idx"),
+            "url_hash", "url", "host", "image_id", "status",
             F.col("attempt").cast("int").alias("attempt"),
-            (psnr if psnr is not None else F.lit(None).cast("double")).alias("psnr_db"),
-            (F.col("caption_ok") if psnr is not None else F.lit(None).cast("boolean")).alias("caption_ok"),
-            (F.col("phash_ok") if psnr is not None else F.lit(None).cast("boolean")).alias("phash_ok"),
-            _ts(epoch).alias("fetched_at"),
-        )
+            "psnr_db", "caption_ok", "phash_ok",
+            _ts(epoch).alias("fetched_at"))
 
-    log_ok = _log(validated,
-                  F.when(F.col("valid"), F.lit("ok")).otherwise(F.lit("invalid_payload")),
-                  psnr=F.when(F.isnan(F.col("psnr_db")), F.lit(None).cast("double"))
-                        .otherwise(F.col("psnr_db")))  # NULL for lossless fmts
-    will_fail = transient.filter(F.col("attempt") + 1 >= cfg.max_attempts)
-    will_retry = transient.filter(F.col("attempt") + 1 < cfg.max_attempts)
-    log_parts = [
-        log_ok,
-        _log(will_fail, F.lit("failed")),
-        _log(will_retry, F.lit("retry")),
-        _log(deferred, F.lit("deferred")),
-        _log(denied, F.lit("robots_denied"), admission=False),
-    ]
-    crawl_log = log_parts[0]
-    for part in log_parts[1:]:
-        crawl_log = crawl_log.unionByName(part)
-    crawl_log = crawl_log.persist()
-
-    # ---- new seen rows (terminal statuses: ok/invalid/failed/robots) -----
-    def _seen(df):
-        return df.select(
+        # ---- new seen rows (terminal statuses: ok/invalid/failed/robots) ----
+        new_seen = erows.filter(F.col("status").isin(*TERMINAL)).select(
             "url_hash", "host_hash",
             F.lit(epoch).cast("int").alias("first_seen_epoch"),
             F.col("priority").cast("int").alias("first_seen_priority"))
 
-    new_seen = (_seen(validated)
-                .unionByName(_seen(will_fail))
-                .unionByName(_seen(denied)))
+        # ---- retry / deferral re-enqueue ------------------------------------
+        is_retry = F.col("status") == "retry"
+        backoff_expr = F.least(
+            F.lit(cfg.backoff_max_epochs),
+            F.greatest(F.lit(cfg.backoff_min_epochs),
+                       F.expr("shiftleft(1, attempt)")))  # 1 << (new_attempt-1)
+        requeued = erows.filter(F.col("status").isin("retry", "deferred"))
+        new_retries = requeued.select(
+            "url", "url_hash", "host", "host_hash", "priority", "seq",
+            "image_id",
+            F.when(is_retry, F.col("attempt") + 1).otherwise(F.col("attempt"))
+            .cast("int").alias("attempt"),
+            F.when(is_retry, F.lit(epoch) + backoff_expr)
+            .otherwise(F.lit(epoch + cfg.secondary_backoff_epochs))
+            .cast("int").alias("not_before_epoch"),
+            "discovered_at")
 
-    # ---- retry / deferral re-enqueue ------------------------------------
-    backoff_expr = F.least(
-        F.lit(cfg.backoff_max_epochs),
-        F.greatest(F.lit(cfg.backoff_min_epochs),
-                   F.expr("shiftleft(1, attempt)")))  # 1 << (new_attempt-1)
-    re_retry = will_retry.select(
-        "url", "url_hash", "host", "host_hash", "priority", "seq", "image_id",
-        (F.col("attempt") + 1).cast("int").alias("attempt"),
-        (F.lit(epoch) + backoff_expr).cast("int").alias("not_before_epoch"),
-        "discovered_at")
-    re_defer = deferred.select(
-        "url", "url_hash", "host", "host_hash", "priority", "seq", "image_id",
-        F.col("attempt").cast("int").alias("attempt"),
-        F.lit(epoch + cfg.secondary_backoff_epochs).cast("int").alias("not_before_epoch"),
-        "discovered_at")
-    new_retries = re_retry.unionByName(re_defer)
+        # retries COMPACTION: the table is REPLACED each epoch with the live set
+        # (new re-enqueues + prior rows not superseded / not terminal / not
+        # admitted) instead of appended to — otherwise retry state grows without
+        # bound across a long crawl. The kept-row rule is the oracle's exactly
+        # (oracle/simulator.py run_epoch tail): re-enqueued, newly seen and
+        # admitted rows are all epoch rows, so one anti-join against the epoch
+        # rows drops the three of them.
+        retries_next = new_retries
+        if retries_raw is not None:
+            kept = retries_raw.join(erows.select("url_hash"), "url_hash",
+                                    "left_anti")
+            if url_seen is not None:
+                kept = kept.join(url_seen.select("url_hash"), "url_hash",
+                                 "left_anti")
+            retries_next = new_retries.unionByName(kept.select(*FRONTIER_COLS))
 
-    # retries COMPACTION: the table is REPLACED each epoch with the live set
-    # (new re-enqueues + prior rows not superseded / not terminal / not
-    # admitted) instead of appended to — otherwise retry state grows without
-    # bound across a long crawl. The kept-row rule is the oracle's exactly
-    # (oracle/simulator.py run_epoch tail); the table stays O(active backoff
-    # rows), so the per-epoch rewrite is a small bounded job (same pattern as
-    # the politeness_budget replace).
-    retries_next = new_retries
-    if retries_raw is not None:
-        seen_hashes = new_seen.select("url_hash")
-        if url_seen is not None:
-            seen_hashes = seen_hashes.unionByName(url_seen.select("url_hash"))
-        kept = (retries_raw
-                .join(new_retries.select("url_hash"), "url_hash", "left_anti")
-                .join(seen_hashes, "url_hash", "left_anti")
-                .join(admitted.select("url_hash"), "url_hash", "left_anti")
-                .select(*FRONTIER_COLS))
-        retries_next = new_retries.select(*FRONTIER_COLS).unionByName(kept)
+        # ---- budgets --------------------------------------------------------
+        budgets_next = politeness.next_budgets(
+            budgets, erows.filter(F.col("admission_idx").isNotNull()),
+            erows.filter(F.col("status") == "deferred").select("host"),
+            epoch, cfg.secondary_backoff_epochs)
 
-    # ---- budgets ---------------------------------------------------------
-    budgets_next = politeness.next_budgets(
-        budgets, admitted, deferred.select("host"), epoch,
-        cfg.secondary_backoff_epochs)
+        # ---- metrics per host bucket (T12) ----------------------------------
+        metrics = (erows
+                   .withColumn("host_bucket",
+                               F.pmod(F.xxhash64("host"), F.lit(cfg.n_filter_buckets)).cast("int"))
+                   .groupBy("host_bucket")
+                   .agg(F.count("*").alias("n_popped"),
+                        F.sum(F.when(F.col("status").isin("ok", "invalid_payload"), 1)
+                              .otherwise(0)).alias("n_fetched"),
+                        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_valid"))
+                   .withColumn("epoch", F.lit(epoch).cast("int")))
 
-    # ---- counters --------------------------------------------------------
-    status_counts = {r["status"]: r["n"] for r in
-                     crawl_log.groupBy("status").agg(F.count("*").alias("n")).collect()}
-    res.n_ok = status_counts.get("ok", 0)
-    res.n_invalid = status_counts.get("invalid_payload", 0)
-    res.n_retry = status_counts.get("retry", 0)
-    res.n_deferred = status_counts.get("deferred", 0)
-    res.n_failed = status_counts.get("failed", 0)
-    res.n_denied = status_counts.get("robots_denied", 0)
-    res.n_admitted = res.n_ok + res.n_invalid + res.n_retry + res.n_deferred + res.n_failed
+        # ---- stage + single atomic commit -----------------------------------
+        appends = {}
+        # crawl_log is append-per-epoch, so each file's [min,max] epoch bound is
+        # a single point — manifest stats make any epoch-windowed read of the
+        # log O(window files), not O(history) (tables.files where=)
+        appends["crawl_log"] = store.stage(crawl_log, "crawl_log",
+                                           stats_cols=("epoch",))
+        appends["url_seen"] = store.stage(new_seen, "url_seen")
+        appends["epoch_metrics"] = store.stage(metrics, "epoch_metrics")
+        if cfg.use_bloom:
+            # all_seen (prior url_seen + this epoch's rows) feeds the saturation
+            # rebuild path only — touched iff a bucket's FPP crossed the threshold
+            all_seen = new_seen.select("url_hash", "host_hash")
+            if url_seen is not None:
+                all_seen = (url_seen.select("url_hash", "host_hash")
+                            .unionByName(all_seen))
+            if cfg.seen_filter_backend == "cuckoo":
+                flt_new = cuckoo_ops.updated_buckets(
+                    new_seen, seen_filter, cfg.n_filter_buckets,
+                    cfg.cuckoo_slots_per_row, epoch, min_rows=cfg.cuckoo_min_rows,
+                    all_seen=all_seen, load_rebuild=cfg.cuckoo_load_rebuild)
+            else:
+                flt_new = bloom_ops.updated_buckets(
+                    new_seen, seen_filter, cfg.n_filter_buckets, cfg.bloom_num_hashes,
+                    cfg.bloom_bits_per_item, epoch, min_bits=cfg.bloom_min_bits,
+                    all_seen=all_seen, fpp_rebuild=cfg.bloom_fpp_rebuild)
+            fltf = store.stage(flt_new, "seen_filter")
+            if fltf:
+                appends["seen_filter"] = fltf
 
-    # remaining decrement: frontier-sourced rows that left their stratum
-    consumed = (out.filter(F.col("src") == "frontier").groupBy("priority")
-                .agg(F.count("*").alias("n"))
-                .unionByName(denied.filter(F.col("src") == "frontier")
-                             .groupBy("priority").agg(F.count("*").alias("n")))
-                .groupBy("priority").agg(F.sum("n").alias("n")).collect())
-    for r in consumed:
-        p = int(r["priority"])
-        remaining[p] = max(0, remaining.get(p, 0) - int(r["n"]))
-    res.remaining_by_priority = remaining
-
-    # ---- per-partition lineage + metrics (T12) ---------------------------
-    metrics = (crawl_log
-               .withColumn("host_bucket",
-                           F.pmod(F.xxhash64("host"), F.lit(cfg.n_filter_buckets)).cast("int"))
-               .withColumn("partition_id", F.spark_partition_id())
-               .groupBy("partition_id", "host_bucket")
-               .agg(F.count("*").alias("n_popped"),
-                    F.sum(F.when(F.col("status").isin("ok", "invalid_payload"), 1)
-                          .otherwise(0)).alias("n_fetched"),
-                    F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_valid"))
-               .withColumn("epoch", F.lit(epoch).cast("int")))
-
-    # ---- stage + single atomic commit -------------------------------------
-    appends = {}
-    # crawl_log is append-per-epoch, so each file's [min,max] epoch bound is
-    # a single point — manifest stats make any epoch-windowed read of the
-    # log O(window files), not O(history) (tables.files where=)
-    appends["crawl_log"] = store.stage(crawl_log, "crawl_log",
-                                       stats_cols=("epoch",))
-    appends["url_seen"] = store.stage(new_seen, "url_seen")
-    appends["epoch_metrics"] = store.stage(metrics, "epoch_metrics")
-    if cfg.use_bloom:
-        # all_seen (prior url_seen + this epoch's rows) feeds the saturation
-        # rebuild path only — touched iff a bucket's FPP crossed the threshold
-        all_seen = new_seen.select("url_hash", "host_hash")
-        if url_seen is not None:
-            all_seen = (url_seen.select("url_hash", "host_hash")
-                        .unionByName(all_seen))
-        if cfg.seen_filter_backend == "cuckoo":
-            flt_new = cuckoo_ops.updated_buckets(
-                new_seen, seen_filter, cfg.n_filter_buckets,
-                cfg.cuckoo_slots_per_row, epoch, min_rows=cfg.cuckoo_min_rows,
-                all_seen=all_seen, load_rebuild=cfg.cuckoo_load_rebuild)
-        else:
-            flt_new = bloom_ops.updated_buckets(
-                new_seen, seen_filter, cfg.n_filter_buckets, cfg.bloom_num_hashes,
-                cfg.bloom_bits_per_item, epoch, min_bits=cfg.bloom_min_bits,
-                all_seen=all_seen, fpp_rebuild=cfg.bloom_fpp_rebuild)
-        fltf = store.stage(flt_new, "seen_filter")
-        if fltf:
-            appends["seen_filter"] = fltf
-
-    job_row = pd.DataFrame([{
-        "job_id": epoch, "epoch": epoch, "status": "completed",
-        "records_processed": res.n_admitted + res.n_denied,
-        "records_created": res.n_ok,
-        "records_updated": res.n_invalid + res.n_failed,
-        "input_files": ",".join(files),
-        "error_message": None,
-    }])
-    appends["crawl_jobs"] = store.stage_pandas(job_row, "crawl_jobs",
-                                               schema=_job_schema())
-    replaces = {
-        "politeness_budget": store.stage(budgets_next, "politeness_budget"),
-        "retries": store.stage(retries_next, "retries"),
-    }
+        job_row = pd.DataFrame([{
+            "job_id": epoch, "epoch": epoch, "status": "completed",
+            "records_processed": res.n_admitted + res.n_denied,
+            "records_created": res.n_ok,
+            "records_updated": res.n_invalid + res.n_failed,
+            "input_files": ",".join(files),
+            "error_message": None,
+        }])
+        appends["crawl_jobs"] = store.stage_pandas(job_row, "crawl_jobs",
+                                                   schema=_job_schema())
+        replaces = {
+            "politeness_budget": store.stage(budgets_next, "politeness_budget"),
+            "retries": store.stage(retries_next, "retries"),
+        }
+    finally:
+        # the spills are read by the stages above and by nothing after
+        # them; vacuum reclaims what a killed process leaves behind
+        store.discard(scratch)
 
     # carry prior meta keys (fallback_added, discovery bookkeeping, ...)
     # forward — an epoch commit must never drop another component's state
@@ -386,6 +410,4 @@ def run_epoch(spark: SparkSession, store: SnapshotStore, images: DataFrame,
                      "failed": res.n_failed, "denied": res.n_denied},
     })
 
-    for df in (denied, admitted, out, validated, crawl_log):
-        df.unpersist()
     return res

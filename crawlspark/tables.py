@@ -198,6 +198,16 @@ class SnapshotStore:
         os.rmdir(tmp)
         return out
 
+    def discard(self, rels: list[str]) -> None:
+        """Delete staged files that will never be committed (per-epoch
+        scratch spills) and forget their pending stats. Missing files are
+        skipped; :meth:`vacuum` reclaims whatever a crash left behind."""
+        for rel in rels:
+            path = os.path.join(self.root, rel)
+            if os.path.exists(path):
+                os.remove(path)
+            self._pending_stats.pop(rel, None)
+
     def stage_pandas(self, pdf, name: str, schema=None) -> list[str]:
         """Stage a pandas DataFrame directly via pyarrow (driver-side small
         tables: budgets, seen_filter buckets, crawl_jobs rows)."""
