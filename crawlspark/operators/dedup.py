@@ -9,8 +9,8 @@
                        the partitioned bloom probe (negative cache; positives
                        are always re-checked exactly, so bloom FPs never drop
                        or spuriously admit a URL).
-* ``robots_split``   — per-host disallow-prefix filter with the robots table
-                       broadcast (north_rule); returns (allowed, denied).
+* ``robots_flag``    — per-host disallow-prefix flag with the robots table
+                       broadcast (north_rule), evaluated at enqueue time.
 """
 
 from __future__ import annotations
@@ -107,18 +107,3 @@ def robots_flag(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
         F.lit(False))
     return (joined.withColumn("robots_denied", denied_cond)
             .drop("disallow_prefixes"))
-
-
-def robots_split(candidates: DataFrame, robots: DataFrame | None
-                 ) -> tuple[DataFrame, DataFrame]:
-    """(allowed, denied) — the pop-time form of :func:`robots_flag`, kept
-    for callers that work on full rows."""
-    flagged = robots_flag(candidates, robots)
-    allowed = flagged.filter(~F.col("robots_denied")).drop("robots_denied")
-    denied = flagged.filter(F.col("robots_denied")).drop("robots_denied")
-    return allowed, denied
-
-
-def exact_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Plain exact dedup (hash groupBy) — training-data pipeline primitive."""
-    return df.dropDuplicates(keys)

@@ -78,31 +78,34 @@ def forget_urls(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
         # recorded schema fingerprint, a plain read takes the FIRST footer's
         # schema and the rewrite would silently drop newer columns from the
         # rewritten buckets — union schemas exactly when evolution happened
+        evolved = store.needs_merge("url_seen")
         reader = (spark.read.option("mergeSchema", "true")
-                  if store.needs_merge("url_seen") else spark.read)
+                  if evolved else spark.read)
         bucket_of = F.pmod(F.xxhash64(F.col(key_col)),
                            F.lit(n_b)).cast("int")
-        touched = sorted({int(r["_b"]) for r in
+        touched = sorted({str(r["_b"]) for r in
                           hit.select(bucket_of.alias("_b"))
-                          .distinct().collect()})
+                          .distinct().collect()} & set(bucket_map))
+        # one write over the touched buckets' files plus the loose appends;
+        # loose rows keep their own label (-1, never a pmod bucket), so they
+        # stay loose
+        tfiles = [f for b in touched for f in bucket_map[b]]
+        slice_df = None
+        for fs, label in ((tfiles, bucket_of), (loose, F.lit(-1))):
+            if fs:
+                part = (reader.parquet(*[os.path.join(store.root, f)
+                                         for f in fs])
+                        .withColumn("_bucket", label))
+                slice_df = (part if slice_df is None else slice_df
+                            .unionByName(part, allowMissingColumns=evolved))
+        staged = store.stage_groups(
+            slice_df.join(keys, "url_hash", "left_anti"), "url_seen",
+            "_bucket")
+        new_loose = staged.pop("-1", [])
         new_map = {k: list(v) for k, v in bucket_map.items()}
         for b in touched:
-            bfiles = bucket_map.get(str(b), [])
-            if not bfiles:
-                continue
-            bdf = reader.parquet(
-                *[os.path.join(store.root, f) for f in bfiles])
-            new_map[str(b)] = store.stage(
-                bdf.join(keys, "url_hash", "left_anti"), "url_seen")
-        new_loose: list[str] = []
-        if loose:
-            ldf = reader.parquet(
-                *[os.path.join(store.root, f) for f in loose])
-            new_loose = store.stage(
-                ldf.join(keys, "url_hash", "left_anti"), "url_seen")
-        ordered = [f for b in sorted(new_map, key=int)
-                   for f in new_map[b]] + new_loose
-        replaces = {"url_seen": ordered}
+            new_map[b] = staged.get(b, [])
+        replaces = {"url_seen": tbl.ordered_files(new_map) + new_loose}
         meta_updates["merge_buckets"] = {
             **snap.meta.get("merge_buckets", {}), "url_seen": new_map}
     else:
@@ -211,6 +214,12 @@ def recrawl_pass(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
     targets = stale_targets(spark, store, cfg, epoch)
     if targets is None:
         return 0
+    # at most recrawl_topk rows: collect once, so the remaining bump and the
+    # forget scan a local frame, not the windowed crawl_log aggregate + top-k
+    rows = targets.collect()
+    if not rows:
+        return 0
+    targets = spark.createDataFrame(rows, targets.schema)
     frontier = store.read(spark, "frontier")
     meta_extra = None
     if frontier is not None:

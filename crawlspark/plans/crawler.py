@@ -21,13 +21,12 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..operators.dedup import robots_flag
 from ..operators.recrawl import recrawl_pass
-from ..tables import SnapshotStore
+from ..tables import SnapshotStore, ordered_files
 from .epoch import EpochResult, record_failed_epoch, run_epoch
 
 
 def init_run(spark: SparkSession, store: SnapshotStore, frontier: DataFrame,
-             robots: DataFrame, budgets: DataFrame,
-             files_per_stratum: int = 1) -> None:
+             robots: DataFrame, budgets: DataFrame) -> None:
     """Commit snapshot 0: frontier split by priority (file-level partition
     pruning), broadcast dims, exact per-stratum remaining counts. The
     ``robots_denied`` flag is precomputed here (enqueue-time evaluation of
@@ -36,16 +35,9 @@ def init_run(spark: SparkSession, store: SnapshotStore, frontier: DataFrame,
     frontier = robots_flag(frontier, robots)
     counts = {int(r["priority"]): int(r["n"]) for r in
               frontier.groupBy("priority").agg(F.count("*").alias("n")).collect()}
-    appends: dict[str, list[str]] = {"frontier": []}
     files_by_priority: dict[str, list[str]] = {}
-    for p in sorted(counts):
-        part = (frontier.filter(F.col("priority") == p)
-                .repartition(files_per_stratum)
-                .sortWithinPartitions("host", "seq"))
-        fs = store.stage(part, "frontier")
-        files_by_priority[str(p)] = fs
-        appends["frontier"].extend(fs)
-    appends["robots"] = store.stage(robots, "robots")
+    appends = {"frontier": stage_strata(store, frontier, files_by_priority),
+               "robots": store.stage(robots, "robots")}
     replaces = {"politeness_budget": store.stage(budgets, "politeness_budget")}
     # Carry pre-init snapshot meta forward (the reference's setup order runs
     # migrations BEFORE init — migrations_applied must survive init), but
@@ -65,7 +57,7 @@ def init_run(spark: SparkSession, store: SnapshotStore, frontier: DataFrame,
 
 
 def broaden_frontier(spark: SparkSession, store: SnapshotStore,
-                     fallback: DataFrame, files_per_stratum: int = 1) -> None:
+                     fallback: DataFrame) -> None:
     """T9: append broader, lower-priority strata to a drained frontier — the
     analog of the reference extending its search-query list with 8 broad
     fallback queries when all strata exhaust below target
@@ -78,25 +70,30 @@ def broaden_frontier(spark: SparkSession, store: SnapshotStore,
               fallback.groupBy("priority").agg(F.count("*").alias("n")).collect()}
     remaining = {int(k): int(v) for k, v in
                  snap.meta.get("remaining_by_priority", {}).items()}
+    for p, n in counts.items():
+        remaining[p] = remaining.get(p, 0) + n
     files_by_p = {k: list(v) for k, v in
                   snap.meta.get("frontier_files_by_priority", {}).items()}
-    appends: dict[str, list[str]] = {"frontier": []}
-    for p in sorted(counts):
-        part = (fallback.filter(F.col("priority") == p)
-                .repartition(files_per_stratum)
-                .sortWithinPartitions("host", "seq"))
-        fs = store.stage(part, "frontier")
-        files_by_p.setdefault(str(p), [])
-        files_by_p[str(p)] = files_by_p[str(p)] + fs
-        appends["frontier"].extend(fs)
-        remaining[p] = remaining.get(p, 0) + counts[p]
     store.commit(
         epoch=int(snap.meta.get("last_epoch", -1)),
-        appends=appends,
+        appends={"frontier": stage_strata(store, fallback, files_by_p)},
         meta={**snap.meta,
               "remaining_by_priority": {str(k): v for k, v in remaining.items()},
               "frontier_files_by_priority": files_by_p,
               "fallback_added": True})
+
+
+def stage_strata(store: SnapshotStore, rows: DataFrame,
+                 pins: dict[str, list[str]]) -> list[str]:
+    """Stage frontier rows one file per priority stratum, clustered by
+    (host, seq), in one write. Appends each stratum's new files to ``pins``
+    (a ``frontier_files_by_priority`` map) and returns them all."""
+    staged = store.stage_groups(
+        rows.withColumn("_stratum", F.col("priority")), "frontier",
+        "_stratum", sort_cols=("host", "seq"))
+    for p, fs in staged.items():
+        pins[p] = pins.get(p, []) + fs
+    return ordered_files(staged)
 
 
 def compact_frontier_strata(spark: SparkSession, store: SnapshotStore,
@@ -108,7 +105,7 @@ def compact_frontier_strata(spark: SparkSession, store: SnapshotStore,
     stream would put O(batches) files behind every epoch's pop scan, and
     generic compaction rightly refuses meta-pinned tables (the rewritten
     paths would dangle). Here each oversized stratum is rewritten into
-    ``target_files`` files re-clustered by (host, seq) — the same layout
+    one file re-clustered by (host, seq) — the same layout
     init_run/broaden_frontier stage — and the table file list AND the pin
     map are swapped in ONE commit, so no snapshot ever sees them disagree.
     Strata at or under the target keep their exact files (incremental, like
@@ -116,33 +113,33 @@ def compact_frontier_strata(spark: SparkSession, store: SnapshotStore,
     snap = store.snapshot()
     files_by_p = {k: list(v) for k, v in
                   snap.meta.get("frontier_files_by_priority", {}).items()}
-    if not files_by_p:
+    oversized = [p for p in sorted(files_by_p, key=int)
+                 if len(files_by_p[p]) > target_files]
+    if not oversized:
         return 0
     import os
     evolved = store.needs_merge("frontier")
     reader = (spark.read.option("mergeSchema", "true") if evolved
               else spark.read)
-    absorbed = 0
-    new_map: dict[str, list[str]] = {}
-    for p in sorted(files_by_p, key=int):
-        fs = files_by_p[p]
-        if len(fs) <= target_files:
-            new_map[p] = fs
-            continue
-        df = (reader.parquet(*[os.path.join(store.root, f) for f in fs])
-              .repartition(target_files)
-              .sortWithinPartitions("host", "seq"))
-        new_map[p] = store.stage(df, "frontier")
-        absorbed += len(fs)
-    if not absorbed:
-        return 0
+    # label each stratum from its pin key, not a row column: the pin map,
+    # not the rows, defines which stratum a file belongs to
+    slice_df = None
+    for p in oversized:
+        part = (reader.parquet(*[os.path.join(store.root, f)
+                                 for f in files_by_p[p]])
+                .withColumn("_stratum", F.lit(int(p))))
+        slice_df = (part if slice_df is None else slice_df
+                    .unionByName(part, allowMissingColumns=evolved))
+    staged = store.stage_groups(slice_df, "frontier", "_stratum",
+                                sort_cols=("host", "seq"))
+    new_map = {**files_by_p, **{p: staged.get(p, []) for p in oversized}}
+    absorbed = sum(len(files_by_p[p]) for p in oversized)
     pinned_before = {f for fs in files_by_p.values() for f in fs}
     # preserve any frontier files outside the pin map (there are none in the
     # current writers, but a foreign append must survive maintenance)
     unpinned = [f for f in snap.tables.get("frontier", [])
                 if f not in pinned_before]
-    ordered = [f for p in sorted(new_map, key=int)
-               for f in new_map[p]] + unpinned
+    ordered = ordered_files(new_map) + unpinned
     # Optimistic concurrency (r6, ADVICE item 1): this commit REPLACES the
     # frontier file list and meta wholesale from the planning snapshot. If
     # anything committed in between (notably a concurrent streaming

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import dedup
+from ..plans.crawler import stage_strata
 from ..tables import SnapshotStore
 
 DISCOVERY_SCHEMA = T.StructType([
@@ -146,19 +147,15 @@ def fold_batch(spark: SparkSession, store: SnapshotStore,
     remaining = {int(k): int(v) for k, v in
                  snap.meta.get("remaining_by_priority", {}).items()}
     files_by_p = dict(snap.meta.get("frontier_files_by_priority", {}))
-    appends: dict = {"frontier": []}
-    for p in sorted(counts):
-        fs = store.stage(batch.filter(F.col("priority") == p), "frontier")
-        files_by_p.setdefault(str(p), [])
-        files_by_p[str(p)] = files_by_p[str(p)] + fs
-        appends["frontier"].extend(fs)
-        remaining[p] = remaining.get(p, 0) + counts[p]
+    staged = stage_strata(store, batch, files_by_p)
+    for p, n in counts.items():
+        remaining[p] = remaining.get(p, 0) + n
     cursors = dict(snap.meta.get("discovery_cursors", {}))
     if cursor_tag is not None:
         cursors[cursor_tag] = int(batch_id)
     store.commit(
         epoch=int(snap.meta.get("last_epoch", -1)),
-        appends=appends,
+        appends={"frontier": staged},
         meta={**snap.meta,
               "remaining_by_priority":
                   {str(k): v for k, v in remaining.items()},

@@ -15,8 +15,10 @@ same guarantees the design relies on:
   /root/reference/src/application/use_cases.py:68-74,103-117).
 
 On a real cluster this class is swapped for Iceberg ``MERGE INTO`` / snapshot
-reads; the engine only uses the four methods below, so the swap is config-only
-(SURVEY.md §7 M0).
+reads; the engine only uses ``stage``/``stage_groups``/``stage_pandas`` +
+``commit`` (write, then publish atomically), ``snapshot``/``read``/``files``/
+``needs_merge`` and ``compact``/``compact_bucketed``/``vacuum``/``discard``
+(maintenance), so the swap is config-only (SURVEY.md §7 M0).
 
 Commit manifest ``_log/commit-%012d.json``::
 
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
@@ -66,14 +69,14 @@ class CommitConflictError(RuntimeError):
     (optimistic-concurrency failure — see SnapshotStore.commit)."""
 
 
-def _schema_sig(schema) -> str:
-    """Short stable fingerprint of a Spark schema (names + types, ordered).
+def _schema_sig(fields) -> str:
+    """Short stable fingerprint of schema fields (names + types, ordered).
     Two files with the same fingerprint are read-compatible without schema
     merging; distinct fingerprints among a table's live files mean the
     table evolved and the reader must union schemas."""
     import hashlib
     blob = ";".join(f"{f.name}:{f.dataType.simpleString()}"
-                    for f in schema.fields)
+                    for f in fields)
     return hashlib.md5(blob.encode()).hexdigest()[:12]
 
 
@@ -170,32 +173,53 @@ class SnapshotStore:
         match — the Iceberg manifest-stats scan-planning step, which is what
         keeps an epoch-windowed crawl_log query O(window) instead of
         O(history) at 10^5 epochs."""
+        return self._write(df, name, stats_cols).get(None, [])
+
+    def stage_groups(self, df: "DataFrame", name: str, by: str,
+                     stats_cols: tuple | list | None = None,
+                     sort_cols: tuple | list = ()) -> dict[str, list[str]]:
+        """Stage ``df`` split by the integer label column ``by`` in ONE
+        write job (Iceberg's partitioned write behind ``DELETE WHERE`` /
+        ``rewrite_data_files``). Returns ``{str(label): paths}``; a label
+        with no rows is absent. One task, so one file, per label, clustered
+        by ``sort_cols``. The label is neither written nor fingerprinted, so
+        the files read exactly like :meth:`stage`'d ones."""
+        df = df.repartition(by).sortWithinPartitions(by, *sort_cols)
+        return self._write(df, name, stats_cols, by=by)
+
+    def _write(self, df: "DataFrame", name: str,
+               stats_cols: tuple | list | None,
+               by: str | None = None) -> dict:
+        """Write, rename, fingerprint and stats for :meth:`stage` (files
+        under key None) and :meth:`stage_groups` (files under their label)."""
         tdir = os.path.join(self.root, name)
         os.makedirs(tdir, exist_ok=True)
         tmp = os.path.join(tdir, f".stage-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(tmp)
+        writer = df.write.mode("overwrite")
+        (writer if by is None else writer.partitionBy(by)).parquet(tmp)
         # schema fingerprint per staged file (driver-side, no extra I/O):
         # lets the read path detect schema evolution across a table's live
         # files and union schemas only then (Iceberg tracks schema in table
         # metadata for the same reason — plain parquet read takes the FIRST
         # file's schema and silently drops columns added later)
-        sig = _schema_sig(df.schema)
-        out = []
-        for f in sorted(os.listdir(tmp)):
-            if f.endswith(".parquet"):
-                dst = f"{uuid.uuid4().hex}-{f}"
-                os.rename(os.path.join(tmp, f), os.path.join(tdir, dst))
-                rel = f"{name}/{dst}"
-                out.append(rel)
-                entry = self._pending_stats.setdefault(rel, {})
-                entry["__schema__"] = sig
-                if stats_cols:
-                    entry.update(
-                        _file_stats(os.path.join(tdir, dst), stats_cols))
-        # best-effort cleanup of _SUCCESS etc.
-        for f in os.listdir(tmp):
-            os.remove(os.path.join(tmp, f))
-        os.rmdir(tmp)
+        sig = _schema_sig(f for f in df.schema.fields if f.name != by)
+        out: dict = {}
+        # files sit in tmp itself, or in tmp/<by>=<label>/ when grouped
+        for src, _, names in sorted(os.walk(tmp)):
+            label = os.path.basename(src).partition("=")[2] or None
+            for f in sorted(names):
+                if f.endswith(".parquet"):
+                    dst = f"{uuid.uuid4().hex}-{f}"
+                    os.rename(os.path.join(src, f), os.path.join(tdir, dst))
+                    rel = f"{name}/{dst}"
+                    out.setdefault(label, []).append(rel)
+                    entry = self._pending_stats.setdefault(rel, {})
+                    entry["__schema__"] = sig
+                    if stats_cols:
+                        entry.update(
+                            _file_stats(os.path.join(tdir, dst), stats_cols))
+        # _SUCCESS and the emptied label dirs
+        shutil.rmtree(tmp)
         return out
 
     def discard(self, rels: list[str]) -> None:
@@ -404,22 +428,17 @@ class SnapshotStore:
                         if tfiles else loose_df)
             old_map = {k: list(v) for k, v in bucket_map.items()}
             absorbed = loose
-        slice_df = slice_df.persist()
-        present = sorted(int(r["_b"]) for r in
-                         slice_df.select(bucket_of.alias("_b")).distinct()
-                         .collect())
         tracked = sorted({c for r in rels
                           for c in snap.stats.get(r, {})
                           if not c.startswith("__")}) or None
-        new_map = dict(old_map)
-        for b in present:
-            new_map[str(b)] = self.stage(
-                slice_df.filter(bucket_of == b), name, stats_cols=tracked)
-        slice_df.unpersist()
-        files = [f for b in sorted(new_map, key=int) for f in new_map[b]]
+        # every bucket in the slice received loose rows (or this is the
+        # first bucketing), so each one the write returns replaces its set
+        new_map = {**old_map, **self.stage_groups(
+            slice_df.withColumn("_bucket", bucket_of), name, "_bucket",
+            stats_cols=tracked)}
         all_buckets: dict = snap.meta.get("merge_buckets", {})
         specs: dict = snap.meta.get("bucket_spec", {})
-        self.commit(epoch=snap.epoch, replaces={name: files},
+        self.commit(epoch=snap.epoch, replaces={name: ordered_files(new_map)},
                     meta={**snap.meta,
                           "merge_buckets": {**all_buckets, name: new_map},
                           "bucket_spec": {**specs,
@@ -456,7 +475,6 @@ class SnapshotStore:
                     # a crash during stage() before the rename loop leaves
                     # the whole temp dir behind; its files are by definition
                     # unreferenced (paths are only recorded after rename)
-                    import shutil
                     shutil.rmtree(path)
                     deleted.append(rel)
                 elif rel not in live and f.endswith(".parquet"):
@@ -565,6 +583,13 @@ def bucket_state(snap: Snapshot, name: str) -> tuple[dict | None, list[str]]:
     return m, [f for f in files if f not in mapped]
 
 
+def ordered_files(files_by_label: dict) -> list[str]:
+    """A table's file list from its ``{label: files}`` map (bucket or
+    stratum pins), in label order."""
+    return [f for k in sorted(files_by_label, key=int)
+            for f in files_by_label[k]]
+
+
 def dedup_updates(updates: "DataFrame", key: str,
                   newer_col: str | None = None) -> "DataFrame":
     """One winner per key within an updates batch (newest when ordered,
@@ -619,28 +644,28 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
     updates = dedup_updates(updates, key, newer_col)
     snap = store.snapshot()
 
-    def drop_stale(updates, target):
-        """Drop updates NOT newer than their matched target row. The target
-        version is max(newer_col) per key — one row per key reaches the
-        join (partial-agg map-side), so the check stays well-defined even
-        if a transient duplicate key exists (contract: appends never
-        duplicate a merged table's keys; merges are the mutation path)."""
-        t_keyed = (target.groupBy(key)
-                   .agg(F.max(newer_col).alias("_t_newer")))
-        return (updates.join(t_keyed, key, "left")
-                .filter(F.col("_t_newer").isNull()
-                        | (F.col(newer_col) > F.col("_t_newer")))
-                .drop("_t_newer"))
+    def upsert(updates, target):
+        """(updates that win) UNION (target rows not superseded). With
+        ``newer_col``, updates NOT newer than their matched target row are
+        dropped first. The target version is max(newer_col) per key — one
+        row per key reaches the join (partial-agg map-side), so the check
+        stays well-defined even if a transient duplicate key exists
+        (contract: appends never duplicate a merged table's keys; merges are
+        the mutation path)."""
+        if target is None:
+            return updates
+        if newer_col is not None:
+            t_keyed = (target.groupBy(key)
+                       .agg(F.max(newer_col).alias("_t_newer")))
+            updates = (updates.join(t_keyed, key, "left")
+                       .filter(F.col("_t_newer").isNull()
+                               | (F.col(newer_col) > F.col("_t_newer")))
+                       .drop("_t_newer"))
+        return (target.join(updates.select(key), key, "left_anti")
+                .unionByName(updates))
 
     if n_buckets is None:
-        target = store.read(spark, name)
-        if target is not None and newer_col is not None:
-            updates = drop_stale(updates, target)
-        if target is None:
-            merged = updates
-        else:
-            kept = target.join(updates.select(key), key, "left_anti")
-            merged = kept.unionByName(updates)
+        merged = upsert(updates, store.read(spark, name))
         store.commit(epoch=int(snap.meta.get("last_epoch", -1)),
                      replaces={name: store.stage(merged, name)},
                      meta=snap.meta)
@@ -653,64 +678,39 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
     if bucket_files is None:
         # first bucketed merge: one-time full bucketing rewrite (merge via
         # the plain path semantics, then split the result by bucket)
-        target = store.read(spark, name)
-        if target is not None and newer_col is not None:
-            updates = drop_stale(updates, target)
-        merged = updates if target is None else (
-            target.join(updates.select(key), key, "left_anti")
-            .unionByName(updates))
-        merged = merged.persist()
-        present = sorted(int(r["_b"]) for r in
-                         merged.select(bucket_of.alias("_b")).distinct()
-                         .collect())
-        new_map: dict = {}
-        files: list[str] = []
-        for b in present:
-            fs = store.stage(merged.filter(bucket_of == b), name)
-            new_map[str(b)] = fs
-            files.extend(fs)
-        merged.unpersist()
+        merged = upsert(updates, store.read(spark, name))
+        new_map = store.stage_groups(
+            merged.withColumn("_bucket", bucket_of), name, "_bucket")
     else:
         # scoped path: updates touch a known set of buckets; read, merge and
         # rewrite only those — plus any loose files appended since the last
         # bucketing (they can hold ANY bucket's keys, so the matched-row
         # check must see them and their rows get re-homed into buckets here)
         updates = updates.persist()
-        touched = sorted(int(r["_b"]) for r in
-                         updates.select(bucket_of.alias("_b")).distinct()
-                         .collect())
+        touched = {str(r["_b"]) for r in
+                   updates.select(bucket_of.alias("_b")).distinct()
+                   .collect()}
         tfiles = [os.path.join(store.root, f)
-                  for b in touched for f in bucket_files.get(str(b), [])]
+                  for b in sorted(touched) for f in bucket_files.get(b, [])]
         tfiles += [os.path.join(store.root, f) for f in loose]
-        target_t = spark.read.parquet(*tfiles) if tfiles else None
-        if target_t is not None and newer_col is not None:
-            updates = drop_stale(updates, target_t)
-        merged = updates if target_t is None else (
-            target_t.join(updates.select(key), key, "left_anti")
-            .unionByName(updates))
-        merged = merged.persist()
-        # rewrite: the updates' buckets, plus buckets whose rows were
-        # sitting in loose files (they must land somewhere bucketed).
-        # Touched buckets REPLACE their file-set (their mapped files were
-        # fully read into the slice); untouched buckets only had loose rows
-        # in the slice, so the re-homed rows APPEND to their existing set.
-        write_buckets = (sorted(set(touched) | {
-            int(r["_b"]) for r in merged.select(bucket_of.alias("_b"))
-            .distinct().collect()}) if loose else touched)
-        new_map = {k: list(v) for k, v in bucket_files.items()}
-        for b in write_buckets:
-            staged = store.stage(merged.filter(bucket_of == b), name)
-            if b in touched:
-                new_map[str(b)] = staged
-            else:
-                new_map[str(b)] = new_map.get(str(b), []) + staged
-        merged.unpersist()
+        merged = upsert(updates,
+                        spark.read.parquet(*tfiles) if tfiles else None)
+        # one write over the slice: the updates' buckets plus buckets whose
+        # rows were sitting in loose files (they must land somewhere
+        # bucketed). Touched buckets REPLACE their file-set (their mapped
+        # files were fully read into the slice); the others only had loose
+        # rows in the slice, so the re-homed rows APPEND to their set.
+        staged = store.stage_groups(
+            merged.withColumn("_bucket", bucket_of), name, "_bucket")
         updates.unpersist()
-        files = [f for b in sorted(new_map, key=int) for f in new_map[b]]
+        new_map = {k: list(v) for k, v in bucket_files.items()}
+        for b in touched | set(staged):
+            fs = staged.get(b, [])
+            new_map[b] = fs if b in touched else new_map.get(b, []) + fs
 
     specs: dict = snap.meta.get("bucket_spec", {})
     store.commit(epoch=int(snap.meta.get("last_epoch", -1)),
-                 replaces={name: files},
+                 replaces={name: ordered_files(new_map)},
                  meta={**snap.meta,
                        "merge_buckets": {**all_buckets, name: new_map},
                        "bucket_spec": {**specs,
