@@ -26,6 +26,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -196,17 +197,21 @@ def latest_round_bench() -> dict | None:
     """Most recent driver-recorded BENCH_r{N}.json — the per-round ledger the
     current run is compared against (a query regressing >1.25x vs the prior
     round is flagged in the output)."""
-    import glob
-
     repo = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(repo, "BENCH_r*.json")),
-                       reverse=True):
+    # only the round ledgers BENCH_r<N>.json, newest round first — not the
+    # BENCH_r<N>_<tag>.json side files (frozen/control copies)
+    rounds = sorted(
+        (int(m.group(1)), m.group(0)) for m in
+        (re.fullmatch(r"BENCH_r(\d+)\.json", f) for f in os.listdir(repo))
+        if m)
+    for _, name in reversed(rounds):
+        path = os.path.join(repo, name)
         with open(path) as fh:
             d = json.load(fh)
         if "queries" not in d and isinstance(d.get("parsed"), dict):
             d = d["parsed"]  # driver wraps the bench line under "parsed"
         if d.get("queries"):  # skip rounds the driver failed to parse (r4)
-            d["_file"] = os.path.basename(path)
+            d["_file"] = name
             return d
     return None
 

@@ -10,14 +10,14 @@ per-row HOF folds, top-k heaps) then runs on one core while the other 31
 idle: measured 3.35 s -> 0.67 s (5x) for the minhash signature pipeline at
 the 10x local replica just by spreading the scan.
 
-``spread_scan`` repartitions round-robin to the default parallelism ONLY
-when the scan (or narrow subtree) has fewer partitions than the session's
-parallelism — on a production table (thousands of row groups / files) the
-condition is false and the plan is untouched, so this is not a local-mode
-constant: the trigger derives from the data layout and the cluster width at
-plan time. The round-robin exchange moves the narrow projected rows once;
-all value semantics are unchanged (downstream operators are aggregations /
-joins / sorts whose results do not depend on row placement).
+``spread_scan`` hash-partitions on a key column to the default parallelism
+ONLY when the scan (or narrow subtree) has fewer partitions than the
+session's parallelism — on a production table (thousands of row groups /
+files) the condition is false and the plan is untouched, so this is not a
+local-mode constant: the trigger derives from the data layout and the
+cluster width at plan time. The exchange moves the narrow projected rows
+once; all value semantics are unchanged (downstream operators are
+aggregations / joins / sorts whose results do not depend on row placement).
 """
 
 from __future__ import annotations
@@ -26,24 +26,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def spread_scan(df: DataFrame, *keys: str, min_ratio: float = 1.0) -> DataFrame:
-    """Repartition ``df`` to ``defaultParallelism`` iff its current
-    partition count is below ``min_ratio * defaultParallelism``.
+def spread_scan(df: DataFrame, key: str) -> DataFrame:
+    """Hash-partition ``df`` on ``key`` to ``defaultParallelism`` iff its
+    current partition count is below ``defaultParallelism``.
 
     Call it on the narrow projection actually consumed (after filters and
     column pruning), not on the raw table, so parquet pushdown still reaches
     the scan and the exchange moves only the needed columns.
 
-    Pass a unique, uniform ``keys`` column (e.g. the row id) so the
-    exchange hash-partitions: a bare round-robin repartition inserts a
-    local sort over ALL columns first (``spark.sql.execution.
+    ``key`` should be a unique, uniform column (e.g. the row id). A keyed
+    exchange avoids the local sort over ALL columns that a round-robin
+    repartition inserts first (``spark.sql.execution.
     sortBeforeRepartition``, on by default for retry determinism) — that
-    sort runs in the very single scan task this helper exists to relieve.
+    sort would run in the very single scan task this helper exists to
+    relieve.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target * min_ratio:
-        if keys:
-            return df.repartition(target, *[F.col(k) for k in keys])
-        return df.repartition(target)
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target, F.col(key))
     return df

@@ -5,6 +5,9 @@
                        otherwise first-seen order (lowest priority, seq) —
                        dedup-at-arrival semantics of the reference's seen-set
                        check (/root/reference/src/infrastructure/github_api.py:548-555).
+                       The engine's one supersede; its reference is
+                       ``oracle.simulator.supersede_rows``
+                       (tests/test_politeness.py).
 * ``not_seen``       — exact anti-join against url_seen, optionally fronted by
                        the partitioned bloom probe (negative cache; positives
                        are always re-checked exactly, so bloom FPs never drop
@@ -15,16 +18,12 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from . import bloom as bloom_ops
 from . import cuckoo as cuckoo_ops
-
-def supersede_order():
-    return [F.desc("attempt"), F.desc("not_before_epoch"),
-            F.asc("priority"), F.asc("seq")]
 
 
 def supersede_key():
@@ -57,14 +56,6 @@ def supersede(pending: DataFrame) -> DataFrame:
     return (pending.groupBy("url_hash")
             .agg(F.max_by(F.struct(*cols), order_key).alias("_w"))
             .select("_w.*"))
-
-
-def supersede_window(pending: DataFrame) -> DataFrame:
-    """Window-based reference implementation of :func:`supersede` (kept for
-    the equivalence test; identical output ordering semantics)."""
-    w = Window.partitionBy("url_hash").orderBy(*supersede_order())
-    return (pending.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
 
 
 def not_seen(candidates: DataFrame, url_seen: DataFrame | None,

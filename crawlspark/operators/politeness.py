@@ -21,14 +21,13 @@ the hot path. The per-host skew kill (north_rule) is a two-phase top-k:
 Phase 1 is lossless: any row in the host's true top-``capacity`` by global
 order is also in the top-``capacity`` of its salt group.
 
-``admit_apply_in_pandas`` is a semantically identical GROUPED_MAP
-implementation (the custom-stateful-operator form the north_star names);
-``tests/test_politeness.py`` asserts both produce the same admissions.
+:func:`admit` is the engine's one admission implementation; the reference
+semantics it must reproduce are ``oracle.simulator.host_availability`` and
+``admit_rows``, which ``tests/test_politeness.py`` compares it against.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -136,28 +135,6 @@ def admit_late_materialized(candidates: DataFrame, budgets: DataFrame,
                  derive_missing_host_key="host_hash" not in budgets.columns)
     return candidates.join(
         F.broadcast(keys.select("url_hash", "admission_idx")), "url_hash")
-
-
-def admit_apply_in_pandas(candidates: DataFrame, budgets: DataFrame,
-                          epoch: int, batch_size: int) -> DataFrame:
-    """GROUPED_MAP token-bucket admission: one pandas batch per host consumes
-    tokens locally, then the global cap is applied. Same output as
-    :func:`admit`; kept as the explicit custom-stateful-operator form."""
-    avail = availability(budgets, epoch).select("host", "avail")
-    joined = candidates.join(F.broadcast(avail), "host", "left").na.fill({"avail": 0})
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    )
-
-    def _take(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = int(pdf["avail"].iloc[0]) if len(pdf) else 0
-        pdf = pdf.sort_values(list(ORDER_COLS), kind="mergesort").head(n)
-        return pdf.drop(columns=["avail"])
-
-    per_host = joined.groupBy("host").applyInPandas(_take, schema=out_schema)
-    return (per_host.orderBy(*_order()).limit(batch_size)
-            .withColumn("admission_idx",
-                        F.row_number().over(Window.orderBy(*_order())) - 1))
 
 
 def next_budgets(budgets: DataFrame, admitted: DataFrame, deferred_hosts: DataFrame,

@@ -28,6 +28,50 @@ from .. import codecs
 from ..config import CrawlConfig, choose_prefix, fetch_outcome_per_mille
 
 
+def supersede_rows(pending: list[dict]) -> list[dict]:
+    """One row per url_hash: keep the first by (attempt desc, not_before desc,
+    priority asc, seq asc) — identical to operators.dedup.supersede."""
+    best: dict[int, dict] = {}
+    for r in pending:
+        k = r["url_hash"]
+        cur = best.get(k)
+        key = (-int(r["attempt"]), -int(r["not_before_epoch"]),
+               int(r["priority"]), int(r["seq"]))
+        if cur is None or key < cur[0]:
+            best[k] = (key, r)
+    return [v[1] for v in best.values()]
+
+
+def host_availability(budget_spec: dict, tokens: dict, backoff_until: dict,
+                      epoch: int) -> dict:
+    """Tokens each host may spend this epoch: 0 while backed off, else
+    ``min(capacity, tokens + refill)``. ``budget_spec``: host ->
+    (capacity, refill_per_epoch); ``tokens``/``backoff_until``: host -> int."""
+    avail = {}
+    for h, (cap, refill) in budget_spec.items():
+        if epoch < backoff_until.get(h, 0):
+            avail[h] = 0
+        else:
+            avail[h] = min(cap, tokens.get(h, 0) + refill)
+    return avail
+
+
+def admit_rows(gated: list[dict], avail: dict, batch_size: int) -> list[dict]:
+    """Token-bucket admission in global (priority, seq, url_hash) order: each
+    host takes at most ``avail[host]`` rows, then the first ``batch_size``
+    survivors are admitted; list position is the admission_idx."""
+    ordered = sorted(gated, key=lambda r: (int(r["priority"]), int(r["seq"]),
+                                           int(r["url_hash"])))
+    taken: dict[str, int] = {}
+    host_admitted = []
+    for r in ordered:
+        h = r["host"]
+        if taken.get(h, 0) < avail.get(h, 0):
+            taken[h] = taken.get(h, 0) + 1
+            host_admitted.append(r)
+    return host_admitted[:batch_size]
+
+
 @dataclass
 class OracleState:
     seen: set = field(default_factory=set)              # url_hash
@@ -99,41 +143,17 @@ class CrawlOracle:
                    and st.remaining.get(int(r["priority"]), 0) > 0]
         pending += [dict(r, src="retry") for r in st.retries]
 
-        # supersede: per url_hash keep (attempt desc, not_before desc,
-        # priority asc, seq asc) first — identical to operators.dedup
-        best: dict[int, dict] = {}
-        for r in pending:
-            k = r["url_hash"]
-            cur = best.get(k)
-            key = (-int(r["attempt"]), -int(r["not_before_epoch"]),
-                   int(r["priority"]), int(r["seq"]))
-            if cur is None or key < cur[0]:
-                best[k] = (key, r)
-        cand = [v[1] for v in best.values()]
-        cand = [r for r in cand if r["url_hash"] not in st.seen
+        cand = [r for r in supersede_rows(pending)
+                if r["url_hash"] not in st.seen
                 and int(r["attempt"]) < cfg.max_attempts]
 
         denied = [r for r in cand if self._robots_denied(r)]
         allowed = [r for r in cand if not self._robots_denied(r)]
         gated = [r for r in allowed if int(r["not_before_epoch"]) <= epoch]
 
-        # token-bucket admission in global (priority, seq, url_hash) order
-        gated.sort(key=lambda r: (int(r["priority"]), int(r["seq"]),
-                                  int(r["url_hash"])))
-        avail = {}
-        for h, (cap, refill) in self.budget_spec.items():
-            if epoch < st.backoff_until.get(h, 0):
-                avail[h] = 0
-            else:
-                avail[h] = min(cap, st.tokens.get(h, 0) + refill)
-        taken: dict[str, int] = {}
-        host_admitted = []
-        for r in gated:
-            h = r["host"]
-            if taken.get(h, 0) < avail.get(h, 0):
-                taken[h] = taken.get(h, 0) + 1
-                host_admitted.append(r)
-        admitted = host_admitted[:cfg.batch_size]
+        avail = host_availability(self.budget_spec, st.tokens,
+                                  st.backoff_until, epoch)
+        admitted = admit_rows(gated, avail, cfg.batch_size)
         # tokens debited only for globally admitted rows (engine does the same)
         used: dict[str, int] = {}
         for r in admitted:

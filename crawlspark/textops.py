@@ -360,10 +360,16 @@ def dedup_minhash_verified(spark, sf):
         # broadcasts. (Distinct from the r6 negative result above: that was
         # the ~50MB ARRAY-payload token-set table, whose broadcast cost
         # more than the shuffles it removed; the mask side is ~16B/doc.)
+        # A table with no local single-file footer (a directory table, a
+        # remote path) counts as too big: without the forced broadcast the
+        # plan may be slower, never wrong.
         import pyarrow.parquet as _pq
-        n_docs = _pq.ParquetFile(
-            f"{sf}/documents.parquet").metadata.num_rows
-        if n_docs * 8 * (1 + n_chunks) < (32 << 20):
+        try:
+            n_docs = _pq.ParquetFile(
+                f"{sf}/documents.parquet").metadata.num_rows
+        except OSError:
+            n_docs = None
+        if n_docs is not None and n_docs * 8 * (1 + n_chunks) < (32 << 20):
             a, b = F.broadcast(a), F.broadcast(b)
         inter = sum(F.bit_count(F.col(f"a{w}").bitwiseAND(F.col(f"b{w}")))
                     for w in range(n_chunks))

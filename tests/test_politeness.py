@@ -1,10 +1,10 @@
-"""Operator-level equivalence tests for admission + supersede (SURVEY.md §5.5).
+"""Operator-level tests for admission + supersede (SURVEY.md §5.5).
 
-* window-algebra ``admit`` == GROUPED_MAP ``admit_apply_in_pandas`` (the two
-  implementations of the token-bucket custom stateful operator, T3/V6)
+* window-algebra ``admit`` == the oracle's token-bucket admission
+  (``host_availability`` + ``admit_rows``, T3/V6)
 * ``admit(host_key="host_hash")`` (compact-key / late-materialization path
   used by bench.py) == string-host path
-* hash-agg ``supersede`` == window ``supersede_window`` (J2/J3 dedup)
+* ``supersede`` == the oracle's ``supersede_rows`` (J2/J3 dedup)
 * politeness invariant: no host ever exceeds its available tokens
 """
 
@@ -15,15 +15,22 @@ import pytest
 
 from crawlspark import datagen
 from crawlspark.operators import dedup, politeness
+from crawlspark.oracle.simulator import (admit_rows, host_availability,
+                                         supersede_rows)
 
 SPEC = datagen.GenSpec(seed=7, n_images=50, n_urls=600, n_hosts=12, n_strata=4)
+SUPERSEDE_KEY = ["url_hash", "attempt", "not_before_epoch", "priority", "seq"]
 
 
 @pytest.fixture(scope="module")
-def dfs(spark):
-    frontier = spark.createDataFrame(datagen.gen_frontier(SPEC))
-    budgets = spark.createDataFrame(datagen.gen_budgets(SPEC))
-    return frontier, budgets
+def pdfs():
+    return datagen.gen_frontier(SPEC), datagen.gen_budgets(SPEC)
+
+
+@pytest.fixture(scope="module")
+def dfs(spark, pdfs):
+    frontier, budgets = pdfs
+    return spark.createDataFrame(frontier), spark.createDataFrame(budgets)
 
 
 def _admitted_keys(df) -> list[tuple]:
@@ -31,13 +38,25 @@ def _admitted_keys(df) -> list[tuple]:
     return sorted(map(tuple, pdf.itertuples(index=False)))
 
 
-def test_admit_equals_grouped_map(dfs):
+def test_admit_equals_grouped_map(dfs, pdfs):
     frontier, budgets = dfs
+    frontier_pdf, budgets_pdf = pdfs
     cand = dedup.supersede(frontier)
-    a = politeness.admit(cand, budgets, epoch=0, batch_size=80)
-    b = politeness.admit_apply_in_pandas(cand, budgets, epoch=0, batch_size=80)
-    assert _admitted_keys(a) == _admitted_keys(b)
-    assert a.count() > 0
+    brows = budgets_pdf.to_dict("records")
+    avail = host_availability(
+        {r["host"]: (int(r["capacity"]), int(r["refill_per_epoch"]))
+         for r in brows},
+        {r["host"]: int(r["tokens"]) for r in brows},
+        {r["host"]: int(r["backoff_until_epoch"]) for r in brows},
+        epoch=0)
+    oracle_cand = supersede_rows(frontier_pdf.to_dict("records"))
+    # 80: the global cap bites; 10 000: only the per-host buckets do
+    for batch_size in (80, 10_000):
+        a = politeness.admit(cand, budgets, epoch=0, batch_size=batch_size)
+        expected = [(i, int(r["url_hash"])) for i, r in
+                    enumerate(admit_rows(oracle_cand, avail, batch_size))]
+        assert _admitted_keys(a) == expected
+        assert expected
 
 
 def test_admit_host_hash_key_equivalent(dfs):
@@ -57,20 +76,25 @@ def test_admit_host_hash_key_equivalent(dfs):
                          host_key="host_hash")
 
 
-def test_supersede_hash_agg_equals_window(spark, dfs):
-    frontier, _ = dfs
-    # union a retry copy for ~20% of urls (higher attempt must win)
-    retry = (frontier.limit(120)
-             .withColumn("attempt", frontier["attempt"] + 2)
-             .withColumn("not_before_epoch", frontier["not_before_epoch"] + 3))
-    pending = frontier.unionByName(retry)
-    a = dedup.supersede(pending).toPandas()
-    b = dedup.supersede_window(pending).toPandas()
-    key = ["url_hash", "attempt", "not_before_epoch", "priority", "seq"]
-    pd.testing.assert_frame_equal(
-        a[key].sort_values(key).reset_index(drop=True),
-        b[key].sort_values(key).reset_index(drop=True))
+def test_supersede_hash_agg_equals_window(spark, pdfs):
+    frontier, _ = pdfs
+    # the frontier already holds url twins (priority/seq decide); add a
+    # retry copy of the first 120 rows (higher attempt and later backoff
+    # must win) and a same-attempt copy of the next 60 (later seq must lose)
+    retry = frontier.iloc[:120].assign(
+        attempt=frontier["attempt"].iloc[:120] + 2,
+        not_before_epoch=frontier["not_before_epoch"].iloc[:120] + 3)
+    later = frontier.iloc[120:180].assign(
+        seq=frontier["seq"].iloc[120:180] + 10_000)
+    pending = pd.concat([frontier, retry, later], ignore_index=True)
+    a = dedup.supersede(spark.createDataFrame(pending)).toPandas()
+    b = pd.DataFrame(supersede_rows(pending.to_dict("records")))
     assert a["url_hash"].is_unique
+    pd.testing.assert_frame_equal(
+        a[SUPERSEDE_KEY].sort_values(SUPERSEDE_KEY).reset_index(drop=True),
+        b[SUPERSEDE_KEY].sort_values(SUPERSEDE_KEY).reset_index(drop=True),
+        check_dtype=False)
+    assert (b["attempt"] == 2).sum() == retry["url_hash"].nunique()
 
 
 def test_no_host_exceeds_budget(dfs):

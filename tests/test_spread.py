@@ -11,10 +11,14 @@ stages. These tests pin the helper's two load-bearing properties:
 
 The masks-broadcast size gate in dedup_minhash_verified is covered by the
 plan-shape assertion: at test scale the verify joins must be broadcast
-(no SortMergeJoin against the mask table).
+(no SortMergeJoin against the mask table). When ``documents`` is a
+directory table the gate has no footer to read: it must skip the forced
+broadcast instead of raising, and the query must return the same rows.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,7 +62,7 @@ def test_minhash_candidates_identical_without_spread(spark, monkeypatch):
     import crawlspark.textops as T
 
     spread = T.QUERIES["dedup_minhash"](spark, SF001).collect()
-    monkeypatch.setattr(T, "spread_scan", lambda df, *k, **kw: df)
+    monkeypatch.setattr(T, "spread_scan", lambda df, key: df)
     unspread = T.QUERIES["dedup_minhash"](spark, SF001).collect()
     assert spread == unspread
     assert len(spread) > 0
@@ -73,3 +77,19 @@ def test_verified_mask_joins_broadcast_at_small_scale(spark):
     # here, and no sort-merge join may touch the candidate-pair stream
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_verified_falls_back_on_directory_documents(spark, tmp_path):
+    import crawlspark.textops as T
+
+    for name in os.listdir(SF001):
+        if name != "documents.parquet":
+            os.symlink(os.path.join(SF001, name), tmp_path / name)
+    (spark.read.parquet(f"{SF001}/documents.parquet").repartition(3)
+     .write.parquet(str(tmp_path / "documents.parquet")))
+    assert (tmp_path / "documents.parquet").is_dir()
+
+    df = T.QUERIES["dedup_minhash_verified"](spark, str(tmp_path))
+    expected = T.QUERIES["dedup_minhash_verified"](spark, SF001).collect()
+    assert df.collect() == expected
+    assert len(expected) > 0

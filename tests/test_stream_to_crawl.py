@@ -85,93 +85,3 @@ def test_no_url_fetched_ok_twice(spark, drained):
         ["ok", "invalid_payload", "failed", "robots_denied"])]
     assert terminal["url_hash"].is_unique
 
-
-def test_admission_chained_into_frontier_fold_multi_trigger(
-        spark, tmp_path_factory):
-    """The two streaming halves as ONE job across >=3 triggers (VERDICT r3
-    item 7): file source -> applyInPandasWithState token-bucket admission ->
-    projection -> foreachBatch frontier fold-in. The bucket's token state
-    must carry across trigger boundaries (denials at trigger 0, refill
-    credit later), only ADMITTED rows may reach the frontier, and re-sent
-    urls dedupe against the already-enqueued frontier — all asserted
-    against the pure-pandas simulate_token_bucket oracle."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from crawlspark.functions.urls import hash64_col
-    from crawlspark.streaming.stateful import (simulate_token_bucket,
-                                               token_bucket_admission)
-    from crawlspark.tables import SnapshotStore
-
-    def rows(host, n, seq0):
-        return pd.DataFrame({
-            "host": host,
-            "url": [f"http://{host}/img/img_{seq0 + i:012d}"
-                    for i in range(n)],
-            "url_hash": [hash((host, seq0 + i)) % (1 << 60)
-                         for i in range(n)],
-            "priority": pd.array([0] * n, dtype="int32"),
-            "seq": pd.array(range(seq0, seq0 + n), dtype="int64"),
-        })
-
-    A, B = "slow.example.com", "fast.example.com"
-    t0 = rows(A, 4, 0)                       # cap 2 -> 2 admitted, 2 denied
-    t1 = rows(A, 2, 100)                     # refill 1 -> 1 admitted
-    t2 = pd.concat([t0.iloc[:1], rows(A, 1, 200)],
-                   ignore_index=True)        # re-sent url + 1 fresh
-    t3 = rows(B, 3, 300)                     # new host, fresh bucket
-    parts = [t0, t1, t2, t3]
-    budgets = {A: (2, 1), B: (8, 4)}
-
-    ddir = str(tmp_path_factory.mktemp("chain"))
-    for i, chunk in enumerate(parts):
-        chunk = chunk.copy()
-        chunk["trigger_idx"] = pd.array([i] * len(chunk), dtype="int32")
-        pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False),
-                       os.path.join(ddir, f"chunk-{i}.parquet"))
-
-    schema = T.StructType([
-        T.StructField("host", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("url_hash", T.LongType()),
-        T.StructField("priority", T.IntegerType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("trigger_idx", T.IntegerType()),
-    ])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(ddir))
-    admitted = (token_bucket_admission(stream, budgets)
-                .filter(F.col("admitted"))
-                .select(
-                    "url", "url_hash", "host",
-                    hash64_col(F.col("host")).alias("host_hash"),
-                    "priority", "seq",
-                    F.regexp_extract("url", r"(img_\d{12})", 1)
-                    .alias("image_id"),
-                    F.lit(0).cast("int").alias("attempt"),
-                    F.lit(0).cast("int").alias("not_before_epoch"),
-                    (F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-                     + F.make_interval(secs=F.col("seq")))
-                    .alias("discovered_at")))
-
-    store = SnapshotStore(str(tmp_path_factory.mktemp("chainstore")))
-    q = ingest.fold_into_frontier(spark, admitted, store,
-                                  str(tmp_path_factory.mktemp("chainckpt")))
-    q.awaitTermination(300)
-
-    # oracle: same parts, same budgets, pure pandas
-    exp = simulate_token_bucket(parts, budgets)
-    exp_admitted = exp[exp["admitted"]]
-    exp_hashes = set(exp_admitted["url_hash"])
-
-    frontier = store.read(spark, "frontier").toPandas()
-    assert set(frontier["url_hash"]) == exp_hashes     # only admitted rows
-    assert len(frontier) == len(exp_hashes)            # re-sent url deduped
-    # the bucket genuinely carried state across triggers: trigger-0 denials
-    denied0 = exp[(exp["trigger_seq"] == 0) & ~exp["admitted"]]
-    assert len(denied0) == 2
-    assert not set(denied0["url_hash"]) & set(frontier["url_hash"])
-    # >= 3 triggers actually fired through the chained sink
-    assert int(store.snapshot().meta["last_discovery_batch"]) >= 3
-    remaining = store.snapshot().meta["remaining_by_priority"]
-    assert sum(int(v) for v in remaining.values()) == len(exp_hashes)
