@@ -8,6 +8,7 @@ constants — integer math only, per the ordering-parity requirement
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 
@@ -96,16 +97,29 @@ class CrawlConfig:
                    max(self.backoff_min_epochs, 1 << (attempt - 1)))
 
 
+def _local_cpus() -> int:
+    """Cores for a local session: ``SPARK_GRAFT_CPUS`` or ``os.cpu_count()``."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def _half_ram() -> str:
+    """Half of physical RAM in whole GiB (at least 1), capped at 16g."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16, max(1, ram // 2 >> 30))}g"
+
+
 @dataclass(frozen=True)
 class SparkTuning:
-    """Spark session tuning used by session.get_spark()."""
+    """Spark session tuning used by session.get_spark(). The defaults size
+    a local session to the machine: one task slot and one shuffle partition
+    per core, half of RAM for the driver heap."""
 
-    master: str = "local[32]"
-    shuffle_partitions: int = 32
-    # 16g + throughput GC: measured on this box, allocation-heavy codegen
-    # (string concat/lpad in the URL generator) runs ~50x faster at 32
-    # threads than with the G1 default on a 32g heap (GC contention collapse)
-    driver_memory: str = "16g"
+    master: str = field(default_factory=lambda: f"local[{_local_cpus()}]")
+    shuffle_partitions: int = field(default_factory=_local_cpus)
+    # capped at 16g, with throughput GC: allocation-heavy codegen (string
+    # concat/lpad in the URL generator) measured ~50x faster at 32 threads
+    # than with the G1 default on a 32g heap (GC contention collapse)
+    driver_memory: str = field(default_factory=_half_ram)
     app_name: str = "crawlspark"
     extra: dict = field(default_factory=dict)
     gc_opts: str = "-XX:+UseParallelGC"

@@ -7,14 +7,14 @@ web-frontier analog keys on a 64-bit hash of the *canonical* URL so that
 
 ``hash64`` is defined as the first 15 hex digits of md5 parsed as an integer
 (60 bits, always non-negative, fits int64). md5 was chosen over xxhash because
-the exact same value is computable in all four places we need it:
+the exact same value is computable in all three places we need it:
 
 * pure Python  (``hash64`` below — oracle + datagen),
-* pandas UDFs  (``hash64_series`` — vectorized over object arrays),
 * JVM columns  (``hash64_col`` — ``conv(substring(md5(c),1,15),16,10)``,
-  stays inside whole-stage codegen; used on the hot path),
-* DuckDB SQL   (``CAST(('0x' || substring(md5(c),1,15)) AS ...)``) if an
-  oracle query ever needs it.
+  stays inside whole-stage codegen; the crawl frontier's url_hash and every
+  text-dedup hash in ``crawlspark.textops``),
+* DuckDB SQL   (``CAST(('0x' || substr(md5(c),1,15)) AS BIGINT)``,
+  ``textops.DUCK_H60``) in the query oracles.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ import hashlib
 import posixpath
 from urllib.parse import urlsplit, urlunsplit
 
-import numpy as np
 import pandas as pd
 
 _DEFAULT_PORTS = {"http": 80, "https": 443}
@@ -79,16 +78,12 @@ def canonicalize_series(urls: pd.Series) -> pd.Series:
     return urls.map(canonicalize_url)
 
 
-def hash64_series(strings: pd.Series) -> pd.Series:
-    return strings.map(hash64).astype(np.int64)
-
-
 # --- Spark-side helpers (imported lazily so the oracle stays Spark-free) ----
 
 def hash64_col(col):
     """JVM-side hash64 of a string column (same value as ``hash64``):
     conv(substring(md5(c), 1, 15), 16, 10) cast to long. Stays in
-    whole-stage codegen — use this on hot paths instead of the pandas UDF."""
+    whole-stage codegen."""
     from pyspark.sql import functions as F
 
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
@@ -104,14 +99,3 @@ def canonical_url_udf():
         return canonicalize_series(urls)
 
     return _canon
-
-
-def url_hash_udf():
-    """Vectorized pandas UDF: url -> hash64(canonicalize(url))."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _uh(urls: pd.Series) -> pd.Series:
-        return canonicalize_series(urls).map(hash64).astype(np.int64)
-
-    return _uh

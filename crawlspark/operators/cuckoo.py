@@ -450,10 +450,3 @@ def deleted_buckets(del_rows: DataFrame, filters: DataFrame,
     return (db.select("bucket", "url_hash").groupBy("bucket")
             .cogroup(flt.groupBy("bucket"))
             .applyInPandas(_delete, schema=FILTER_SCHEMA))
-
-
-def load_estimate(n_items: int, slots_bytes: int) -> float:
-    """Load factor = items / slot capacity (per-partition lineage metric;
-    the cuckoo analog of :func:`bloom.fpp_estimate`)."""
-    cap = slots_bytes // 2
-    return float(n_items) / cap if cap else 1.0

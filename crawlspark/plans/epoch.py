@@ -321,14 +321,16 @@ def run_epoch(spark: SparkSession, store: SnapshotStore, images: DataFrame,
         # bound across a long crawl. The kept-row rule is the oracle's exactly
         # (oracle/simulator.py run_epoch tail): re-enqueued, newly seen and
         # admitted rows are all epoch rows, so one anti-join against the epoch
-        # rows drops the three of them.
+        # rows drops the three of them. The oracle's "not in seen" needs no
+        # O(history) anti-join against url_seen: by induction retries and
+        # url_seen never share a url_hash (new retry rows passed the seen
+        # gate and are not terminal; kept rows were disjoint already, and
+        # this epoch's newly seen rows are epoch rows) — pinned by
+        # tests/test_epoch_parity.py::test_retries_disjoint_from_url_seen.
         retries_next = new_retries
         if retries_raw is not None:
             kept = retries_raw.join(erows.select("url_hash"), "url_hash",
                                     "left_anti")
-            if url_seen is not None:
-                kept = kept.join(url_seen.select("url_hash"), "url_hash",
-                                 "left_anti")
             retries_next = new_retries.unionByName(kept.select(*FRONTIER_COLS))
 
         # ---- budgets --------------------------------------------------------

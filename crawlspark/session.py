@@ -14,9 +14,7 @@ from .config import SparkTuning
 
 
 def get_spark(tuning: SparkTuning | None = None) -> SparkSession:
-    t = tuning or SparkTuning(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    )
+    t = tuning or SparkTuning()
     b = (
         SparkSession.builder.master(t.master)
         .appName(t.app_name)

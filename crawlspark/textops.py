@@ -7,9 +7,15 @@ oracle (driver value-hash gate); operators whose oracle would require
 UDF-grade logic (simhash packing, multimodal decode) are rows-only checks.
 
 Hash discipline: every hash used here is md5-prefix based
-(``crawlspark.functions.urls.hash64`` semantics) so Spark SQL, DuckDB SQL,
+(``crawlspark.functions.urls.hash64`` semantics; the JVM side is always
+``hash64_col``, the DuckDB side ``DUCK_H60``) so Spark SQL, DuckDB SQL,
 and Python compute bit-identical values — that is what makes MinHash/LSH
 oracle-checkable at all.
+
+One implementation per LSH building block: ``_bucket_cells`` (skew-bounded
+pair cells for the minhash/phash pair joins and dedup_embedding),
+``_np_norms``/``_np_dots`` (the numpy cosine kernel, bit-identical to the
+JVM fold) and ``_sign_bucket``/``_sign_bucket_duck`` (sign-LSH buckets).
 
 Scale notes per operator are in the docstrings: the point is not the sf0.01
 result but the plan shape that survives 10^10 documents.
@@ -17,11 +23,15 @@ result but the plan shape that survives 10^10 documents.
 
 from __future__ import annotations
 
+from functools import reduce
+
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.spread import spread_scan
+from .functions.urls import hash64_col
 
 QUERIES: dict = {}
 ORACLE_SQL: dict = {}
@@ -40,8 +50,7 @@ def q(name: str, sql: str | None = None):
     return deco
 
 
-# 60-bit md5-prefix hash, identical in Spark SQL and DuckDB SQL
-SPARK_H60 = "conv(substring(md5({c}), 1, 15), 16, 10)"          # -> string, cast long
+# DuckDB twin of urls.hash64_col: the 60-bit md5-prefix hash
 DUCK_H60 = "CAST(('0x' || substr(md5({c}), 1, 15)) AS BIGINT)"
 
 # MinHash parameters (integer-exact on both engines: h is reduced mod p
@@ -64,6 +73,48 @@ MH_COEF = [(443, 907), (571, 211), (727, 383), (911, 653),
 _PAIR_BUCKET_CAP = 4096
 
 
+def _bucket_cells(df: DataFrame, bucket_col: str, id_col: str,
+                  cap: int) -> DataFrame:
+    """Route every row of ``df`` to its LSH pair cells: ``df`` plus ``_c1``,
+    ``_c2`` and ``_side``. The one cell scheme behind every intra-bucket
+    all-pairs operator here (``_skew_safe_bucket_pairs``, dedup_embedding's
+    Arrow scorer): each unordered pair of a bucket lands in EXACTLY one
+    cell, and a cell holds at most ~cap^2 pairs whatever the bucket size.
+
+      1. census: bucket sizes via ``count() OVER (PARTITION BY bucket)`` —
+         a partitioned window on the SAME hash partitioning the pair join
+         shuffles to anyway, so the census costs no extra shuffle (measured:
+         the groupBy+broadcast-join alternative added ~3x the overhead).
+      2. a bucket of at most ``cap`` rows is one cell (0, 0), each row once
+         as side 0: both pair sides are the whole bucket.
+      3. a bigger bucket is a salted TRIANGLE (*Scalable and Robust Set
+         Similarity Join*, ICDE 2018). Each row gets a deterministic salt
+         ``g = pmod(xxhash64(id), S)`` with ``S = ceil(k / cap)``; the pair
+         space splits into S*(S+1)/2 salt cells, side-1 copies go to cells
+         ``(g, j>=g)``, side-2 copies to ``(i<=g, g)``. A pair of distinct
+         salts meets once, in arbitrary side order; a diagonal cell sees
+         both orders and keeps one by id order.
+
+    ``id_col`` may name a struct field (``"_r.doc_id"``): callers that ship
+    a payload struct build it before the salt explode, one per row."""
+    cols = df.columns
+    dfn = df.withColumn("_n", F.count("*").over(Window.partitionBy(bucket_col)))
+    normal = dfn.filter(F.col("_n") <= cap).select(
+        *cols, F.lit(0).alias("_c1"), F.lit(0).alias("_c2"),
+        F.lit(0).alias("_side"))
+    s_of = F.ceil(F.col("_n") / F.lit(cap)).cast("int")
+    g_of = F.pmod(F.xxhash64(F.col(id_col)), s_of).cast("int")
+    big = dfn.filter(F.col("_n") > cap).select(*cols, g_of.alias("_g"),
+                                                s_of.alias("_s"))
+    a_g = big.select(*cols, F.col("_g").alias("_c1"),
+                     F.explode(F.sequence(F.col("_g"), F.col("_s") - 1))
+                     .alias("_c2"), F.lit(1).alias("_side"))
+    b_g = big.select(*cols,
+                     F.explode(F.sequence(F.lit(0), F.col("_g"))).alias("_c1"),
+                     F.col("_g").alias("_c2"), F.lit(2).alias("_side"))
+    return normal.unionByName(a_g).unionByName(b_g)
+
+
 def _skew_safe_bucket_pairs(df: DataFrame, bucket_col: str, id_col: str,
                             cap: int = _PAIR_BUCKET_CAP) -> DataFrame:
     """All intra-bucket candidate pairs — ``(a, b)`` struct columns of the
@@ -72,23 +123,11 @@ def _skew_safe_bucket_pairs(df: DataFrame, bucket_col: str, id_col: str,
     The naive bucket self-equi-join puts a k-member bucket's k^2/2 pairs in
     one task; one mega-cluster of near-identical docs stalls the whole
     stage (the skew failure of LSH banding at scale). Hardening, the same
-    salting discipline as ``politeness.admit``:
-
-      1. census: bucket sizes via ``count() OVER (PARTITION BY bucket)`` —
-         a partitioned window on the SAME hash partitioning the pair join
-         shuffles to anyway, so the census costs no extra shuffle (measured:
-         the groupBy+broadcast-join alternative added ~3x the overhead).
-      2. normal buckets (size <= cap): direct self-equi-join on the bucket
-         key, exactly the plan as before.
-      3. giant buckets: two-phase TRIANGLE join. Each row gets a
-         deterministic salt ``g = pmod(xxhash64(id), S)`` with
-         ``S = ceil(k / cap)``; the pair space splits into S*(S+1)/2 salt
-         cells, the left side replicated to cells ``(g, j>=g)``, the right
-         to ``(i<=g, g)``, joined on (bucket, cell). Every unordered pair
-         lands in EXACTLY one cell — off-diagonal cells see it once in
-         arbitrary side order (normalized after the join), diagonal cells
-         dedup via the id ordering — and each cell holds ~(k/S)^2 = cap^2
-         pairs, so per-task work is capped regardless of cluster size.
+    salting discipline as ``politeness.admit``: rows are routed by
+    :func:`_bucket_cells`. Side 0 (normal buckets) self-joins on the bucket
+    key alone — exactly the naive plan, on the hash partitioning the census
+    window already shuffled to; side 1 joins side 2 on (bucket, cell), and
+    off-diagonal cells are normalized to id order after the join.
 
     Output is identical to the naive join (asserted in
     tests/test_pair_skew.py); only the task-level distribution changes.
@@ -100,42 +139,28 @@ def _skew_safe_bucket_pairs(df: DataFrame, bucket_col: str, id_col: str,
     downstream pair shuffle (~370 MB of dead weight; guide §2.3 "project
     before the exchange" — nested-field pruning does not reach into structs
     built mid-plan)."""
-    from pyspark.sql import Window
-
     row = F.struct(*[F.col(c) for c in df.columns if c != bucket_col])
-    dfn = df.withColumn(
-        "_n", F.count("*").over(Window.partitionBy(bucket_col)))
-    normal = dfn.filter(F.col("_n") <= cap)
-    big = dfn.filter(F.col("_n") > cap)
-
-    a_n = normal.select(F.col(bucket_col).alias("_bk"), row.alias("a"))
-    b_n = normal.select(F.col(bucket_col).alias("_bk"), row.alias("b"))
-    pairs_n = (a_n.join(b_n, "_bk")
-               .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-               .select("a", "b"))
-
-    s_of = F.ceil(F.col("_n") / F.lit(cap)).cast("int")
-    g_of = F.pmod(F.xxhash64(F.col(id_col)), s_of).cast("int")
-    a_g = (big.select(F.col(bucket_col).alias("_bk"), g_of.alias("_g"),
-                      s_of.alias("_s"), row.alias("a"))
-           .select("_bk", F.col("_g").alias("_c1"),
-                   F.explode(F.sequence(F.col("_g"), F.col("_s") - 1))
-                   .alias("_c2"), "a"))
-    b_g = (big.select(F.col(bucket_col).alias("_bk"), g_of.alias("_g"),
-                      row.alias("b"))
-           .select("_bk",
-                   F.explode(F.sequence(F.lit(0), F.col("_g")))
-                   .alias("_c1"), F.col("_g").alias("_c2"), "b"))
+    cells = _bucket_cells(df.select(bucket_col, row.alias("_r")),
+                          bucket_col, f"_r.{id_col}", cap)
     ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-    joined = a_g.join(b_g, ["_bk", "_c1", "_c2"]).filter(
-        ((F.col("_c1") != F.col("_c2")) & (ida != idb))
-        | ((F.col("_c1") == F.col("_c2")) & (ida < idb)))
+
+    def side(k, name, *keys):
+        return cells.filter(F.col("_side") == k).select(
+            bucket_col, *keys, F.col("_r").alias(name))
+
+    pairs_n = (side(0, "a").join(side(0, "b"), bucket_col)
+               .filter(ida < idb).select("a", "b"))
+    joined = (side(1, "a", "_c1", "_c2")
+              .join(side(2, "b", "_c1", "_c2"), [bucket_col, "_c1", "_c2"])
+              .filter(((F.col("_c1") != F.col("_c2")) & (ida != idb))
+                      | ((F.col("_c1") == F.col("_c2")) & (ida < idb))))
     # off-diagonal cells see the pair in salt order, not id order — normalize
     pairs_g = joined.select(
         F.when(ida < idb, F.col("a")).otherwise(F.col("b")).alias("a"),
         F.when(ida < idb, F.col("b")).otherwise(F.col("a")).alias("b"))
 
     return pairs_n.unionByName(pairs_g)
+
 
 @q("dedup_exact", """
 SELECT min(doc_id) AS keeper_id, count(*) AS n_copies,
@@ -224,8 +249,7 @@ def _minhash_band_candidates(spark, sf) -> DataFrame:
     # pair-join copy waits on its broadcast, which costs more than the
     # ~1.8s of md5 it saves; inline hashing keeps shingle->hash->partial-min
     # in one codegen'd map stage feeding the signature shuffle.)
-    hs = sh.select("doc_id",
-                   F.expr(SPARK_H60.format(c="shingle")).cast("long").alias("h"))
+    hs = sh.select("doc_id", hash64_col(F.col("shingle")).alias("h"))
     aggs = [F.min((F.lit(a) * (F.col("h") % MH_P) + F.lit(b)) % MH_P)
             .alias(f"mh{j}") for j, (a, b) in enumerate(MH_COEF)]
     sig = hs.groupBy("doc_id").agg(*aggs)
@@ -439,8 +463,7 @@ def dedup_simhash(spark, sf):
     # instances draw from ~31 distinct tokens)
     tok_dict = (toks.select("tok").distinct()
                 .select("tok",
-                        (F.expr(SPARK_H60.format(c="tok")).cast("long")
-                         % 4294967296).alias("h32")))
+                        (hash64_col(F.col("tok")) % 4294967296).alias("h32")))
     hs = (toks.join(F.broadcast(tok_dict), "tok")
           .select("doc_id", "h32"))
     votes = [F.sum(F.when(F.expr(f"(h32 >> {bit}) & 1 = 1"), 1).otherwise(-1))
@@ -457,12 +480,52 @@ def dedup_simhash(spark, sf):
 QUERIES["dedup_simhash"] = dedup_simhash
 
 
+#: Embedding dimensionality — a data contract of the embeddings table (every
+#: row is exactly 64 floats at every scale factor, driver-generated included;
+#: asserted in tests/test_textops_perf.py). Fixing it lets the cosine
+#: arithmetic below unroll into plain codegen'd expressions.
+_EMB_DIM = 64
+
+
+def _np_norms(m):
+    """Row L2 norms of a float64 ``(n, _EMB_DIM)`` matrix, accumulated one
+    dimension at a time in ascending order: the JVM norm fold's exact float
+    op sequence (``acc = 0.0; acc += v[i]*v[i]``), so bit-identical to it."""
+    acc = np.zeros(len(m))
+    for d in range(_EMB_DIM):
+        acc += m[:, d] * m[:, d]
+    return np.sqrt(acc)
+
+
+def _np_dots(a, bT):
+    """All dot products of the rows of float64 ``a`` (n, _EMB_DIM) with the
+    columns of ``bT`` (_EMB_DIM, m), accumulated like :func:`_np_norms` —
+    bit-identical to the JVM dot fold for every pair. sqrt and division are
+    IEEE-correctly-rounded in both runtimes, so whole cosines match too."""
+    acc = np.zeros((len(a), bT.shape[1]))
+    for d in range(_EMB_DIM):
+        acc += a[:, d][:, None] * bT[d][None, :]
+    return acc
+
+
+def _sign_bucket(n_bits: int):
+    """Sign-LSH bucket of the ``embedding`` column: bit i is set iff
+    ``embedding[i] > 0``, for the first ``n_bits`` dimensions."""
+    return reduce(lambda x, y: x + y, [
+        F.when(F.element_at("embedding", i + 1) > 0,
+               F.lit(1 << i)).otherwise(F.lit(0)) for i in range(n_bits)])
+
+
+def _sign_bucket_duck(col: str, n_bits: int) -> str:
+    """DuckDB twin of :func:`_sign_bucket` over list column ``col``."""
+    return " + ".join(f"CASE WHEN {col}[{i + 1}] > 0 THEN {1 << i} ELSE 0 END"
+                      for i in range(n_bits))
+
+
 _EMB_BITS = 4
 _EMB_THRESHOLD = 0.30
 
-_EMB_BUCKET_DUCK = " + ".join(
-    f"CASE WHEN emb[{i + 1}] > 0 THEN {1 << i} ELSE 0 END"
-    for i in range(_EMB_BITS))
+_EMB_BUCKET_DUCK = _sign_bucket_duck("emb", _EMB_BITS)
 
 ORACLE_SQL["dedup_embedding"] = f"""
 WITH x AS (
@@ -503,56 +566,24 @@ def dedup_embedding(spark, sf, cap: int = _EMB_CELL_CAP):
 
     r6: the in-bucket scorer moved from a per-pair JVM HOF cosine over the
     exploded pair relation (~12.5M interpreted folds at sf1.0, ~24s) into an
-    Arrow-batched ``applyInPandas`` over the SAME skew-cell routing as
-    ``_skew_safe_bucket_pairs``: normal buckets score as one group; a bucket
-    over the cap splits into the identical salted triangle cells (each
+    Arrow-batched ``applyInPandas`` over the cells of :func:`_bucket_cells`
+    (the routing ``_skew_safe_bucket_pairs`` joins): a normal bucket scores
+    as one group, a bucket over the cap as its salted triangle cells (each
     unordered pair lands in exactly one cell), and each cell's pairwise
-    cosines run as vectorized numpy with the JVM fold's exact
+    cosines run through ``_np_norms``/``_np_dots`` — the JVM fold's exact
     dimension-ascending accumulation order (bit-identical — the same
-    argument, and the same oracle gate, as ann_ivf's assignment). Each
+    kernel, and the same oracle gate, as ann_ivf's assignment). Each
     vector ships once per cell instead of once per PAIR, so Arrow traffic
     is O(rows), not O(pairs)."""
-    import numpy as np
-    from pyspark.sql import Window
-
     raw = _t(spark, sf, "embeddings").select("vec_id", "embedding")
-    bucket = None
-    for i in range(_EMB_BITS):
-        term = F.when(F.element_at("embedding", i + 1) > 0,
-                      F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    dfn = (raw.withColumn("bucket", bucket)
-           .withColumn("_n", F.count("*").over(Window.partitionBy("bucket"))))
-    s_of = F.ceil(F.col("_n") / F.lit(cap)).cast("int")
-    g_of = F.pmod(F.xxhash64(F.col("vec_id")), s_of).cast("int")
-    # side 0 = whole normal bucket (both pair sides); 1/2 = the salted
-    # triangle's a/b replicas — the exact cell scheme of
-    # _skew_safe_bucket_pairs, so pair coverage/uniqueness is unchanged
-    normal = (dfn.filter(F.col("_n") <= cap)
-              .select("bucket", F.lit(0).alias("_c1"), F.lit(0).alias("_c2"),
-                      F.lit(0).alias("_side"), "vec_id", "embedding"))
-    big = dfn.filter(F.col("_n") > cap)
-    a_g = (big.select("bucket", g_of.alias("_g"), s_of.alias("_s"),
-                      "vec_id", "embedding")
-           .select("bucket", F.col("_g").alias("_c1"),
-                   F.explode(F.sequence(F.col("_g"), F.col("_s") - 1))
-                   .alias("_c2"), F.lit(1).alias("_side"),
-                   "vec_id", "embedding"))
-    b_g = (big.select("bucket", g_of.alias("_g"), "vec_id", "embedding")
-           .select("bucket",
-                   F.explode(F.sequence(F.lit(0), F.col("_g"))).alias("_c1"),
-                   F.col("_g").alias("_c2"), F.lit(2).alias("_side"),
-                   "vec_id", "embedding"))
-    cells = normal.unionByName(a_g).unionByName(b_g)
+    cells = _bucket_cells(raw.withColumn("bucket", _sign_bucket(_EMB_BITS)),
+                          "bucket", "vec_id", cap)
 
     def _score_cell(pdf):
         side = pdf["_side"].to_numpy()
         v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         ids = pdf["vec_id"].to_numpy()
-        nrm = np.zeros(len(v))
-        for d in range(_EMB_DIM):       # the JVM norm fold's exact order
-            nrm += v[:, d] * v[:, d]
-        nrm = np.sqrt(nrm)
+        nrm = _np_norms(v)
         if side[0] == 0:                # whole normal bucket: A = B = rows
             ai = np.arange(len(v))
             bi = ai
@@ -562,16 +593,12 @@ def dedup_embedding(spark, sf, cap: int = _EMB_CELL_CAP):
             bi = np.where(side == 2)[0]
             diagonal = bool(pdf["_c1"].iat[0] == pdf["_c2"].iat[0])
         out_a, out_b, out_c = [], [], []
-        bmat, bn, bids = v[bi], nrm[bi], ids[bi]
+        bT, bn, bids = v[bi].T.copy(), nrm[bi], ids[bi]
         for i0 in range(0, len(ai), 512):   # bound the sims matrix ~2MB
             idx = ai[i0:i0 + 512]
             if not len(idx) or not len(bi):
                 break
-            av = v[idx]
-            dots = np.zeros((len(idx), len(bi)))
-            for d in range(_EMB_DIM):   # the JVM dot fold's exact order
-                dots += av[:, d][:, None] * bmat[:, d][None, :]
-            sims = dots / (nrm[idx][:, None] * bn[None, :])
+            sims = _np_dots(v[idx], bT) / (nrm[idx][:, None] * bn[None, :])
             ia, ib = ids[idx][:, None], bids[None, :]
             mask = (sims >= _EMB_THRESHOLD) & \
                    ((ia < ib) if diagonal else (ia != ib))
@@ -611,13 +638,6 @@ QUERIES["dedup_embedding"] = dedup_embedding
 # =========================================================================
 # similarity search
 # =========================================================================
-
-#: Embedding dimensionality — a data contract of the embeddings table (every
-#: row is exactly 64 floats at every scale factor, driver-generated included;
-#: asserted in tests/test_textops_perf.py). Fixing it lets the cosine
-#: arithmetic below unroll into plain codegen'd expressions.
-_EMB_DIM = 64
-
 
 # r6 measured dead end, recorded so it is not retried: unrolling the cosine
 # into 64 element_at terms (to escape the interpreted HOF lambda path) DOES
@@ -679,13 +699,11 @@ def ann_bruteforce(spark, sf):
             .select("vec_id", "label", F.round("_cos", 4).alias("cos_sim")))
 
 
-@q("ann_lsh", """
-SELECT (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END
-      + CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END
-      + CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END
-      + CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END
-      + CASE WHEN embedding[5] > 0 THEN 16 ELSE 0 END
-      + CASE WHEN embedding[6] > 0 THEN 32 ELSE 0 END) AS bucket,
+_LSH_BITS = 6
+
+
+@q("ann_lsh", f"""
+SELECT ({_sign_bucket_duck("embedding", _LSH_BITS)}) AS bucket,
        count(*) AS n, min(vec_id) AS min_vec
 FROM embeddings GROUP BY bucket ORDER BY bucket
 """)
@@ -695,13 +713,8 @@ def ann_lsh(spark, sf):
     similarity search: candidates are routed to one bucket's partition and
     scored there (ann_bruteforce within the bucket) — a co-partitioned
     equi-join instead of an all-pairs cross product."""
-    e = _t(spark, sf, "embeddings")
-    bucket = None
-    for i in range(6):
-        term = F.when(F.element_at("embedding", i + 1) > 0,
-                      F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    return (e.groupBy(bucket.alias("bucket"))
+    return (_t(spark, sf, "embeddings")
+            .groupBy(_sign_bucket(_LSH_BITS).alias("bucket"))
             .agg(F.count("*").alias("n"), F.min("vec_id").alias("min_vec"))
             .orderBy("bucket"))
 
@@ -756,8 +769,6 @@ def ann_ivf(spark, sf, nprobe: int = 4):
     data scanned); nprobe=1 — the prior contract — is the degenerate
     probe-own-list corner, kept reachable via the parameter (VERDICT
     r4 #7)."""
-    import numpy as np
-
     raw = _t(spark, sf, "embeddings").select("vec_id", "label", "embedding")
 
     # --- centroid matrix. These are exactly the N/64 rows the r5 plan fed
@@ -772,34 +783,23 @@ def ann_ivf(spark, sf, nprobe: int = 4):
         key=lambda r: r.vec_id)
     c_ids = np.array([r.vec_id for r in cent_rows], dtype=np.int64)
     c_mat = np.array([r.embedding for r in cent_rows], dtype=np.float64)
-    c_nrm = np.zeros(len(c_ids))
-    for i in range(_EMB_DIM):       # same fold order as the JVM norm
-        c_nrm += c_mat[:, i] * c_mat[:, i]
-    c_nrm = np.sqrt(c_nrm)
-    bc = spark.sparkContext.broadcast((c_ids, c_mat.T.copy(), c_nrm))
+    bc = spark.sparkContext.broadcast(
+        (c_ids, c_mat.T.copy(), _np_norms(c_mat)))
 
     def _assign(batches):
         # Arrow-batched inverted-list assignment (guide §4.2/§8: hand whole
         # batches to vectorized native code; the r5 JVM shape — crossJoin to
         # C rows per vector + interpreted HOF cosines + max_by — cost 89s at
-        # sf1.0 for the same answer). BIT-IDENTICAL to the JVM fold: the dot
-        # and norm accumulate dimension-by-dimension in ascending order over
-        # float64 (exactly `acc = 0.0; acc += v[i]*c[i]`), sqrt/division are
-        # IEEE-correctly-rounded in both runtimes, and np.argmax's
-        # first-maximum tiebreak == the oracle's (sim DESC, cid ASC)
-        # row_number because centroid columns are sorted by cid.
+        # sf1.0 for the same answer). BIT-IDENTICAL to the JVM fold
+        # (_np_dots/_np_norms), and np.argmax's first-maximum tiebreak ==
+        # the oracle's (sim DESC, cid ASC) row_number because centroid
+        # columns are sorted by cid.
         ids, cmT, cn = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            vn = np.zeros(len(v))
-            dots = np.zeros((len(v), len(ids)))
-            for i in range(_EMB_DIM):
-                vi = v[:, i]
-                vn += vi * vi
-                dots += vi[:, None] * cmT[i][None, :]
-            sims = dots / (np.sqrt(vn)[:, None] * cn[None, :])
+            sims = _np_dots(v, cmT) / (_np_norms(v)[:, None] * cn[None, :])
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
                 "label": pdf["label"].to_numpy(),
@@ -965,8 +965,7 @@ def doc_fingerprint(spark, sf):
     d = _t(spark, sf, "documents")
     return (d.select(
         "doc_id", F.md5(F.lower("text")).alias("fp"),
-        F.conv(F.substring(F.md5(F.lower("text")), 1, 15), 16, 10)
-        .cast("long").alias("fp60"))
+        hash64_col(F.lower("text")).alias("fp60"))
         .orderBy("doc_id").limit(300))
 
 
@@ -1153,8 +1152,6 @@ def audio_features(spark, sf):
            .select("audio_id", "pcm", "sample_rate", "n_samples"))
 
     def _feats(batches):
-        import numpy as np
-
         # Deliberately per-row: each buffer (4k-24k samples) is ALREADY a
         # single vectorized numpy reduction that stays cache-resident; the
         # Python loop costs microseconds against it. The "improvement" of
@@ -1211,8 +1208,6 @@ def video_frame_sample(spark, sf):
            .select("video_id", "frames", "n_frames", "w", "h"))
 
     def _sample(batches):
-        import numpy as np
-
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():

@@ -126,3 +126,25 @@ def test_payload_invariants_hold(crawl_run):
     lossy = ok[ok["psnr_db"].notna()]
     assert (lossy["psnr_db"] >= 40.0).all()
     assert len(lossy) > 0
+
+
+def test_retries_disjoint_from_url_seen(crawl_run):
+    """At every commit no retries row is for an already-seen URL. The retries
+    compaction relies on this to skip an O(history) anti-join against
+    url_seen. A terminal row leaked into retries changes no crawl order (the
+    seen gate drops it again each epoch), so only this check catches it."""
+    import pyarrow.parquet as pq
+
+    store = crawl_run["store"]
+
+    def hashes(name, cid):
+        return {h for f in store.files(name, cid)
+                for h in pq.read_table(f, columns=["url_hash"])
+                .column("url_hash").to_pylist()}
+
+    n_retry_commits = 0
+    for cid in store.commits():
+        retries = hashes("retries", cid)
+        n_retry_commits += bool(retries)
+        assert not retries & hashes("url_seen", cid), cid
+    assert n_retry_commits > 3

@@ -2,11 +2,13 @@
 
 A band/sign bucket holding k near-identical documents puts k^2 candidate
 pairs into ONE task under the naive bucket self-join — the mega-cluster
-failure of LSH dedup at 10^10 docs. ``textops._skew_safe_bucket_pairs``
-routes buckets over the cap through a salted two-phase triangle join whose
-per-cell pair count is ~cap^2 regardless of cluster size. These tests
-assert the salted path emits the IDENTICAL pair set (each unordered pair
-exactly once, id-ordered) and that per-task pair counts are bounded.
+failure of LSH dedup at 10^10 docs. ``textops._bucket_cells`` routes
+buckets over the cap into salted triangle cells whose pair count is ~cap^2
+regardless of cluster size; ``_skew_safe_bucket_pairs`` joins those cells
+and dedup_embedding scores them in Arrow. These tests assert that both
+consumers emit the IDENTICAL pair set through the salted cells (each
+unordered pair exactly once, id-ordered) and that per-task pair counts are
+bounded.
 """
 
 from __future__ import annotations
@@ -102,10 +104,11 @@ def test_salted_pairs_bounded_per_task(spark):
 
 
 def test_embedding_arrow_cells_identical_across_cap(spark, tmp_path):
-    """r6: dedup_embedding's Arrow in-bucket scorer reuses the salted
-    triangle-cell routing inline. Forcing a mega-bucket through a tiny cap
-    must yield the IDENTICAL pair set and cosines as the pure normal path
-    (cap -> inf), exercising diagonal and off-diagonal cells end to end."""
+    """r6: dedup_embedding's Arrow in-bucket scorer groups the cells of
+    ``_bucket_cells``, the routing the pair join uses. Forcing a mega-bucket
+    through a tiny cap must yield the IDENTICAL pair set and cosines as the
+    pure normal path (cap -> inf), exercising diagonal and off-diagonal
+    cells end to end."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
