@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 #: driver-contract queries timed at sf0.1 — the crawl-engine signature plans
 #: plus the heaviest training-data ops (dedup family, ANN, text analysis).
@@ -220,7 +219,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--frontier-only", type=int, default=0, metavar="N_URLS",
                     help="run only the frontier job over N_URLS rows")
-    ap.add_argument("--cpus", type=int, default=CPUS)
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="cores for local[N] (default: SparkTuning's)")
     ap.add_argument("--master", type=str, default="",
                     help="master override, e.g. local-cluster[4,2,6144] "
                          "(real executor JVMs; used for the N vs 4N "
@@ -250,10 +250,11 @@ def main() -> None:
             int(x) for x in args.master.split("[")[1].rstrip("]").split(",")]
         args.cpus = n_exec * n_cores
         extra["spark.executor.memory"] = f"{max(1024, mem_mb - 512)}m"
-    spark = get_spark(SparkTuning(
-        master=args.master or f"local[{args.cpus}]",
-        shuffle_partitions=max(8, args.cpus),
-        app_name="crawlspark-bench", extra=extra))
+    tuning = SparkTuning.for_cpus(
+        args.cpus, app_name="crawlspark-bench", extra=extra,
+        **({"master": args.master} if args.master else {}))
+    args.cpus = tuning.shuffle_partitions
+    spark = get_spark(tuning)
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.frontier_only:

@@ -25,7 +25,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main() -> None:
@@ -44,9 +43,7 @@ def main() -> None:
     from crawlspark.config import SparkTuning
     from crawlspark.session import get_spark
 
-    spark = get_spark(SparkTuning(master=f"local[{CPUS}]",
-                                  shuffle_partitions=max(8, CPUS),
-                                  app_name="crawlspark-bench-extra"))
+    spark = get_spark(SparkTuning(app_name="crawlspark-bench-extra"))
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()

@@ -37,10 +37,7 @@ def _spark(cpus: int | None = None):
     from .config import SparkTuning
     from .session import get_spark
 
-    n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    return get_spark(SparkTuning(master=f"local[{n}]",
-                                 shuffle_partitions=max(8, n),
-                                 app_name="crawlspark-cli"))
+    return get_spark(SparkTuning.for_cpus(cpus, app_name="crawlspark-cli"))
 
 
 def cmd_datagen(args) -> int:

@@ -16,6 +16,11 @@ from dataclasses import dataclass, field
 class CrawlConfig:
     """Semantics of one crawl run (shared engine <-> oracle).
 
+    Every field is either crawl semantics the oracle reads or loop cadence a
+    caller sets (the CLI, the benchmark); storage and filter tuning are
+    module constants where they are used (``bloom``/``cuckoo`` sizing and
+    rebuild thresholds, ``plans.crawler`` compaction and url_seen bucketing).
+
     Mirrors the reference's knobs:
       * ``batch_size``    — epoch pop cap (ref: batch 2000-20000,
                             /root/reference/src/main.py:132-137, ci_crawler.py:75-78)
@@ -36,33 +41,16 @@ class CrawlConfig:
     # Deterministic fetch simulation: outcome = mix(url_hash, attempt, epoch) % 1000.
     transient_fail_per_mille: int = 100   # -> status 'retry'
     secondary_limit_per_mille: int = 20   # -> status 'deferred' + host backoff
-    n_filter_buckets: int = 64            # seen_filter bucket count
-    bloom_bits_per_item: int = 10
-    bloom_num_hashes: int = 4
-    use_bloom: bool = True
-    # Saturation guard: a bucket whose post-update FPP estimate exceeds this
-    # is rebuilt from the full seen set at bits_per_item per actual item
-    # (bloom.rebuild_buckets) — without it, at 10^10 URLs the negative cache
-    # silently degrades to "exact anti-join for everything". None = off.
-    bloom_fpp_rebuild: float | None = 0.05
-    # Floor size of a bucket's bit array (bits). Keeps tiny first batches
-    # from allocating degenerate arrays; also the saturation point scale for
-    # small deployments (fpp crosses the threshold near 0.16 x this).
-    bloom_min_bits: int = 1 << 13
+    # Host-hash bucket count of the seen filter and of epoch_metrics.
+    n_filter_buckets: int = 64
     # Negative-cache backend: "bloom" (10 bits/item, ~1.2% FPP, no deletes)
     # or "cuckoo" (16-bit fingerprints x 4 slots, ~0.012% FPP, O(1)/item
     # deletion -> recrawl/forget without a bucket rebuild). Both share the
     # two-phase probe->exact-verify contract, so the crawl SEMANTICS
     # (ordering, final seen set) are backend-invariant — asserted by
-    # tests/test_cuckoo.py's loop-parity test. use_bloom=False disables the
-    # negative cache entirely (every candidate takes the exact anti-join).
+    # tests/test_cuckoo.py's loop-parity test. Read only by
+    # operators.dedup.seen_filter_ops.
     seen_filter_backend: str = "bloom"
-    cuckoo_slots_per_row: int = 4
-    cuckoo_min_rows: int = 1 << 9
-    # Rebuild a cuckoo bucket from the full seen set when its post-insert
-    # load factor would cross this (4-slot cuckoo degrades past ~0.95; 0.85
-    # leaves kick headroom) — the analog of bloom_fpp_rebuild. None = off.
-    cuckoo_load_rebuild: float | None = 0.85
     # TTL recrawl (0 = off): every `recrawl_every` epochs, forget the
     # oldest-terminally-crawled URLs whose last crawl is >= recrawl_ttl_epochs
     # old (up to recrawl_topk per pass) so the normal epoch loop re-admits
@@ -80,15 +68,6 @@ class CrawlConfig:
     compact_every: int = 0
     compact_target_files: int = 4
     vacuum_keep_last: int = 3
-    # In-loop compaction is incremental (bin-pack): only files below this
-    # size are absorbed, so steady-state maintenance is O(new small files),
-    # never O(table). None = wholesale rewrite every maintenance pass.
-    compact_small_file_bytes: int | None = 64 << 20
-    # Maintain url_seen key-hash BUCKETED (merge_buckets file-sets) so the
-    # TTL-recrawl forget is a bucket-scoped DELETE, never an O(table)
-    # rewrite. 0 = unbucketed (plain compaction). At production scale this
-    # is sized so one bucket ~ one task's worth of seen rows.
-    useen_n_buckets: int = 16
 
     def backoff_epochs(self, attempt: int) -> int:
         """Exponential backoff in epochs for a row about to carry `attempt`
@@ -123,6 +102,14 @@ class SparkTuning:
     app_name: str = "crawlspark"
     extra: dict = field(default_factory=dict)
     gc_opts: str = "-XX:+UseParallelGC"
+
+    @classmethod
+    def for_cpus(cls, cpus: int | None = None, **kw) -> "SparkTuning":
+        """The machine-sized defaults, or ``local[cpus]`` with ``cpus``
+        shuffle partitions when an entry point is given explicit cores."""
+        if cpus:
+            kw = {"master": f"local[{cpus}]", "shuffle_partitions": cpus, **kw}
+        return cls(**kw)
 
 
 def choose_prefix(remaining: dict, batch_size: int) -> int:

@@ -17,6 +17,10 @@ n_items:int64, epoch:int32)``, appended per epoch (only touched buckets);
 readers take the latest row per bucket. Probe and update run as
 ``cogroup(...).applyInPandas`` so each bucket's bit array crosses the Arrow
 boundary once per task, never once per row.
+
+The seen-filter interface, shared with :mod:`crawlspark.operators.cuckoo`
+(``dedup.seen_filter_ops`` picks the module): :func:`probe`,
+:func:`updated_buckets` and :func:`forgotten_buckets`.
 """
 
 from __future__ import annotations
@@ -28,6 +32,20 @@ from pyspark.sql import functions as F
 
 FILTER_SCHEMA = "bucket int, bits binary, n_items long, epoch int"
 _PROBE_SCHEMA = "url_hash long, maybe_seen boolean"
+
+# Design point: 10 bits per item and 4 hashes, ~1.2% FPP.
+BITS_PER_ITEM = 10
+NUM_HASHES = 4
+# Floor size of a bucket's bit array (bits). Keeps tiny first batches from
+# allocating degenerate arrays; also the saturation scale for small
+# deployments (the FPP crosses FPP_REBUILD near 0.16 x this many items).
+MIN_BITS = 1 << 13
+# Saturation guard: a bucket whose post-update FPP estimate exceeds this is
+# rebuilt from the full seen set at BITS_PER_ITEM per actual item — without
+# it, at 10^10 URLs the negative cache silently degrades to "exact anti-join
+# for everything". Each operator reads these constants on the driver into
+# locals its Arrow closures capture.
+FPP_REBUILD = 0.05
 
 # independent bit positions via splitmix-style remix of the 60-bit url hash
 _MIX1 = np.uint64(0xBF58476D1CE4E5B9)
@@ -75,12 +93,12 @@ def latest_filter(filters: DataFrame | None) -> DataFrame | None:
 
 
 def probe(candidates: DataFrame, filters: DataFrame | None,
-          n_buckets: int, num_hashes: int) -> DataFrame:
+          n_buckets: int) -> DataFrame:
     """Adds boolean ``maybe_seen`` to candidates (keyed by ``url_hash`` and
     ``host_hash``). With no filter state yet, everything is definitely new."""
     if filters is None:
         return candidates.withColumn("maybe_seen", F.lit(False))
-    k = num_hashes
+    k = NUM_HASHES
     cand_b = candidates.withColumn("bucket",
                                    F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
     flt = latest_filter(filters)
@@ -105,15 +123,14 @@ def probe(candidates: DataFrame, filters: DataFrame | None,
 
 
 def saturated_buckets(new_seen: DataFrame, filters: DataFrame,
-                      n_buckets: int, num_hashes: int,
-                      threshold: float) -> list[int]:
-    """Buckets whose post-update FPP estimate would exceed ``threshold``:
+                      n_buckets: int) -> list[int]:
+    """Buckets whose post-update FPP estimate would exceed ``FPP_REBUILD``:
     per-bucket new-item counts joined against the current filter state, the
     standard bloom FPP ``(1 - e^(-k*n/m))^k`` evaluated as JVM exprs. The
     result is driver bookkeeping (<= n_buckets rows) steering THIS commit's
     rebuild routing. Buckets with no prior filter row cannot saturate — a
-    fresh bucket is sized at ``bits_per_item`` per item on creation."""
-    k = num_hashes
+    fresh bucket is sized at ``BITS_PER_ITEM`` per item on creation."""
+    k = NUM_HASHES
     counts = (new_seen
               .withColumn("bucket",
                           F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
@@ -124,21 +141,20 @@ def saturated_buckets(new_seen: DataFrame, filters: DataFrame,
     fpp = F.pow(F.lit(1.0) - F.exp(-F.lit(float(k)) * n_total / F.col("m_bits")),
                 F.lit(float(k)))
     return sorted(r["bucket"] for r in counts.join(state, "bucket")
-                  .filter(fpp > threshold).select("bucket").collect())
+                  .filter(fpp > FPP_REBUILD).select("bucket").collect())
 
 
 def rebuild_buckets(all_seen: DataFrame, buckets: list[int],
-                    n_buckets: int, num_hashes: int, bits_per_item: int,
-                    epoch: int, min_bits: int = 1 << 13) -> DataFrame:
+                    n_buckets: int, epoch: int) -> DataFrame:
     """Fresh filter rows for ``buckets``, rebuilt from the FULL seen set at
-    ``bits_per_item`` per actual item — the saturation answer: the new array
+    ``BITS_PER_ITEM`` per actual item — the saturation answer: the new array
     is sized to the bucket's real cardinality, restoring the design-point FPP
     (~1.2% at 10 bits / 4 hashes). ``all_seen`` needs url_hash + host_hash
     and must include the current epoch's new rows. One groupBy+applyInPandas
     pass over only the saturated buckets' rows — O(bucket), not O(table).
     FP-safety holds by construction: every seen hash sets its bits in the
     rebuilt array, so no false negatives are possible."""
-    k = num_hashes
+    k, bits_per_item, min_bits = NUM_HASHES, BITS_PER_ITEM, MIN_BITS
     sb = (all_seen
           .withColumn("bucket",
                       F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
@@ -158,10 +174,8 @@ def rebuild_buckets(all_seen: DataFrame, buckets: list[int],
 
 
 def updated_buckets(new_seen: DataFrame, filters: DataFrame | None,
-                    n_buckets: int, num_hashes: int, bits_per_item: int,
-                    epoch: int, min_bits: int = 1 << 13,
-                    all_seen: DataFrame | None = None,
-                    fpp_rebuild: float | None = None) -> DataFrame:
+                    n_buckets: int, epoch: int,
+                    all_seen: DataFrame | None = None) -> DataFrame:
     """New filter rows for buckets receiving items this epoch (append these;
     untouched buckets keep their previous row). ``new_seen`` needs
     ``url_hash`` + ``host_hash``.
@@ -170,25 +184,24 @@ def updated_buckets(new_seen: DataFrame, filters: DataFrame | None,
     and thereafter only accumulates set bits, so across enough epochs its
     FPP climbs toward 1 and the negative cache silently degrades to "exact
     anti-join for everything" — the precise failure the two-phase design
-    exists to avoid (SURVEY §4.2). When ``fpp_rebuild`` and ``all_seen``
-    (the full seen set INCLUDING this epoch's rows) are supplied, buckets
-    whose post-update :func:`fpp_estimate` would exceed the threshold are
-    rebuilt from scratch at ``bits_per_item`` per actual item
+    exists to avoid (SURVEY §4.2). When ``all_seen`` (the full seen set
+    INCLUDING this epoch's rows) is supplied, buckets whose post-update
+    :func:`fpp_estimate` would exceed ``FPP_REBUILD`` are rebuilt from
+    scratch at ``BITS_PER_ITEM`` per actual item
     (:func:`rebuild_buckets`) instead of bit-or-updated; all other buckets
     take the normal incremental path. The rebuild touches only the
     saturated buckets' seen rows — per-epoch maintenance stays O(new items
     + saturated buckets), never O(all buckets)."""
-    k = num_hashes
+    k, bits_per_item, min_bits = NUM_HASHES, BITS_PER_ITEM, MIN_BITS
     nb = new_seen.withColumn("bucket",
                              F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
     flt = latest_filter(filters)
 
     sat: list[int] = []
-    if fpp_rebuild is not None and all_seen is not None and flt is not None:
-        sat = saturated_buckets(new_seen, filters, n_buckets, k, fpp_rebuild)
+    if all_seen is not None and flt is not None:
+        sat = saturated_buckets(new_seen, filters, n_buckets)
     if sat:
-        rebuilt = rebuild_buckets(all_seen, sat, n_buckets, k,
-                                  bits_per_item, epoch, min_bits)
+        rebuilt = rebuild_buckets(all_seen, sat, n_buckets, epoch)
         nb = nb.filter(~F.col("bucket").isin(sat))
 
     if flt is None:
@@ -222,6 +235,21 @@ def updated_buckets(new_seen: DataFrame, filters: DataFrame | None,
     if sat:
         updated = updated.unionByName(rebuilt)
     return updated
+
+
+def forgotten_buckets(hit: DataFrame, remaining: DataFrame,
+                      filters: DataFrame, n_buckets: int,
+                      epoch: int) -> DataFrame:
+    """New filter rows after ``hit`` leaves the seen set. Bits are shared,
+    so clearing one would false-negative other URLs: the buckets ``hit``
+    touches are instead rebuilt from ``remaining`` (the seen set after the
+    forget) — O(bucket), the cost cuckoo's delete avoids. Both frames need
+    ``url_hash`` + ``host_hash``; ``filters`` is not read (a rebuild needs
+    no prior state)."""
+    touched = sorted(r["bucket"] for r in hit.select(
+        F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int")
+        .alias("bucket")).distinct().collect())
+    return rebuild_buckets(remaining, touched, n_buckets, epoch)
 
 
 def fpp_estimate(n_items: int, m_bits: int, k: int) -> float:

@@ -18,7 +18,8 @@ mutates freely (/root/reference/src/infrastructure/github_api.py:463,548-555);
 
 Design (partial-key cuckoo hashing, Fan et al. 2014, public):
 
-* 16-bit nonzero fingerprints, ``b`` slots per row, ``m`` rows (power of 2);
+* 16-bit nonzero fingerprints, ``SLOTS`` = 4 per row, ``m`` rows (power of
+  2); a row is one little-endian uint64, which the hot paths exploit;
 * row1 = h(x) & (m-1); row2 = row1 ^ (h'(fp) & (m-1)) — an involution, so
   either row recovers the other without the original key;
 * batch insert is fully vectorized (no per-row Python, per input_hint):
@@ -35,14 +36,20 @@ At 10 bits/item the bloom design point is ~1.2% FPP; cuckoo at 16-bit
 fingerprints / 4 slots is ~2b/2^16 ≈ 0.012% FPP at ~32-38 bits/item once
 headroom (alpha 0.5 sizing, 0.85 rebuild trigger) is counted — the classic
 memory-vs-FPP-vs-deletability trade measured in tools/bench_cuckoo.py.
+
+It exposes the same three functions as bloom, with the same signatures
+(``dedup.seen_filter_ops`` picks the module): :func:`probe`,
+:func:`updated_buckets` and :func:`forgotten_buckets`.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .bloom import latest_filter
 
 FILTER_SCHEMA = ("bucket int, slots binary, n_items long, "
                  "overflow boolean, epoch int")
@@ -54,6 +61,15 @@ _ALT_MIX = np.uint64(0x5BD1E995)         # MurmurHash2 constant (public)
 
 _MAX_ROUNDS = 64     # bounded vectorized kick rounds per batch insert
 _DEL_SWEEPS = 4      # bounded delete sweeps (collision retry)
+
+SLOTS = 4            # fingerprints per row: one row is one uint64
+# Floor row count of a bucket's table.
+MIN_ROWS = 1 << 9
+# Rebuild a bucket from the full seen set when its post-insert load factor
+# would cross this (4-slot cuckoo degrades past ~0.95; 0.85 leaves kick
+# headroom) — the analog of bloom.FPP_REBUILD. Each operator reads these
+# constants on the driver into locals its Arrow closures capture.
+LOAD_REBUILD = 0.85
 
 
 def _fingerprints(hashes: np.ndarray) -> np.ndarray:
@@ -83,7 +99,7 @@ def _alt_row(rows: np.ndarray, fps: np.ndarray, m_rows: int) -> np.ndarray:
             ^ (h & np.uint64(m_rows - 1)).astype(np.int64))
 
 
-# b=4 fast-path lookup tables: a row of 4 uint16 slots is one uint64.
+# Lookup tables for the row-as-uint64 layout (4 uint16 slots per row).
 # _NFREE_LUT[pat] = popcount of the 4-bit free pattern; _SLOT_LUT[pat, j] =
 # column of the j-th free slot (garbage past nfree, masked by the caller).
 _NFREE_LUT = np.array([bin(p).count("1") for p in range(16)], dtype=np.int64)
@@ -115,7 +131,6 @@ def _place_round(tab: np.ndarray, fp: np.ndarray, r: np.ndarray) -> np.ndarray:
     n = fp.size
     if n == 0:
         return np.zeros(0, dtype=bool)
-    m, b = tab.shape
     order = np.argsort(r, kind="stable")
     r_s = r[order]
     fp_s = fp[order]
@@ -126,18 +141,10 @@ def _place_round(tab: np.ndarray, fp: np.ndarray, r: np.ndarray) -> np.ndarray:
     starts = np.flatnonzero(grp_start)
     counts = np.diff(np.append(starts, n))
     rank = idx - np.repeat(starts, counts)      # position within row group
-    if b == 4:
-        pat = _free_pattern(tab, r_s)
-        nfree = _NFREE_LUT[pat]
-        can = rank < nfree
-        slot = _SLOT_LUT[pat, np.minimum(rank, 3)]
-    else:
-        free = tab[r_s] == 0                    # (n, b), gathered pre-write
-        nfree = free.sum(axis=1)
-        can = rank < nfree
-        slot_order = np.argsort(~free, axis=1, kind="stable")
-        slot = slot_order[idx, np.minimum(rank, b - 1)]
-    flat = r_s[can] * b + slot[can]             # distinct (row, slot) pairs
+    pat = _free_pattern(tab, r_s)
+    can = rank < _NFREE_LUT[pat]
+    slot = _SLOT_LUT[pat, np.minimum(rank, SLOTS - 1)]
+    flat = r_s[can] * SLOTS + slot[can]         # distinct (row, slot) pairs
     tab.reshape(-1)[flat] = fp_s[can]
     placed = np.zeros(n, dtype=bool)
     placed[order] = can
@@ -145,10 +152,10 @@ def _place_round(tab: np.ndarray, fp: np.ndarray, r: np.ndarray) -> np.ndarray:
 
 
 def _insert_batch(tab: np.ndarray, hashes: np.ndarray) -> int:
-    """Insert unique ``hashes`` into ``tab`` (m, b). Returns the number of
-    fingerprints that could NOT be placed within the kick budget (callers
+    """Insert unique ``hashes`` into ``tab`` (m, SLOTS). Returns the number
+    of fingerprints that could NOT be placed within the kick budget (callers
     must then mark the bucket overflowed — nothing is silently dropped)."""
-    m, b = tab.shape
+    m = tab.shape[0]
     fp = _fingerprints(hashes)
     r = _row1(hashes, m)
     alt = _alt_row(r, fp, m)
@@ -161,7 +168,7 @@ def _insert_batch(tab: np.ndarray, hashes: np.ndarray) -> int:
         if fp.size == 0:
             return 0
         # Eviction: one kicker per distinct full row swaps with the victim
-        # in slot (rnd % b); the victim re-enters pending aimed at ITS
+        # in slot (rnd % SLOTS); the victim re-enters pending aimed at ITS
         # partner row. Everyone else retries their own partner row.
         order = np.argsort(r, kind="stable")
         r_s = r[order]
@@ -170,7 +177,7 @@ def _insert_batch(tab: np.ndarray, hashes: np.ndarray) -> int:
         first[1:] = r_s[1:] != r_s[:-1]
         kicker = order[first]                   # indices into pending
         rows_k = r[kicker]
-        slot_k = rnd % b
+        slot_k = rnd % SLOTS
         victims = tab[rows_k, slot_k].copy()    # nonzero: rows are full here
         tab[rows_k, slot_k] = fp[kicker]
         v_alt = _alt_row(rows_k, victims, m)
@@ -196,14 +203,11 @@ def _row_has_fp(tab: np.ndarray, rows: np.ndarray, fp: np.ndarray) -> np.ndarray
 
 
 def _probe_batch(tab: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    m, b = tab.shape
+    m = tab.shape[0]
     fp = _fingerprints(hashes)
     r1 = _row1(hashes, m)
     r2 = _alt_row(r1, fp, m)
-    if b == 4:
-        return _row_has_fp(tab, r1, fp) | _row_has_fp(tab, r2, fp)
-    return ((tab[r1] == fp[:, None]).any(axis=1)
-            | (tab[r2] == fp[:, None]).any(axis=1))
+    return _row_has_fp(tab, r1, fp) | _row_has_fp(tab, r2, fp)
 
 
 def _delete_batch(tab: np.ndarray, hashes: np.ndarray) -> int:
@@ -215,7 +219,7 @@ def _delete_batch(tab: np.ndarray, hashes: np.ndarray) -> int:
     hashes = np.unique(hashes)
     if hashes.size == 0:
         return 0
-    m, b = tab.shape
+    m, b = tab.shape[0], SLOTS
     fp = _fingerprints(hashes)
     r1 = _row1(hashes, m)
     r2 = _alt_row(r1, fp, m)
@@ -247,37 +251,27 @@ def _delete_batch(tab: np.ndarray, hashes: np.ndarray) -> int:
     return n_deleted
 
 
-def _size_rows(n_items: int, slots_per_row: int, min_rows: int,
-               alpha: float = 0.5) -> int:
+def _size_rows(n_items: int, min_rows: int, alpha: float = 0.5) -> int:
     """Power-of-two row count targeting load factor ``alpha`` — headroom so
-    bounded kicks essentially never overflow before the 0.85 rebuild
+    bounded kicks essentially never overflow before the LOAD_REBUILD
     trigger fires."""
-    need = max(int(min_rows), int(np.ceil(n_items / (slots_per_row * alpha)))
+    need = max(int(min_rows), int(np.ceil(n_items / (SLOTS * alpha)))
                if n_items else int(min_rows))
     return 1 << int(np.ceil(np.log2(max(1, need))))
 
 
-def _unpack(blob: bytes, slots_per_row: int) -> np.ndarray:
+def _unpack(blob: bytes) -> np.ndarray:
     arr = np.frombuffer(blob, dtype=np.uint16).copy()
-    return arr.reshape(-1, slots_per_row)
-
-
-def latest_filter(filters: DataFrame | None) -> DataFrame | None:
-    if filters is None:
-        return None
-    w = Window.partitionBy("bucket").orderBy(F.desc("epoch"))
-    return (filters.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
+    return arr.reshape(-1, SLOTS)
 
 
 def probe(candidates: DataFrame, filters: DataFrame | None,
-          n_buckets: int, slots_per_row: int) -> DataFrame:
+          n_buckets: int) -> DataFrame:
     """Adds boolean ``maybe_seen`` (keyed by ``url_hash`` + ``host_hash``).
     Overflowed buckets answer maybe-seen for everything — degrading to the
     exact path, never dropping a URL."""
     if filters is None:
         return candidates.withColumn("maybe_seen", F.lit(False))
-    b = slots_per_row
     cand_b = candidates.withColumn(
         "bucket", F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
     flt = latest_filter(filters)
@@ -292,8 +286,7 @@ def probe(candidates: DataFrame, filters: DataFrame | None,
         elif bool(flt_pdf["overflow"].iloc[0]):
             seen = np.ones(len(cand_pdf), dtype=bool)
         else:
-            tab = _unpack(flt_pdf["slots"].iloc[0], b)
-            seen = _probe_batch(tab, hashes)
+            seen = _probe_batch(_unpack(flt_pdf["slots"].iloc[0]), hashes)
         return pd.DataFrame({"url_hash": hashes, "maybe_seen": seen})
 
     probed = (cand_b.select("bucket", "url_hash").groupBy("bucket")
@@ -304,9 +297,8 @@ def probe(candidates: DataFrame, filters: DataFrame | None,
 
 
 def saturated_buckets(new_seen: DataFrame, filters: DataFrame,
-                      n_buckets: int, slots_per_row: int,
-                      threshold: float) -> list[int]:
-    """Buckets whose post-insert load factor would exceed ``threshold``, or
+                      n_buckets: int) -> list[int]:
+    """Buckets whose post-insert load factor would exceed ``LOAD_REBUILD``, or
     that already overflowed — driver bookkeeping (<= n_buckets rows)
     steering THIS commit's rebuild routing, exactly like
     :func:`bloom.saturated_buckets`."""
@@ -319,18 +311,17 @@ def saturated_buckets(new_seen: DataFrame, filters: DataFrame,
         (F.length("slots") / 2).cast("double").alias("capacity"))
     load = (F.col("n_items") + F.col("n_new")).cast("double") / F.col("capacity")
     return sorted(r["bucket"] for r in counts.join(state, "bucket")
-                  .filter((load > threshold) | F.col("overflow"))
+                  .filter((load > LOAD_REBUILD) | F.col("overflow"))
                   .select("bucket").collect())
 
 
 def rebuild_buckets(all_seen: DataFrame, buckets: list[int],
-                    n_buckets: int, slots_per_row: int,
-                    epoch: int, min_rows: int = 1 << 9) -> DataFrame:
+                    n_buckets: int, epoch: int) -> DataFrame:
     """Fresh filter rows for ``buckets`` rebuilt from the FULL seen set at
     alpha=0.5 sizing. In-UDF retry doubles the table on the (vanishingly
     rare at alpha 0.5) residual overflow — safe here because the raw hashes
     are in hand, unlike an in-place grow of fingerprint-only state."""
-    b = slots_per_row
+    min_rows = MIN_ROWS
     sb = (all_seen
           .withColumn("bucket",
                       F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
@@ -339,16 +330,16 @@ def rebuild_buckets(all_seen: DataFrame, buckets: list[int],
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         bucket = int(pdf["bucket"].iloc[0])
         hashes = pdf["url_hash"].unique()
-        m = _size_rows(len(hashes), b, min_rows)
+        m = _size_rows(len(hashes), min_rows)
         for _ in range(3):
-            tab = np.zeros((m, b), dtype=np.uint16)
+            tab = np.zeros((m, SLOTS), dtype=np.uint16)
             if _insert_batch(tab, hashes) == 0:
                 return pd.DataFrame({
                     "bucket": [bucket], "slots": [tab.tobytes()],
                     "n_items": [len(hashes)], "overflow": [False],
                     "epoch": [epoch]})
             m *= 2
-        tab = np.zeros((m, b), dtype=np.uint16)
+        tab = np.zeros((m, SLOTS), dtype=np.uint16)
         over = _insert_batch(tab, hashes) > 0
         return pd.DataFrame({
             "bucket": [bucket], "slots": [tab.tobytes()],
@@ -359,26 +350,25 @@ def rebuild_buckets(all_seen: DataFrame, buckets: list[int],
 
 
 def updated_buckets(new_seen: DataFrame, filters: DataFrame | None,
-                    n_buckets: int, slots_per_row: int, epoch: int,
-                    min_rows: int = 1 << 9,
-                    all_seen: DataFrame | None = None,
-                    load_rebuild: float | None = 0.85) -> DataFrame:
+                    n_buckets: int, epoch: int,
+                    all_seen: DataFrame | None = None) -> DataFrame:
     """New filter rows for buckets receiving items this epoch (append these;
     untouched buckets keep their previous row) — the cuckoo analog of
     :func:`bloom.updated_buckets`, same saturation discipline: buckets whose
-    post-insert load would cross ``load_rebuild`` (or that overflowed) are
-    rebuilt from ``all_seen`` at design-point sizing instead of updated."""
-    b = slots_per_row
+    post-insert load would cross ``LOAD_REBUILD`` (or that overflowed) are
+    rebuilt from ``all_seen``, when supplied, at design-point sizing instead
+    of updated."""
+    min_rows = MIN_ROWS
     nb = new_seen.withColumn(
         "bucket", F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
     flt = latest_filter(filters)
 
     sat: list[int] = []
-    if load_rebuild is not None and all_seen is not None and flt is not None:
-        sat = saturated_buckets(new_seen, filters, n_buckets, b, load_rebuild)
+    if all_seen is not None and flt is not None:
+        sat = saturated_buckets(new_seen, filters, n_buckets)
     rebuilt = None
     if sat:
-        rebuilt = rebuild_buckets(all_seen, sat, n_buckets, b, epoch, min_rows)
+        rebuilt = rebuild_buckets(all_seen, sat, n_buckets, epoch)
         nb = nb.filter(~F.col("bucket").isin(sat))
 
     if flt is None:
@@ -395,11 +385,11 @@ def updated_buckets(new_seen: DataFrame, filters: DataFrame | None,
         bucket = int(new_pdf["bucket"].iloc[0])
         hashes = new_pdf["url_hash"].unique()
         if flt_pdf.empty:
-            m = _size_rows(len(hashes), b, min_rows)
-            tab = np.zeros((m, b), dtype=np.uint16)
+            m = _size_rows(len(hashes), min_rows)
+            tab = np.zeros((m, SLOTS), dtype=np.uint16)
             n_old, was_over = 0, False
         else:
-            tab = _unpack(flt_pdf["slots"].iloc[0], b)
+            tab = _unpack(flt_pdf["slots"].iloc[0])
             n_old = int(flt_pdf["n_items"].iloc[0])
             was_over = bool(flt_pdf["overflow"].iloc[0])
         over = _insert_batch(tab, hashes) > 0 or was_over
@@ -415,17 +405,17 @@ def updated_buckets(new_seen: DataFrame, filters: DataFrame | None,
     return updated
 
 
-def deleted_buckets(del_rows: DataFrame, filters: DataFrame,
-                    n_buckets: int, slots_per_row: int,
-                    epoch: int) -> DataFrame:
-    """New filter rows with ``del_rows``' fingerprints removed — the
-    operation bloom structurally cannot do (bits are shared; clearing one
-    would false-negative other URLs). Cost: O(deleted items) touching only
-    their buckets, vs bloom's full-bucket rebuild for the same semantics.
-    ``del_rows`` needs ``url_hash`` + ``host_hash``. Untouched buckets get
-    no row (append result; latest-per-bucket readers see the rest)."""
-    b = slots_per_row
-    db = del_rows.withColumn(
+def forgotten_buckets(hit: DataFrame, remaining: DataFrame,
+                      filters: DataFrame, n_buckets: int,
+                      epoch: int) -> DataFrame:
+    """New filter rows with ``hit``'s fingerprints removed — the operation
+    bloom structurally cannot do (bits are shared; clearing one would
+    false-negative other URLs). Cost: O(deleted items) touching only their
+    buckets, vs bloom's full-bucket rebuild from ``remaining``, which this
+    backend does not read. ``hit`` needs ``url_hash`` + ``host_hash``.
+    Untouched buckets get no row (append result; latest-per-bucket readers
+    see the rest)."""
+    db = hit.withColumn(
         "bucket", F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
     flt = latest_filter(filters)
 
@@ -439,7 +429,7 @@ def deleted_buckets(del_rows: DataFrame, filters: DataFrame,
         if del_pdf.empty or flt_pdf.empty:
             return empty                       # nothing stored -> no-op
         bucket = int(del_pdf["bucket"].iloc[0])
-        tab = _unpack(flt_pdf["slots"].iloc[0], b)
+        tab = _unpack(flt_pdf["slots"].iloc[0])
         n_del = _delete_batch(tab, del_pdf["url_hash"].to_numpy())
         n_items = max(0, int(flt_pdf["n_items"].iloc[0]) - n_del)
         return pd.DataFrame({"bucket": [bucket], "slots": [tab.tobytes()],

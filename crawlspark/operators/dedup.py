@@ -8,10 +8,12 @@
                        The engine's one supersede; its reference is
                        ``oracle.simulator.supersede_rows``
                        (tests/test_politeness.py).
-* ``not_seen``       — exact anti-join against url_seen, optionally fronted by
-                       the partitioned bloom probe (negative cache; positives
-                       are always re-checked exactly, so bloom FPs never drop
+* ``not_seen``       — exact anti-join against url_seen, fronted by the
+                       seen-filter probe (negative cache; positives are
+                       always re-checked exactly, so filter FPs never drop
                        or spuriously admit a URL).
+* ``seen_filter_ops`` — the seen-filter backend module (bloom or cuckoo) a
+                       config selects.
 * ``robots_flag``    — per-host disallow-prefix flag with the robots table
                        broadcast (north_rule), evaluated at enqueue time.
 """
@@ -58,19 +60,25 @@ def supersede(pending: DataFrame) -> DataFrame:
             .select("_w.*"))
 
 
+_SEEN_FILTERS = {"bloom": bloom_ops, "cuckoo": cuckoo_ops}
+
+
+def seen_filter_ops(cfg: CrawlConfig):
+    """The seen-filter backend module ``cfg.seen_filter_backend`` names.
+    Both expose ``probe``, ``updated_buckets`` and ``forgotten_buckets``
+    with the same signatures, so callers go through the returned module and
+    never branch on the backend."""
+    return _SEEN_FILTERS[cfg.seen_filter_backend]
+
+
 def not_seen(candidates: DataFrame, url_seen: DataFrame | None,
              seen_filter: DataFrame | None, cfg: CrawlConfig) -> DataFrame:
     """Rows whose url_hash is not in the persistent seen set."""
     if url_seen is None:
         return candidates
-    if cfg.use_bloom and seen_filter is not None:
-        if cfg.seen_filter_backend == "cuckoo":
-            probed = cuckoo_ops.probe(candidates, seen_filter,
-                                      cfg.n_filter_buckets,
-                                      cfg.cuckoo_slots_per_row)
-        else:
-            probed = bloom_ops.probe(candidates, seen_filter,
-                                     cfg.n_filter_buckets, cfg.bloom_num_hashes)
+    if seen_filter is not None:
+        probed = seen_filter_ops(cfg).probe(candidates, seen_filter,
+                                            cfg.n_filter_buckets)
         fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
         checked = maybe.join(url_seen.select("url_hash"), "url_hash", "left_anti")

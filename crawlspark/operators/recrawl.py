@@ -14,10 +14,9 @@ cannot, which is why the cuckoo backend exists).
   loose appends) are rewritten, every other bucket's files keep their
   exact paths — O(touched + loose), the Iceberg ``DELETE WHERE`` analog.
   Unbucketed tables fall back to a wholesale replace;
-* ``seen_filter``   — backend-dependent:
-  - cuckoo: ``deleted_buckets`` clears one fingerprint per target —
-    O(targets), touching only their buckets (the delete-capable filter's
-    whole point);
+* ``seen_filter``   — the backend's ``forgotten_buckets``:
+  - cuckoo clears one fingerprint per target — O(targets), touching only
+    their buckets (the delete-capable filter's whole point);
   - bloom: bits are shared so nothing can be cleared without false
     negatives for OTHER urls — the touched buckets are REBUILT from the
     remaining seen rows (O(bucket), correct but strictly costlier; the
@@ -36,8 +35,6 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from .. import tables as tbl
 from ..tables import SnapshotStore
-from . import bloom as bloom_ops
-from . import cuckoo as cuckoo_ops
 from . import dedup
 
 
@@ -72,15 +69,7 @@ def forget_urls(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
         # appends; every other bucket's files keep their exact paths — the
         # forget is O(touched buckets + loose), never O(table), which is
         # what makes TTL recrawl viable against a 10^10-row seen set
-        import os
         key_col, n_b = spec["key"], int(spec["n"])
-        # mirror compact_bucketed/read(): if url_seen's live files span >1
-        # recorded schema fingerprint, a plain read takes the FIRST footer's
-        # schema and the rewrite would silently drop newer columns from the
-        # rewritten buckets — union schemas exactly when evolution happened
-        evolved = store.needs_merge("url_seen")
-        reader = (spark.read.option("mergeSchema", "true")
-                  if evolved else spark.read)
         bucket_of = F.pmod(F.xxhash64(F.col(key_col)),
                            F.lit(n_b)).cast("int")
         touched = sorted({str(r["_b"]) for r in
@@ -93,11 +82,10 @@ def forget_urls(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
         slice_df = None
         for fs, label in ((tfiles, bucket_of), (loose, F.lit(-1))):
             if fs:
-                part = (reader.parquet(*[os.path.join(store.root, f)
-                                         for f in fs])
+                part = (store.read_files(spark, "url_seen", fs)
                         .withColumn("_bucket", label))
                 slice_df = (part if slice_df is None else slice_df
-                            .unionByName(part, allowMissingColumns=evolved))
+                            .unionByName(part, allowMissingColumns=True))
         staged = store.stage_groups(
             slice_df.join(keys, "url_hash", "left_anti"), "url_seen",
             "_bucket")
@@ -114,20 +102,9 @@ def forget_urls(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
 
     appends: dict = {}
     seen_filter = store.read(spark, "seen_filter")
-    if cfg.use_bloom and seen_filter is not None:
-        if cfg.seen_filter_backend == "cuckoo":
-            flt_new = cuckoo_ops.deleted_buckets(
-                hit.select("url_hash", "host_hash"), seen_filter,
-                cfg.n_filter_buckets, cfg.cuckoo_slots_per_row, epoch)
-        else:
-            touched = sorted(
-                r["bucket"] for r in hit.select(
-                    F.pmod(F.col("host_hash"), F.lit(cfg.n_filter_buckets))
-                    .cast("int").alias("bucket")).distinct().collect())
-            flt_new = bloom_ops.rebuild_buckets(
-                remaining.select("url_hash", "host_hash"), touched,
-                cfg.n_filter_buckets, cfg.bloom_num_hashes,
-                cfg.bloom_bits_per_item, epoch, min_bits=cfg.bloom_min_bits)
+    if seen_filter is not None:
+        flt_new = dedup.seen_filter_ops(cfg).forgotten_buckets(
+            hit, remaining, seen_filter, cfg.n_filter_buckets, epoch)
         staged = store.stage(flt_new, "seen_filter")
         if staged:
             appends["seen_filter"] = staged

@@ -24,6 +24,16 @@ from ..operators.recrawl import recrawl_pass
 from ..tables import SnapshotStore, ordered_files
 from .epoch import EpochResult, record_failed_epoch, run_epoch
 
+# In-loop compaction is incremental (bin-pack): only files below this size
+# are absorbed, so steady-state maintenance is O(new small files), never
+# O(table).
+COMPACT_SMALL_FILE_BYTES = 64 << 20
+# url_seen is maintained key-hash BUCKETED (merge_buckets file-sets) so the
+# TTL-recrawl forget is a bucket-scoped DELETE, never an O(table) rewrite.
+# At production scale this is sized so one bucket ~ one task's worth of seen
+# rows; a store keeps the count its first bucketing recorded.
+USEEN_N_BUCKETS = 16
+
 
 def init_run(spark: SparkSession, store: SnapshotStore, frontier: DataFrame,
              robots: DataFrame, budgets: DataFrame) -> None:
@@ -117,19 +127,14 @@ def compact_frontier_strata(spark: SparkSession, store: SnapshotStore,
                  if len(files_by_p[p]) > target_files]
     if not oversized:
         return 0
-    import os
-    evolved = store.needs_merge("frontier")
-    reader = (spark.read.option("mergeSchema", "true") if evolved
-              else spark.read)
     # label each stratum from its pin key, not a row column: the pin map,
     # not the rows, defines which stratum a file belongs to
     slice_df = None
     for p in oversized:
-        part = (reader.parquet(*[os.path.join(store.root, f)
-                                 for f in files_by_p[p]])
+        part = (store.read_files(spark, "frontier", files_by_p[p])
                 .withColumn("_stratum", F.lit(int(p))))
         slice_df = (part if slice_df is None else slice_df
-                    .unionByName(part, allowMissingColumns=evolved))
+                    .unionByName(part, allowMissingColumns=True))
     staged = store.stage_groups(slice_df, "frontier", "_stratum",
                                 sort_cols=("host", "seq"))
     new_map = {**files_by_p, **{p: staged.get(p, []) for p in oversized}}
@@ -170,23 +175,23 @@ def maintain_store(spark: SparkSession, store: SnapshotStore,
     above the file target, then expire old snapshots. Storage-layer only —
     identical crawl results with or without it (loop-parity-tested).
 
-    ``url_seen`` is maintained BUCKETED (key-hash file-sets) when
-    ``cfg.useen_n_buckets`` > 0: per-epoch appends are absorbed into their
-    buckets incrementally, which keeps the TTL-recrawl forget
-    (operators.recrawl.forget_urls) a bucket-scoped DELETE instead of an
-    O(table) rewrite — the difference that matters at 10^10 seen rows."""
+    ``url_seen`` is maintained BUCKETED (key-hash file-sets): per-epoch
+    appends are absorbed into their buckets incrementally, which keeps the
+    TTL-recrawl forget (operators.recrawl.forget_urls) a bucket-scoped
+    DELETE instead of an O(table) rewrite — the difference that matters at
+    10^10 seen rows."""
     snap = store.snapshot()
     for name in sorted(snap.tables):
-        if name == "url_seen" and cfg.useen_n_buckets > 0:
+        if name == "url_seen":
             # first pass records the bucket spec; later passes defer to the
-            # recorded one so a cfg change across resume can never crash the
-            # loop on a spec mismatch (re-bucketing is an explicit offline
-            # operation, not something maintenance does implicitly)
+            # recorded one, so a store bucketed with another count keeps it
+            # (re-bucketing is an explicit offline operation, not something
+            # maintenance does implicitly)
             if snap.meta.get("bucket_spec", {}).get(name):
                 store.compact_bucketed(spark, name)
             else:
                 store.compact_bucketed(spark, name, key="url_hash",
-                                       n_buckets=cfg.useen_n_buckets)
+                                       n_buckets=USEEN_N_BUCKETS)
             continue
         if (name == "frontier"
                 and snap.meta.get("frontier_files_by_priority")):
@@ -199,7 +204,7 @@ def maintain_store(spark: SparkSession, store: SnapshotStore,
             continue
         try:
             store.compact(spark, name, target_files=cfg.compact_target_files,
-                          small_file_bytes=cfg.compact_small_file_bytes)
+                          small_file_bytes=COMPACT_SMALL_FILE_BYTES)
         except ValueError:
             continue   # other meta-pinned tables stay as-is
     store.vacuum(keep_last=cfg.vacuum_keep_last)

@@ -6,7 +6,7 @@ use_cases.py:77-141) becomes a deterministic batch pipeline:
 
   pruned frontier scan ∪ retries
     -> supersede (one row per url_hash; retry copy wins)        [J2/J3]
-    -> bloom probe + exact anti-join vs url_seen                [V2/J2]
+    -> seen-filter probe + exact anti-join vs url_seen          [V2/J2]
     -> robots split (broadcast dim)                             [north_rule]
     -> backoff gate (not_before_epoch <= epoch)                 [T4/T5]
     -> token-bucket admission, global (priority, seq) order     [O1/T3]
@@ -38,7 +38,8 @@ Scale levers (explicit, per north_rule):
     with **late materialization**: the admission shuffles carry compact
     hashed keys only; URL/host strings rejoin after the first spill, for the
     scheduled key set only.
-  * **bloom negative-cache** in front of the exact seen anti-join.
+  * **seen-filter negative cache** (bloom or cuckoo) in front of the exact
+    seen anti-join.
   * budgets and robots are **broadcast**; the popped batch is broadcast into
     the image-table join.
 """
@@ -53,8 +54,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig, choose_prefix
-from ..operators import bloom as bloom_ops
-from ..operators import cuckoo as cuckoo_ops
 from ..operators import dedup, politeness
 from ..operators.validate import (OUTCOME_DEFERRED, OUTCOME_FETCHED,
                                   OUTCOME_RETRY, fetch_and_validate,
@@ -359,26 +358,18 @@ def run_epoch(spark: SparkSession, store: SnapshotStore, images: DataFrame,
                                            stats_cols=("epoch",))
         appends["url_seen"] = store.stage(new_seen, "url_seen")
         appends["epoch_metrics"] = store.stage(metrics, "epoch_metrics")
-        if cfg.use_bloom:
-            # all_seen (prior url_seen + this epoch's rows) feeds the saturation
-            # rebuild path only — touched iff a bucket's FPP crossed the threshold
-            all_seen = new_seen.select("url_hash", "host_hash")
-            if url_seen is not None:
-                all_seen = (url_seen.select("url_hash", "host_hash")
-                            .unionByName(all_seen))
-            if cfg.seen_filter_backend == "cuckoo":
-                flt_new = cuckoo_ops.updated_buckets(
-                    new_seen, seen_filter, cfg.n_filter_buckets,
-                    cfg.cuckoo_slots_per_row, epoch, min_rows=cfg.cuckoo_min_rows,
-                    all_seen=all_seen, load_rebuild=cfg.cuckoo_load_rebuild)
-            else:
-                flt_new = bloom_ops.updated_buckets(
-                    new_seen, seen_filter, cfg.n_filter_buckets, cfg.bloom_num_hashes,
-                    cfg.bloom_bits_per_item, epoch, min_bits=cfg.bloom_min_bits,
-                    all_seen=all_seen, fpp_rebuild=cfg.bloom_fpp_rebuild)
-            fltf = store.stage(flt_new, "seen_filter")
-            if fltf:
-                appends["seen_filter"] = fltf
+        # all_seen (prior url_seen + this epoch's rows) feeds the saturation
+        # rebuild path only — touched iff a bucket crossed its threshold
+        all_seen = new_seen.select("url_hash", "host_hash")
+        if url_seen is not None:
+            all_seen = (url_seen.select("url_hash", "host_hash")
+                        .unionByName(all_seen))
+        flt_new = dedup.seen_filter_ops(cfg).updated_buckets(
+            new_seen, seen_filter, cfg.n_filter_buckets, epoch,
+            all_seen=all_seen)
+        fltf = store.stage(flt_new, "seen_filter")
+        if fltf:
+            appends["seen_filter"] = fltf
 
         job_row = pd.DataFrame([{
             "job_id": epoch, "epoch": epoch, "status": "completed",

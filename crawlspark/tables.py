@@ -412,19 +412,14 @@ class SnapshotStore:
             # schema evolution: loose appends may carry a newer schema than
             # the bucketed files — union by name with nulls for columns a
             # side lacks, the same semantics as read()'s mergeSchema path
-            evolved = self.needs_merge(name)
-            reader = (spark.read.option("mergeSchema", "true")
-                      if evolved else spark.read)
-            loose_df = reader.parquet(
-                *[os.path.join(self.root, f) for f in loose])
+            loose_df = self.read_files(spark, name, loose)
             touched = sorted(int(r["_b"]) for r in
                              loose_df.select(bucket_of.alias("_b"))
                              .distinct().collect())
-            tfiles = [os.path.join(self.root, f)
-                      for b in touched for f in bucket_map.get(str(b), [])]
+            tfiles = [f for b in touched for f in bucket_map.get(str(b), [])]
             slice_df = (loose_df.unionByName(
-                            reader.parquet(*tfiles),
-                            allowMissingColumns=evolved)
+                            self.read_files(spark, name, tfiles),
+                            allowMissingColumns=True)
                         if tfiles else loose_df)
             old_map = {k: list(v) for k, v in bucket_map.items()}
             absorbed = loose
@@ -547,6 +542,18 @@ class SnapshotStore:
                 sigs.add(st["__schema__"])
         return len(sigs)
 
+    def read_files(self, spark: "SparkSession", name: str,
+                   rels: list[str]) -> "DataFrame":
+        """Read some of table ``name``'s live files (paths relative to the
+        store root), unioning schemas exactly when :meth:`needs_merge` says
+        the table evolved. A scoped rewrite reads a slice of the table this
+        way: a plain read takes one footer's schema and would drop a newer
+        column from every file it rewrites."""
+        paths = [os.path.join(self.root, f) for f in rels]
+        if self.needs_merge(name):
+            return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return spark.read.parquet(*paths)
+
     def read(self, spark: "SparkSession", name: str,
              commit_id: int | None = None,
              where: tuple | None = None) -> "DataFrame | None":
@@ -645,7 +652,8 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
     snap = store.snapshot()
 
     def upsert(updates, target):
-        """(updates that win) UNION (target rows not superseded). With
+        """(updates that win) UNION (target rows not superseded); a column
+        only one side has (schema evolution) reads as null on the other. With
         ``newer_col``, updates NOT newer than their matched target row are
         dropped first. The target version is max(newer_col) per key — one
         row per key reaches the join (partial-agg map-side), so the check
@@ -662,7 +670,7 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
                                | (F.col(newer_col) > F.col("_t_newer")))
                        .drop("_t_newer"))
         return (target.join(updates.select(key), key, "left_anti")
-                .unionByName(updates))
+                .unionByName(updates, allowMissingColumns=True))
 
     if n_buckets is None:
         merged = upsert(updates, store.read(spark, name))
@@ -690,11 +698,10 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
         touched = {str(r["_b"]) for r in
                    updates.select(bucket_of.alias("_b")).distinct()
                    .collect()}
-        tfiles = [os.path.join(store.root, f)
-                  for b in sorted(touched) for f in bucket_files.get(b, [])]
-        tfiles += [os.path.join(store.root, f) for f in loose]
-        merged = upsert(updates,
-                        spark.read.parquet(*tfiles) if tfiles else None)
+        tfiles = [f for b in sorted(touched) for f in bucket_files.get(b, [])]
+        tfiles += loose
+        merged = upsert(updates, store.read_files(spark, name, tfiles)
+                        if tfiles else None)
         # one write over the slice: the updates' buckets plus buckets whose
         # rows were sitting in loose files (they must land somewhere
         # bucketed). Touched buckets REPLACE their file-set (their mapped

@@ -3,9 +3,8 @@
 A bucket's bit array is sized from its FIRST batch and thereafter only
 accumulates set bits, so across epochs its FPP climbs toward 1 and the
 negative cache silently degrades into "exact anti-join for everything".
-``updated_buckets(all_seen=..., fpp_rebuild=...)`` rebuilds a bucket whose
-post-update FPP estimate crosses the threshold at ``bits_per_item`` per
-ACTUAL item, restoring the design-point FPP. These tests drive one bucket
+``updated_buckets(all_seen=...)`` rebuilds a bucket whose post-update FPP
+estimate crosses ``FPP_REBUILD`` at ``BITS_PER_ITEM`` per ACTUAL item, restoring the design-point FPP. These tests drive one bucket
 past capacity and assert: the rebuild fires, FPP returns below threshold,
 FP-safety holds (every seen hash still probes maybe_seen — bits are set for
 all of them by construction), untouched buckets keep the incremental path,
@@ -21,9 +20,9 @@ from pyspark.sql import functions as F
 
 from crawlspark.operators import bloom
 
-K = 4
-BPI = 10
-MIN_BITS = 1 << 13   # updated_buckets default: 8192-bit floor per bucket
+K = bloom.NUM_HASHES
+BPI = bloom.BITS_PER_ITEM
+MIN_BITS = bloom.MIN_BITS   # 8192-bit floor per bucket
 
 
 def _seen_pdf(start: int, n: int, host_hash: int = 0) -> pd.DataFrame:
@@ -47,23 +46,21 @@ def _selectivity(spark, filters, start, n, host_hash=0) -> float:
     """Fraction of FRESH (never-seen) candidates the filter routes to the
     exact anti-join (maybe_seen=True) — the bloom's false-positive cost."""
     cand = _seen_df(spark, start, n, host_hash)
-    probed = bloom.probe(cand, filters, n_buckets=2, num_hashes=K)
+    probed = bloom.probe(cand, filters, n_buckets=2)
     return probed.filter(F.col("maybe_seen")).count() / n
 
 
 def test_saturation_rebuild_restores_fpp_and_fp_safety(spark):
     # epoch 0: bucket 0 gets 50 items -> array sized at the 8192-bit floor
     f0 = bloom.updated_buckets(_seen_df(spark, 0, 50), None,
-                               n_buckets=2, num_hashes=K, bits_per_item=BPI,
-                               epoch=0).toPandas()
+                               n_buckets=2, epoch=0).toPandas()
     assert len(f0) == 1 and int(f0["bucket"].iloc[0]) == 0
     assert len(f0["bits"].iloc[0]) * 8 == MIN_BITS
 
     # epoch 1: +2500 items WITHOUT rebuild -> same array, FPP blows past 0.05
     filters = _filters_df(spark, f0)
     f1 = bloom.updated_buckets(_seen_df(spark, 50, 2500), filters,
-                               n_buckets=2, num_hashes=K, bits_per_item=BPI,
-                               epoch=1).toPandas()
+                               n_buckets=2, epoch=1).toPandas()
     assert len(f1["bits"].iloc[0]) * 8 == MIN_BITS   # bits only ever set
     assert int(f1["n_items"].iloc[0]) == 2550
     fpp_before = bloom.fpp_estimate(2550, MIN_BITS, K)
@@ -78,12 +75,11 @@ def test_saturation_rebuild_restores_fpp_and_fp_safety(spark):
     new = (_seen_df(spark, 2600, 50, host_hash=0)
            .unionByName(_seen_df(spark, 500_000, 30, host_hash=1)))
     f2 = bloom.updated_buckets(new, _filters_df(spark, table1),
-                               n_buckets=2, num_hashes=K, bits_per_item=BPI,
-                               epoch=2, all_seen=all_seen,
-                               fpp_rebuild=0.05).toPandas()
+                               n_buckets=2, epoch=2,
+                               all_seen=all_seen).toPandas()
     f2 = f2.set_index("bucket").sort_index()
 
-    # bucket 0 rebuilt: sized at bits_per_item x actual items, FPP at design
+    # bucket 0 rebuilt: sized at BITS_PER_ITEM x actual items, FPP at design
     m2 = len(f2.loc[0, "bits"]) * 8
     assert m2 == BPI * 2650 * 8
     assert int(f2.loc[0, "n_items"]) == 2650
@@ -98,7 +94,7 @@ def test_saturation_rebuild_restores_fpp_and_fp_safety(spark):
     filters2 = _filters_df(spark, table2)
     seen_cand = _seen_df(spark, 0, 2650).unionByName(
         _seen_df(spark, 500_000, 30, host_hash=1))
-    probed = bloom.probe(seen_cand, filters2, n_buckets=2, num_hashes=K)
+    probed = bloom.probe(seen_cand, filters2, n_buckets=2)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
     # selectivity recovered: fresh URLs skip the exact anti-join again
@@ -109,25 +105,24 @@ def test_saturation_rebuild_restores_fpp_and_fp_safety(spark):
 
 def test_no_rebuild_below_threshold(spark):
     """Under-threshold buckets keep the incremental path even when the
-    rebuild machinery is armed (all_seen + fpp_rebuild supplied)."""
+    rebuild machinery is armed (all_seen supplied)."""
     f0 = bloom.updated_buckets(_seen_df(spark, 0, 50), None,
-                               n_buckets=2, num_hashes=K, bits_per_item=BPI,
-                               epoch=0).toPandas()
+                               n_buckets=2, epoch=0).toPandas()
     out = bloom.updated_buckets(_seen_df(spark, 50, 50),
                                 _filters_df(spark, f0),
-                                n_buckets=2, num_hashes=K, bits_per_item=BPI,
-                                epoch=1, all_seen=_seen_df(spark, 0, 100),
-                                fpp_rebuild=0.05).toPandas()
+                                n_buckets=2, epoch=1,
+                                all_seen=_seen_df(spark, 0, 100)).toPandas()
     assert len(out) == 1
     assert len(out["bits"].iloc[0]) * 8 == MIN_BITS   # incremental, no resize
     assert int(out["n_items"].iloc[0]) == 100
 
 
 @pytest.mark.slow
-def test_rebuild_fires_inside_the_real_crawl_loop(spark, tmp_path):
+def test_rebuild_fires_inside_the_real_crawl_loop(spark, tmp_path,
+                                                  monkeypatch):
     """End-to-end: a crawl whose single seen-filter bucket outgrows its
     bit-array floor must trigger the fpp rebuild INSIDE run_epoch's commit
-    path (cfg.bloom_fpp_rebuild + bloom_min_bits wiring), leaving a resized
+    path (FPP_REBUILD + MIN_BITS read by updated_buckets), leaving a resized
     filter whose n_items matches the url_seen table exactly — while the
     crawl itself stays correct (unique terminal statuses, unique seen
     rows). The 1024-bit floor puts the saturation point at ~164 items, well
@@ -136,9 +131,9 @@ def test_rebuild_fires_inside_the_real_crawl_loop(spark, tmp_path):
     from crawlspark.plans.crawler import run_crawl
     from tests.crawl_fixtures import SMALL, init_store, write_fixtures
 
-    cfg = CrawlConfig(batch_size=50, n_filter_buckets=1,
-                      bloom_bits_per_item=1, bloom_fpp_rebuild=0.05,
-                      bloom_min_bits=1 << 10)
+    monkeypatch.setattr(bloom, "BITS_PER_ITEM", 1)
+    monkeypatch.setattr(bloom, "MIN_BITS", 1 << 10)
+    cfg = CrawlConfig(batch_size=50, n_filter_buckets=1)
     fx = str(tmp_path / "fx")
     pdfs = write_fixtures(fx, SMALL)
     store = init_store(spark, fx, str(tmp_path / "store"))
@@ -156,11 +151,11 @@ def test_rebuild_fires_inside_the_real_crawl_loop(spark, tmp_path):
     m_bits = len(latest["bits"]) * 8
     # only a rebuild can resize: the incremental path keeps the configured
     # floor forever, so a larger array proves the rebuild fired in-loop
-    assert m_bits > cfg.bloom_min_bits
+    assert m_bits > bloom.MIN_BITS
     # the rebuilt filter tracks the seen set exactly (rebuild reads all_seen)
     assert int(latest["n_items"]) == n_seen
-    assert bloom.fpp_estimate(n_seen, m_bits, cfg.bloom_num_hashes) \
-        < cfg.bloom_fpp_rebuild
+    assert bloom.fpp_estimate(n_seen, m_bits, bloom.NUM_HASHES) \
+        < bloom.FPP_REBUILD
 
     log = store.read(spark, "crawl_log").toPandas()
     terminal = log[log["status"].isin(

@@ -211,3 +211,29 @@ def test_scoped_merge_then_compact_roundtrip(spark, tmp_path):
     expect |= {(300 + i, 1, i) for i in range(10) if i != 5}
     expect |= {(0, 9, 99), (205, 9, 99), (305, 9, 99)}
     assert got == expect
+
+
+def test_scoped_merge_preserves_evolved_columns(spark, tmp_path):
+    """A loose append that carries a column the bucketed files lack (schema
+    evolution) must keep it through a scoped merge: the merge reads the
+    touched buckets plus the loose files, and a plain read would take one
+    footer's schema and drop the newer column from every rewritten file."""
+    store = _store(tmp_path)
+    _seed_bucketed(spark, store, n=100)
+    snap = store.snapshot()
+    evolved = spark.range(500, 508).select(
+        F.col("id").alias("k"), F.lit(1).cast("long").alias("ts"),
+        F.col("id").alias("payload"),
+        F.concat(F.lit("src-"), F.col("id").cast("string")).alias("src"))
+    store.commit(epoch=snap.epoch, appends={"t": store.stage(evolved, "t")},
+                 meta=snap.meta)
+    assert store.read(spark, "t").filter(F.col("src").isNotNull()).count() == 8
+
+    merge_into(spark, store, "t", _rows(spark, [(1, 5, -1)]), "k",
+               newer_col="ts", n_buckets=NB)
+
+    got = store.read(spark, "t")
+    assert "src" in got.columns
+    assert got.count() == 108
+    assert got.filter(F.col("src").isNotNull()).count() == 8
+    assert got.filter(F.col("k") == 1).collect()[0]["ts"] == 5

@@ -26,7 +26,7 @@ from crawlspark.operators import cuckoo, dedup, recrawl
 from crawlspark.plans.crawler import run_crawl
 from tests.crawl_fixtures import SMALL, init_store, make_oracle, write_fixtures
 
-B = 4
+B = cuckoo.SLOTS
 
 
 def _hashes(start: int, n: int) -> np.ndarray:
@@ -84,87 +84,97 @@ def test_core_overflow_detected_not_dropped():
     assert over > 0                               # reported, caller flags
 
 
-def test_core_generic_slot_widths():
-    for b in (2, 8):
-        h = np.unique(_hashes(0, 1000))
-        tab = np.zeros((2048 // b * 2, b), dtype=np.uint16)
-        assert cuckoo._insert_batch(tab, h) == 0
-        assert cuckoo._probe_batch(tab, h).all()
+def test_backends_share_one_interface():
+    """Callers pick the backend module once (dedup.seen_filter_ops) and call
+    through it, so both modules must take the same arguments."""
+    import inspect
+
+    from crawlspark.operators import bloom
+
+    for name in ("probe", "updated_buckets", "forgotten_buckets"):
+        assert (inspect.signature(getattr(bloom, name))
+                == inspect.signature(getattr(cuckoo, name)))
+    assert dedup.seen_filter_ops(CrawlConfig()) is bloom
+    assert dedup.seen_filter_ops(
+        CrawlConfig(seen_filter_backend="cuckoo")) is cuckoo
 
 
 # ------------------------------------------------------------- Spark state
 
-def test_first_batch_sizing_and_probe(spark):
+def test_first_batch_sizing_and_probe(spark, monkeypatch):
+    monkeypatch.setattr(cuckoo, "MIN_ROWS", 64)
     f0 = cuckoo.updated_buckets(_seen_df(spark, 0, 300), None, n_buckets=2,
-                                slots_per_row=B, epoch=0, min_rows=64).toPandas()
+                                epoch=0).toPandas()
     assert len(f0) == 1 and int(f0["bucket"].iloc[0]) == 0
     # sized at alpha<=0.5: 300 items -> >=600 slots -> >=256 rows (pow2)
     assert len(f0["slots"].iloc[0]) // 2 >= 600
     assert not bool(f0["overflow"].iloc[0])
     filters = _filters_df(spark, f0)
-    probed = cuckoo.probe(_seen_df(spark, 0, 300), filters, 2, B)
+    probed = cuckoo.probe(_seen_df(spark, 0, 300), filters, 2)
     assert probed.filter(~F.col("maybe_seen")).count() == 0   # no false neg
-    fresh = cuckoo.probe(_seen_df(spark, 500_000, 2000), filters, 2, B)
+    fresh = cuckoo.probe(_seen_df(spark, 500_000, 2000), filters, 2)
     assert fresh.filter(F.col("maybe_seen")).count() <= 4     # ~0.012% FPP
 
 
-def test_saturation_rebuild_grows_bucket(spark):
+def test_saturation_rebuild_grows_bucket(spark, monkeypatch):
+    monkeypatch.setattr(cuckoo, "MIN_ROWS", 8)
     f0 = cuckoo.updated_buckets(_seen_df(spark, 0, 100), None, n_buckets=2,
-                                slots_per_row=B, epoch=0, min_rows=8).toPandas()
+                                epoch=0).toPandas()
     cap0 = len(f0["slots"].iloc[0]) // 2
-    # push load past 0.85 with all_seen supplied -> rebuild path
+    # push load past LOAD_REBUILD with all_seen supplied -> rebuild path
     all_seen = _seen_df(spark, 0, 100 + 400)
     f1 = cuckoo.updated_buckets(_seen_df(spark, 100, 400), _filters_df(spark, f0),
-                                n_buckets=2, slots_per_row=B, epoch=1,
-                                min_rows=8, all_seen=all_seen,
-                                load_rebuild=0.85).toPandas()
+                                n_buckets=2, epoch=1,
+                                all_seen=all_seen).toPandas()
     cap1 = len(f1["slots"].iloc[0]) // 2
     assert cap1 > cap0                         # rebuilt bigger (alpha 0.5)
     assert not bool(f1["overflow"].iloc[0])
     assert int(f1["n_items"].iloc[0]) == 500
     table = pd.concat([f0, f1], ignore_index=True)   # latest-per-bucket wins
-    probed = cuckoo.probe(_seen_df(spark, 0, 500), _filters_df(spark, table), 2, B)
+    probed = cuckoo.probe(_seen_df(spark, 0, 500), _filters_df(spark, table), 2)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
-def test_overflow_degrades_to_all_maybe_seen(spark):
-    # no all_seen/load_rebuild -> the overloaded bucket must flag overflow
+def test_overflow_degrades_to_all_maybe_seen(spark, monkeypatch):
+    # no all_seen -> the overloaded bucket must flag overflow
+    monkeypatch.setattr(cuckoo, "MIN_ROWS", 8)
     f0 = cuckoo.updated_buckets(_seen_df(spark, 0, 30), None, n_buckets=2,
-                                slots_per_row=B, epoch=0, min_rows=8).toPandas()
+                                epoch=0).toPandas()
     f1 = cuckoo.updated_buckets(_seen_df(spark, 30, 400), _filters_df(spark, f0),
-                                n_buckets=2, slots_per_row=B, epoch=1,
-                                min_rows=8).toPandas()
+                                n_buckets=2, epoch=1).toPandas()
     assert bool(f1["overflow"].iloc[0])
     table = pd.concat([f0, f1], ignore_index=True)
     # EVERYTHING routes to the exact check — degraded, never dropped
-    fresh = cuckoo.probe(_seen_df(spark, 900_000, 50), _filters_df(spark, table), 2, B)
+    fresh = cuckoo.probe(_seen_df(spark, 900_000, 50), _filters_df(spark, table), 2)
     assert fresh.filter(F.col("maybe_seen")).count() == 50
     # and the saturation census flags it for rebuild next commit
     sat = cuckoo.saturated_buckets(_seen_df(spark, 430, 1),
-                                   _filters_df(spark, table), 2, B, 0.85)
+                                   _filters_df(spark, table), 2)
     assert sat == [0]
 
 
-def test_deleted_buckets_clears_fingerprints(spark):
+def test_forgotten_buckets_clears_fingerprints(spark):
     f0 = cuckoo.updated_buckets(_seen_df(spark, 0, 2000), None, n_buckets=2,
-                                slots_per_row=B, epoch=0).toPandas()
-    f1 = cuckoo.deleted_buckets(_seen_df(spark, 0, 800), _filters_df(spark, f0),
-                                n_buckets=2, slots_per_row=B, epoch=1).toPandas()
+                                epoch=0).toPandas()
+    f1 = cuckoo.forgotten_buckets(_seen_df(spark, 0, 800),
+                                  _seen_df(spark, 800, 1200),
+                                  _filters_df(spark, f0),
+                                  n_buckets=2, epoch=1).toPandas()
     assert int(f1["n_items"].iloc[0]) == 1200
     table = pd.concat([f0, f1], ignore_index=True)
-    kept = cuckoo.probe(_seen_df(spark, 800, 1200), _filters_df(spark, table), 2, B)
+    kept = cuckoo.probe(_seen_df(spark, 800, 1200), _filters_df(spark, table), 2)
     assert kept.filter(~F.col("maybe_seen")).count() == 0     # FP-safety
-    gone = cuckoo.probe(_seen_df(spark, 0, 800), _filters_df(spark, table), 2, B)
+    gone = cuckoo.probe(_seen_df(spark, 0, 800), _filters_df(spark, table), 2)
     assert gone.filter(F.col("maybe_seen")).count() <= 2      # fp residue
 
 
 # --------------------------------------------------------- crawl-loop parity
 
 CUCKOO_CFG = CrawlConfig(batch_size=50, n_filter_buckets=8,
-                         seen_filter_backend="cuckoo",
-                         # tiny floor (32-slot tables) so the in-loop
-                         # saturation rebuild path actually fires at 400 urls
-                         cuckoo_min_rows=8)
+                         seen_filter_backend="cuckoo")
+# tiny floor (32-slot tables) so the in-loop saturation rebuild path
+# actually fires at 400 urls
+TINY_MIN_ROWS = 8
 
 
 @pytest.fixture(scope="module")
@@ -173,7 +183,9 @@ def cuckoo_run(spark, tmp_path_factory):
     pdfs = write_fixtures(str(tmp), SMALL)
     store = init_store(spark, str(tmp), str(tmp_path_factory.mktemp("store")))
     images = spark.read.parquet(str(tmp / "image_caption.parquet"))
-    results = run_crawl(spark, store, images, CUCKOO_CFG, max_epochs=60)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cuckoo, "MIN_ROWS", TINY_MIN_ROWS)
+        results = run_crawl(spark, store, images, CUCKOO_CFG, max_epochs=60)
     oracle = make_oracle(pdfs, CUCKOO_CFG)
     oracle.run(max_epochs=60)
     return dict(store=store, results=results, oracle=oracle,
@@ -200,16 +212,16 @@ def test_loop_parity_ordering(cuckoo_run):
 
 @pytest.mark.slow
 def test_loop_rebuild_fired_and_filter_consistent(cuckoo_run, spark):
-    """The tiny min_rows floor must have forced at least one in-loop rebuild
+    """The tiny MIN_ROWS floor must have forced at least one in-loop rebuild
     (growing some bucket past the floor), and the final filter must be a
     strict superset of url_seen (zero false negatives end-to-end)."""
     flt = cuckoo_run["store"].read(spark, "seen_filter")
     latest = cuckoo.latest_filter(flt).toPandas()
-    assert (latest["slots"].str.len() // 2 > 8 * B).any()
+    assert (latest["slots"].str.len() // 2 > TINY_MIN_ROWS * B).any()
     assert not latest["overflow"].any()
     seen = spark.createDataFrame(
         cuckoo_run["seen"][["url_hash", "host_hash"]])
-    probed = cuckoo.probe(seen, flt, CUCKOO_CFG.n_filter_buckets, B)
+    probed = cuckoo.probe(seen, flt, CUCKOO_CFG.n_filter_buckets)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
@@ -217,10 +229,10 @@ def test_loop_rebuild_fired_and_filter_consistent(cuckoo_run, spark):
 
 @pytest.mark.parametrize("backend", ["cuckoo", "bloom"])
 @pytest.mark.slow
-def test_forget_urls_readmits(spark, tmp_path_factory, backend):
+def test_forget_urls_readmits(spark, tmp_path_factory, monkeypatch, backend):
+    monkeypatch.setattr(cuckoo, "MIN_ROWS", TINY_MIN_ROWS)
     cfg = CrawlConfig(batch_size=50, n_filter_buckets=8,
-                      seen_filter_backend=backend,
-                      cuckoo_min_rows=8)
+                      seen_filter_backend=backend)
     tmp = tmp_path_factory.mktemp(f"fx_{backend}")
     write_fixtures(str(tmp), SMALL)
     store = init_store(spark, str(tmp), str(tmp_path_factory.mktemp(f"st_{backend}")))

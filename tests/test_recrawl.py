@@ -159,7 +159,7 @@ def test_bucketed_forget_rewrites_only_touched_buckets(spark, tmp_path):
     before = store.snapshot()
     before_map = before.meta["merge_buckets"]["url_seen"]
 
-    cfg = CrawlConfig(use_bloom=False)
+    cfg = CrawlConfig()
     n = recrawl.forget_urls(spark, store, cfg, targets, epoch=2)
     assert n == 5
 
@@ -180,7 +180,8 @@ def test_bucketed_forget_rewrites_only_touched_buckets(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_loop_with_bucketed_maintenance_and_ttl_recrawl(spark, tmp_path):
+def test_loop_with_bucketed_maintenance_and_ttl_recrawl(spark, tmp_path,
+                                                       monkeypatch):
     """The production wiring end-to-end: the crawl loop maintains url_seen
     bucketed (compact_every) AND runs TTL recrawl passes (recrawl_every), so
     forget_urls takes the bucket-scoped path against a live bucket map. The
@@ -188,14 +189,16 @@ def test_loop_with_bucketed_maintenance_and_ttl_recrawl(spark, tmp_path):
     only live files, url_seen rows stay unique per url_hash, and recrawl
     actually re-fetches (crawl_log grows a second terminal row for
     forgotten urls)."""
+    from crawlspark.plans import crawler
     from tests.crawl_fixtures import SMALL, init_store, write_fixtures
 
+    monkeypatch.setattr(crawler, "USEEN_N_BUCKETS", 4)
     tmp = tmp_path / "fx"
     write_fixtures(str(tmp), SMALL)
     store = init_store(spark, str(tmp), str(tmp_path / "st"))
     images = spark.read.parquet(str(tmp / "image_caption.parquet"))
     cfg = CrawlConfig(batch_size=80, n_filter_buckets=8,
-                      compact_every=2, useen_n_buckets=4,
+                      compact_every=2,
                       recrawl_every=4, recrawl_ttl_epochs=2,
                       recrawl_topk=25)
     run_crawl(spark, store, images, cfg, max_epochs=24)
@@ -220,9 +223,10 @@ def test_loop_with_bucketed_maintenance_and_ttl_recrawl(spark, tmp_path):
 @pytest.mark.slow
 def test_maintenance_survives_bucket_count_change_across_resume(
         spark, tmp_path):
-    """A cfg.useen_n_buckets change across resume must not crash
-    maintenance: once a bucket spec is recorded, maintenance defers to it
-    (re-bucketing is an explicit offline operation)."""
+    """A store bucketed with another count than maintenance's own
+    (``USEEN_N_BUCKETS``) must not crash maintenance: once a bucket spec is
+    recorded, maintenance defers to it (re-bucketing is an explicit offline
+    operation)."""
     from crawlspark.plans.crawler import maintain_store
     from crawlspark.tables import SnapshotStore
 
@@ -232,9 +236,9 @@ def test_maintenance_survives_bucket_count_change_across_resume(
         F.lit(0).cast("int").alias("first_seen_epoch"),
         F.lit(1).cast("int").alias("first_seen_priority"))
     store.commit(0, appends={"url_seen": store.stage(seen, "url_seen")})
-    maintain_store(spark, store, CrawlConfig(useen_n_buckets=4))
+    store.compact_bucketed(spark, "url_seen", key="url_hash", n_buckets=4)
     assert store.snapshot().meta["bucket_spec"]["url_seen"]["n"] == 4
-    # resumed run with a DIFFERENT configured bucket count: no crash, the
+    # maintenance with a DIFFERENT bucket count of its own: no crash, the
     # recorded spec wins
     extra = spark.range(100, 120).select(
         F.col("id").alias("url_hash"), (F.col("id") % 7).alias("host_hash"),
@@ -242,7 +246,7 @@ def test_maintenance_survives_bucket_count_change_across_resume(
         F.lit(1).cast("int").alias("first_seen_priority"))
     store.commit(1, appends={"url_seen": store.stage(extra, "url_seen")},
                  meta=store.snapshot().meta)
-    maintain_store(spark, store, CrawlConfig(useen_n_buckets=32))
+    maintain_store(spark, store, CrawlConfig())
     assert store.snapshot().meta["bucket_spec"]["url_seen"]["n"] == 4
     assert store.read(spark, "url_seen").count() == 120
 
@@ -276,7 +280,7 @@ def test_bucketed_forget_preserves_evolved_schema(spark, tmp_path):
 
     # targets hit bucketed files AND the evolved loose file
     targets = spark.createDataFrame([(3,), (41,), (105,)], "url_hash long")
-    cfg = CrawlConfig(use_bloom=False)
+    cfg = CrawlConfig()
     assert recrawl.forget_urls(spark, store, cfg, targets, epoch=2) == 3
 
     got = store.read(spark, "url_seen")

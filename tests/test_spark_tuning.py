@@ -28,3 +28,19 @@ def test_driver_memory_is_half_of_ram_capped_at_16g():
     assert mem.endswith("g")
     assert 1 <= int(mem[:-1]) <= min(16, max(1, ram_gib / 2))
 
+
+
+def test_cli_session_is_machine_sized_unless_cpus_given(monkeypatch):
+    import crawlspark.session as session
+    from crawlspark.__main__ import _spark
+
+    captured = []
+    monkeypatch.setattr(session, "get_spark", captured.append)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    _spark()
+    _spark(2)
+    default, explicit = captured
+    assert (default.master, default.shuffle_partitions) == ("local[3]", 3)
+    assert (explicit.master, explicit.shuffle_partitions) == ("local[2]", 2)
+    assert default.driver_memory == SparkTuning().driver_memory
+    assert default.app_name == explicit.app_name == "crawlspark-cli"

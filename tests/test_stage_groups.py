@@ -137,7 +137,7 @@ def test_forget_is_one_write_over_buckets_and_loose(spark, tmp_path, writes):
 
     del writes[:]
     n = recrawl.forget_urls(
-        spark, store, CrawlConfig(use_bloom=False),
+        spark, store, CrawlConfig(),
         spark.createDataFrame([(k,) for k in targets], "url_hash long"), 2)
     assert n == len(targets)
     assert len(writes) == 1
@@ -165,7 +165,7 @@ def test_forget_emptying_a_bucket_maps_it_to_no_files(spark, tmp_path):
     victims = [k for k, b in buckets.items() if b == b0]
 
     n = recrawl.forget_urls(
-        spark, store, CrawlConfig(use_bloom=False),
+        spark, store, CrawlConfig(),
         spark.createDataFrame([(k,) for k in victims], "url_hash long"), 1)
     assert n == len(victims)
     after = store.snapshot()

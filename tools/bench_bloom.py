@@ -6,10 +6,9 @@ many epochs without resizing. Probe selectivity here = the fraction of
 FRESH (never-seen) candidates the filter routes to the exact anti-join
 (maybe_seen=True) — pure false-positive cost; at saturation it approaches
 1.0 and the negative cache is worthless. The fpp-triggered rebuild
-(bloom.rebuild_buckets via updated_buckets(all_seen=..., fpp_rebuild=...))
-resizes the bucket at bits_per_item x actual items and restores the design
-FPP. Records BLOOM_BENCH.json; tools/bench_scaling.write_bench_md folds it
-into BENCH.md.
+(bloom.rebuild_buckets via updated_buckets(all_seen=...)) resizes the
+bucket at BITS_PER_ITEM x actual items and restores the design FPP. Records
+BLOOM_BENCH.json; tools/bench_scaling.write_bench_md folds it into BENCH.md.
 
 Usage: python tools/bench_bloom.py [n_initial] [n_grown] [n_probe]
 """
@@ -26,9 +25,6 @@ import pandas as pd
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-K = 4
-BPI = 10
 
 
 def _seen_pdf(start: int, n: int) -> pd.DataFrame:
@@ -49,6 +45,7 @@ def main() -> None:
     from crawlspark.session import get_spark
 
     spark = get_spark()
+    k = bloom.NUM_HASHES
 
     def seen_df(start, n):
         return spark.createDataFrame(_seen_pdf(start, n),
@@ -59,31 +56,30 @@ def main() -> None:
 
     def selectivity(filters):
         probed = bloom.probe(seen_df(10_000_000, n_probe), filters,
-                             n_buckets=1, num_hashes=K)
+                             n_buckets=1)
         return probed.filter(F.col("maybe_seen")).count() / n_probe
 
     # epoch 0 sizes the bucket; later epochs only set bits
-    f0 = bloom.updated_buckets(seen_df(0, n_initial), None, 1, K, BPI,
+    f0 = bloom.updated_buckets(seen_df(0, n_initial), None, 1,
                                epoch=0).toPandas()
     m_bits = len(f0["bits"].iloc[0]) * 8
     f1 = bloom.updated_buckets(seen_df(n_initial, n_grown), filters_df(f0),
-                               1, K, BPI, epoch=1).toPandas()
+                               1, epoch=1).toPandas()
     n_total = n_initial + n_grown
-    fpp_before = bloom.fpp_estimate(n_total, m_bits, K)
+    fpp_before = bloom.fpp_estimate(n_total, m_bits, k)
     t0 = time.perf_counter()
     sel_before = selectivity(filters_df(pd.concat([f0, f1])))
     probe_wall_before = round(time.perf_counter() - t0, 3)
 
-    # epoch 2: rebuild fires (all_seen + threshold supplied)
+    # epoch 2: rebuild fires (all_seen supplied)
     t0 = time.perf_counter()
     f2 = bloom.updated_buckets(seen_df(n_total, 1000),
                                filters_df(pd.concat([f0, f1])),
-                               1, K, BPI, epoch=2,
-                               all_seen=seen_df(0, n_total + 1000),
-                               fpp_rebuild=0.05).toPandas()
+                               1, epoch=2,
+                               all_seen=seen_df(0, n_total + 1000)).toPandas()
     rebuild_wall = round(time.perf_counter() - t0, 3)
     m_bits_after = len(f2["bits"].iloc[0]) * 8
-    fpp_after = bloom.fpp_estimate(int(f2["n_items"].iloc[0]), m_bits_after, K)
+    fpp_after = bloom.fpp_estimate(int(f2["n_items"].iloc[0]), m_bits_after, k)
     t0 = time.perf_counter()
     sel_after = selectivity(filters_df(pd.concat([f0, f1, f2])))
     probe_wall_after = round(time.perf_counter() - t0, 3)

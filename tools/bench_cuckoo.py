@@ -31,9 +31,9 @@ sys.path.insert(0, REPO)
 
 from crawlspark.operators import bloom, cuckoo  # noqa: E402
 
-K = 4          # bloom hash count
-BPI = 10       # bloom bits/item design point
-B = 4          # cuckoo slots/row
+K = bloom.NUM_HASHES
+BPI = bloom.BITS_PER_ITEM
+B = cuckoo.SLOTS
 FORGET_FRAC = 0.01
 
 
@@ -70,7 +70,7 @@ def main() -> None:
     assert bloom._probe_bits(bits2, remaining, K).all()
 
     # ---- cuckoo at alpha-0.5 sizing (16-bit fp, 4 slots)
-    m_rows = cuckoo._size_rows(len(seen), B, min_rows=1 << 9)
+    m_rows = cuckoo._size_rows(len(seen), cuckoo.MIN_ROWS)
     tab = np.zeros((m_rows, B), dtype=np.uint16)
     t0 = time.perf_counter()
     n_over = cuckoo._insert_batch(tab, seen)

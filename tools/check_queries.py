@@ -47,9 +47,7 @@ def main(keys=None):
     from crawlspark.config import SparkTuning
     from crawlspark.session import get_spark
 
-    spark = get_spark(SparkTuning(master="local[8]", shuffle_partitions=8,
-                                  driver_memory="16g",
-                                  app_name="check-queries"))
+    spark = get_spark(SparkTuning(app_name="check-queries"))
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"
