@@ -83,6 +83,13 @@ def _set_bits(bits: np.ndarray, hashes: np.ndarray, k: int) -> None:
     np.bitwise_or.at(bits, byte_idx, np.uint8(1) << bit_idx)
 
 
+def _new_bits(n_items: int, bits_per_item: int, min_bits: int) -> np.ndarray:
+    """A zeroed bit array sized at ``bits_per_item`` bits per item, with a
+    ``min_bits`` floor, rounded up to whole bytes."""
+    return np.zeros((max(min_bits, bits_per_item * n_items) + 7) // 8,
+                    dtype=np.uint8)
+
+
 def latest_filter(filters: DataFrame | None) -> DataFrame | None:
     """Collapse the append-only filter table to the newest row per bucket."""
     if filters is None:
@@ -163,8 +170,7 @@ def rebuild_buckets(all_seen: DataFrame, buckets: list[int],
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         bucket = int(pdf["bucket"].iloc[0])
         hashes = pdf["url_hash"].unique()
-        m_bits = max(min_bits, bits_per_item * len(hashes) * 8)
-        bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
+        bits = _new_bits(len(hashes), bits_per_item, min_bits)
         _set_bits(bits, hashes, k)
         return pd.DataFrame({"bucket": [bucket], "bits": [bits.tobytes()],
                              "n_items": [len(hashes)], "epoch": [epoch]})
@@ -218,8 +224,7 @@ def updated_buckets(new_seen: DataFrame, filters: DataFrame | None,
         bucket = int(new_pdf["bucket"].iloc[0])
         hashes = new_pdf["url_hash"].to_numpy()
         if flt_pdf.empty:
-            m_bits = max(min_bits, bits_per_item * len(hashes) * 8)
-            bits = np.zeros(m_bits // 8, dtype=np.uint8)
+            bits = _new_bits(len(hashes), bits_per_item, min_bits)
             n_old = 0
         else:
             bits = np.frombuffer(flt_pdf["bits"].iloc[0], dtype=np.uint8).copy()

@@ -7,13 +7,10 @@ cannot, which is why the cuckoo backend exists).
 
 ``forget_urls`` makes a set of URLs eligible again in ONE atomic commit:
 
-* ``url_seen``      — exact ground truth: anti-join the targets out.
-  When the table is key-hash bucketed (bucket_spec + merge_buckets,
-  :func:`crawlspark.tables.SnapshotStore.compact_bucketed`), the delete is
-  BUCKET-SCOPED: only buckets holding target keys (plus not-yet-bucketed
-  loose appends) are rewritten, every other bucket's files keep their
-  exact paths — O(touched + loose), the Iceberg ``DELETE WHERE`` analog.
-  Unbucketed tables fall back to a wholesale replace;
+* ``url_seen``      — exact ground truth: anti-join the targets out
+  through :meth:`crawlspark.tables.SnapshotStore.rewrite_buckets`, the
+  store's scoped rewrite (the Iceberg ``DELETE WHERE`` analog: only the
+  part of the table that can hold the targets is rewritten);
 * ``seen_filter``   — the backend's ``forgotten_buckets``:
   - cuckoo clears one fingerprint per target — O(targets), touching only
     their buckets (the delete-capable filter's whole point);
@@ -33,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
-from .. import tables as tbl
 from ..tables import SnapshotStore
 from . import dedup
 
@@ -60,45 +56,9 @@ def forget_urls(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
         return 0
     remaining = url_seen.join(keys, "url_hash", "left_anti")
 
-    meta_updates: dict = {}
-    bucket_map, loose = tbl.bucket_state(snap, "url_seen")
-    spec = snap.meta.get("bucket_spec", {}).get("url_seen")
-    if bucket_map is not None and spec:
-        # bucket-scoped DELETE (the Iceberg DELETE WHERE analog): rewrite
-        # only the buckets holding target keys plus the loose per-epoch
-        # appends; every other bucket's files keep their exact paths — the
-        # forget is O(touched buckets + loose), never O(table), which is
-        # what makes TTL recrawl viable against a 10^10-row seen set
-        key_col, n_b = spec["key"], int(spec["n"])
-        bucket_of = F.pmod(F.xxhash64(F.col(key_col)),
-                           F.lit(n_b)).cast("int")
-        touched = sorted({str(r["_b"]) for r in
-                          hit.select(bucket_of.alias("_b"))
-                          .distinct().collect()} & set(bucket_map))
-        # one write over the touched buckets' files plus the loose appends;
-        # loose rows keep their own label (-1, never a pmod bucket), so they
-        # stay loose
-        tfiles = [f for b in touched for f in bucket_map[b]]
-        slice_df = None
-        for fs, label in ((tfiles, bucket_of), (loose, F.lit(-1))):
-            if fs:
-                part = (store.read_files(spark, "url_seen", fs)
-                        .withColumn("_bucket", label))
-                slice_df = (part if slice_df is None else slice_df
-                            .unionByName(part, allowMissingColumns=True))
-        staged = store.stage_groups(
-            slice_df.join(keys, "url_hash", "left_anti"), "url_seen",
-            "_bucket")
-        new_loose = staged.pop("-1", [])
-        new_map = {k: list(v) for k, v in bucket_map.items()}
-        for b in touched:
-            new_map[b] = staged.get(b, [])
-        replaces = {"url_seen": tbl.ordered_files(new_map) + new_loose}
-        meta_updates["merge_buckets"] = {
-            **snap.meta.get("merge_buckets", {}), "url_seen": new_map}
-    else:
-        # unbucketed table: wholesale replace (small stores / tests)
-        replaces = {"url_seen": store.stage(remaining, "url_seen")}
+    files, rewrite_meta = store.rewrite_buckets(
+        spark, "url_seen", hit,
+        lambda rows: rows.join(keys, "url_hash", "left_anti"))
 
     appends: dict = {}
     seen_filter = store.read(spark, "seen_filter")
@@ -109,9 +69,9 @@ def forget_urls(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
         if staged:
             appends["seen_filter"] = staged
 
-    store.commit(epoch, appends=appends, replaces=replaces, meta={
+    store.commit(epoch, appends=appends, replaces={"url_seen": files}, meta={
         **snap.meta,
-        **meta_updates,
+        **rewrite_meta,
         **(meta_extra or {}),
         "last_forget": {"epoch": epoch, "n_forgotten": n_forgotten},
     })

@@ -16,9 +16,11 @@ same guarantees the design relies on:
 
 On a real cluster this class is swapped for Iceberg ``MERGE INTO`` / snapshot
 reads; the engine only uses ``stage``/``stage_groups``/``stage_pandas`` +
-``commit`` (write, then publish atomically), ``snapshot``/``read``/``files``/
-``needs_merge`` and ``compact``/``compact_bucketed``/``vacuum``/``discard``
-(maintenance), so the swap is config-only (SURVEY.md §7 M0).
+``commit`` (write, then publish atomically), ``snapshot``/``read``/
+``read_files``/``files``/``needs_merge``, ``rewrite_buckets`` (the one scoped
+rewrite of a key-hash-bucketed table: ``MERGE INTO`` / ``DELETE WHERE``) and
+``compact``/``compact_bucketed``/``vacuum``/``discard`` (maintenance), so the
+swap is config-only (SURVEY.md §7 M0).
 
 Commit manifest ``_log/commit-%012d.json``::
 
@@ -370,76 +372,100 @@ class SnapshotStore:
     def compact_bucketed(self, spark: "SparkSession", name: str,
                          key: str | None = None,
                          n_buckets: int | None = None) -> int:
-        """Re-bucket maintenance for a key-hash-bucketed table (the map
-        :func:`merge_into` and :func:`crawlspark.operators.recrawl.forget_urls`
-        scope their rewrites by): absorb files appended since the last
-        bucketing ("loose" files — e.g. the epoch loop's per-epoch url_seen
-        appends) into their buckets' file-sets. INCREMENTAL: only buckets
-        that actually receive loose rows are rewritten; every other bucket
-        keeps its exact files. The first call performs the one-time full
-        bucketing. Cost is O(loose rows + touched buckets), never O(table) —
-        the property that makes per-epoch maintenance viable at 10^10 rows.
-        On Iceberg this is ``rewrite_data_files`` on a bucket-partitioned
-        table. Returns the number of loose files absorbed."""
+        """Re-bucket maintenance for a key-hash-bucketed table: home the
+        rows of files appended since the last bucketing ("loose" files,
+        e.g. the epoch loop's per-epoch url_seen appends) into their
+        buckets. This is :meth:`rewrite_buckets` scoped by the loose rows,
+        so only buckets that receive loose rows are rewritten and every
+        other bucket keeps its exact files. The first call performs the one-time
+        full bucketing and needs ``key``/``n_buckets``; later calls use the
+        recorded spec. On Iceberg this is ``rewrite_data_files`` on a
+        bucket-partitioned table. Returns the number of loose files
+        absorbed."""
+        snap = self.snapshot()
+        spec = _bucket_spec(snap, name, key, n_buckets)
+        _, loose = bucket_state(snap, name)
+        if not loose:
+            return 0
+        if spec is None:
+            raise ValueError(
+                f"table {name!r} has no recorded bucket_spec; pass "
+                "key/n_buckets for the initial bucketing")
+        files, meta = self.rewrite_buckets(spark, name, None,
+                                           lambda rows: rows, *spec)
+        self.commit(epoch=snap.epoch, replaces={name: files},
+                    meta={**snap.meta, **meta})
+        return len(loose)
+
+    def rewrite_buckets(self, spark: "SparkSession", name: str,
+                        scope: "DataFrame | None", transform,
+                        key: str | None = None,
+                        n_buckets: int | None = None) -> tuple[list, dict]:
+        """The one scoped rewrite of a key-hash-bucketed table, behind
+        :meth:`compact_bucketed`, :func:`merge_into` and
+        :func:`crawlspark.operators.recrawl.forget_urls` (Iceberg
+        ``rewrite_data_files`` / ``MERGE INTO`` / ``DELETE WHERE`` on a
+        ``bucket(n, key)`` table).
+
+        The layout is ``pmod(xxhash64(key), n)`` file-sets recorded in
+        snapshot meta ``merge_buckets[name]`` under ``bucket_spec[name]``,
+        plus loose files (:func:`bucket_state`). A recorded spec wins; a
+        different ``key``/``n_buckets`` raises. With no spec and no
+        ``n_buckets`` the whole table is rewritten unbucketed.
+
+        The buckets the ``scope`` rows hash to (None: the loose rows) are
+        touched. Their files plus every loose file are read, passed through
+        ``transform`` (which gets None for an empty slice) and written in
+        ONE :meth:`stage_groups` job. A row goes to its bucket if that
+        bucket is touched, or if the table has no map yet; any other row
+        stays loose. Untouched buckets keep their exact files, so the cost
+        is O(touched buckets + loose), never O(table).
+
+        Nothing is committed: returns the table's new file list and the
+        meta entries to commit with it, so a caller can publish the rewrite
+        atomically with its own changes."""
         from pyspark.sql import functions as F
 
         snap = self.snapshot()
-        bucket_map, loose = bucket_state(snap, name)
         rels = snap.tables.get(name, [])
-        spec = snap.meta.get("bucket_spec", {}).get(name)
-        if key is None or n_buckets is None:
-            if spec is None and rels:
-                raise ValueError(
-                    f"table {name!r} has no recorded bucket_spec; pass "
-                    "key/n_buckets for the initial bucketing")
-            if spec is not None:
-                key, n_buckets = spec["key"], int(spec["n"])
-        elif spec is not None and (spec["key"] != key
-                                   or int(spec["n"]) != int(n_buckets)):
-            raise ValueError(
-                f"table {name!r} is bucketed as {spec}; re-bucketing with "
-                "different params requires a fresh full bucketing (drop the "
-                "spec first)")
-        if not rels or (bucket_map is not None and not loose):
-            return 0
+        spec = _bucket_spec(snap, name, key, n_buckets)
+        # keep tracking whatever bounds the table's files carry
+        tracked = sorted({c for r in rels for c in snap.stats.get(r, {})
+                          if not c.startswith("__")}) or None
+
+        def read(files):
+            return self.read_files(spark, name, files) if files else None
+
+        if spec is None:
+            return self.stage(transform(read(rels)), name,
+                              stats_cols=tracked), {}
+        key, n_buckets = spec
         bucket_of = F.pmod(F.xxhash64(F.col(key)),
                            F.lit(n_buckets)).cast("int")
+        bucket_map, loose = bucket_state(snap, name)
         if bucket_map is None:
-            slice_df = self.read(spark, name)
-            old_map: dict = {}
-            absorbed = list(rels)
+            # first bucketing: the whole table, every row homed
+            touched, files, label = None, rels, bucket_of
         else:
-            # schema evolution: loose appends may carry a newer schema than
-            # the bucketed files — union by name with nulls for columns a
-            # side lacks, the same semantics as read()'s mergeSchema path
-            loose_df = self.read_files(spark, name, loose)
-            touched = sorted(int(r["_b"]) for r in
-                             loose_df.select(bucket_of.alias("_b"))
-                             .distinct().collect())
-            tfiles = [f for b in touched for f in bucket_map.get(str(b), [])]
-            slice_df = (loose_df.unionByName(
-                            self.read_files(spark, name, tfiles),
-                            allowMissingColumns=True)
-                        if tfiles else loose_df)
-            old_map = {k: list(v) for k, v in bucket_map.items()}
-            absorbed = loose
-        tracked = sorted({c for r in rels
-                          for c in snap.stats.get(r, {})
-                          if not c.startswith("__")}) or None
-        # every bucket in the slice received loose rows (or this is the
-        # first bucketing), so each one the write returns replaces its set
-        new_map = {**old_map, **self.stage_groups(
-            slice_df.withColumn("_bucket", bucket_of), name, "_bucket",
-            stats_cols=tracked)}
-        all_buckets: dict = snap.meta.get("merge_buckets", {})
-        specs: dict = snap.meta.get("bucket_spec", {})
-        self.commit(epoch=snap.epoch, replaces={name: ordered_files(new_map)},
-                    meta={**snap.meta,
-                          "merge_buckets": {**all_buckets, name: new_map},
-                          "bucket_spec": {**specs,
-                                          name: {"key": key,
-                                                 "n": int(n_buckets)}}})
-        return len(absorbed)
+            scope = read(loose) if scope is None else scope
+            touched = sorted({str(r["_b"]) for r in scope.select(
+                bucket_of.alias("_b")).distinct().collect()})
+            files = [f for b in touched
+                     for f in bucket_map.get(b, [])] + loose
+            label = F.when(bucket_of.isin([int(b) for b in touched]),
+                           bucket_of).otherwise(-1)
+        staged = self.stage_groups(
+            transform(read(files)).withColumn("_bucket", label), name,
+            "_bucket", stats_cols=tracked)
+        # -1 is never a pmod bucket: those rows stay loose
+        still_loose = staged.pop("-1", [])
+        new_map = staged if touched is None else {
+            **bucket_map, **{b: staged.get(b, []) for b in touched}}
+        return ordered_files(new_map) + still_loose, {
+            "merge_buckets": {**snap.meta.get("merge_buckets", {}),
+                              name: new_map},
+            "bucket_spec": {**snap.meta.get("bucket_spec", {}),
+                            name: {"key": key, "n": n_buckets}}}
 
     def vacuum(self, keep_last: int = 2) -> list[str]:
         """Delete data files not referenced by any of the last ``keep_last``
@@ -574,14 +600,32 @@ class SnapshotStore:
         return spark.read.parquet(*fs)
 
 
+def _bucket_spec(snap: Snapshot, name: str, key: str | None,
+                 n_buckets: int | None) -> tuple[str, int] | None:
+    """The (key, n_buckets) a table is bucketed by: the recorded
+    ``bucket_spec`` wins (passing a different one raises), else the passed
+    pair, else None (unbucketed)."""
+    spec = snap.meta.get("bucket_spec", {}).get(name)
+    if spec is None:
+        return None if key is None or n_buckets is None \
+            else (key, int(n_buckets))
+    if key not in (None, spec["key"]) \
+            or n_buckets not in (None, int(spec["n"])):
+        raise ValueError(
+            f"table {name!r} is bucketed as {spec}; re-bucketing with "
+            "different params requires a fresh full bucketing (drop the "
+            "spec first)")
+    return spec["key"], int(spec["n"])
+
+
 def bucket_state(snap: Snapshot, name: str) -> tuple[dict | None, list[str]]:
     """(bucket_map, loose_files) for a table: the per-bucket file-sets
     recorded in snapshot meta ``merge_buckets[name]`` (None if the table
     was never bucketed) plus any files appended since the map was last
     written — the epoch loop appends url_seen rows without re-bucketing,
-    so every scoped reader/writer must treat those "loose" files as
+    so :meth:`SnapshotStore.rewrite_buckets` treats those "loose" files as
     touching EVERY bucket until :meth:`SnapshotStore.compact_bucketed`
-    absorbs them."""
+    homes their rows."""
     m = snap.meta.get("merge_buckets", {}).get(name)
     files = snap.tables.get(name, [])
     if m is None:
@@ -636,22 +680,22 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
     skew-safe), so the emulation carries the same scale shape.
 
     ``n_buckets`` makes the merge PARTITION-SCOPED (the Iceberg
-    bucket-partitioned MERGE): the table is maintained as ``pmod(
-    xxhash64(key), n_buckets)`` bucket file-sets (mapping recorded in
-    snapshot meta ``merge_buckets``), and a merge rewrites ONLY buckets
-    containing updated keys — untouched buckets keep their exact files. At
-    100 TB that is the difference between rewriting the whole table per
-    merge batch and rewriting a few buckets. The first bucketed merge on an
-    existing unbucketed table performs the one-time full bucketing rewrite;
-    thereafter every merge is scoped. Both the matched-row check and the
-    anti-join read only the touched buckets' files (the bucket is a pure
-    function of the key, so matches cannot live elsewhere)."""
+    bucket-partitioned MERGE) through :meth:`SnapshotStore.rewrite_buckets`:
+    the table is kept as ``pmod(xxhash64(key), n_buckets)`` bucket
+    file-sets, and a merge rewrites ONLY buckets containing updated keys
+    (plus the loose files, which can hold any key) — untouched buckets keep
+    their exact files. The first bucketed merge on an unbucketed table
+    performs the one-time full bucketing; a table's recorded bucket spec
+    wins thereafter, so a merge without ``n_buckets`` stays scoped and a
+    different ``n_buckets`` raises. The matched-row check and the anti-join
+    read only that slice (the bucket is a pure function of the key, so
+    matches cannot live elsewhere)."""
     from pyspark.sql import functions as F
 
-    updates = dedup_updates(updates, key, newer_col)
+    updates = dedup_updates(updates, key, newer_col).persist()
     snap = store.snapshot()
 
-    def upsert(updates, target):
+    def upsert(target):
         """(updates that win) UNION (target rows not superseded); a column
         only one side has (schema evolution) reads as null on the other. With
         ``newer_col``, updates NOT newer than their matched target row are
@@ -662,67 +706,22 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
         the mutation path)."""
         if target is None:
             return updates
+        won = updates
         if newer_col is not None:
             t_keyed = (target.groupBy(key)
                        .agg(F.max(newer_col).alias("_t_newer")))
-            updates = (updates.join(t_keyed, key, "left")
-                       .filter(F.col("_t_newer").isNull()
-                               | (F.col(newer_col) > F.col("_t_newer")))
-                       .drop("_t_newer"))
-        return (target.join(updates.select(key), key, "left_anti")
-                .unionByName(updates, allowMissingColumns=True))
+            won = (updates.join(t_keyed, key, "left")
+                   .filter(F.col("_t_newer").isNull()
+                           | (F.col(newer_col) > F.col("_t_newer")))
+                   .drop("_t_newer"))
+        return (target.join(won.select(key), key, "left_anti")
+                .unionByName(won, allowMissingColumns=True))
 
-    if n_buckets is None:
-        merged = upsert(updates, store.read(spark, name))
-        store.commit(epoch=int(snap.meta.get("last_epoch", -1)),
-                     replaces={name: store.stage(merged, name)},
-                     meta=snap.meta)
-        return
-
-    bucket_of = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    all_buckets: dict = snap.meta.get("merge_buckets", {})
-    bucket_files, loose = bucket_state(snap, name)
-
-    if bucket_files is None:
-        # first bucketed merge: one-time full bucketing rewrite (merge via
-        # the plain path semantics, then split the result by bucket)
-        merged = upsert(updates, store.read(spark, name))
-        new_map = store.stage_groups(
-            merged.withColumn("_bucket", bucket_of), name, "_bucket")
-    else:
-        # scoped path: updates touch a known set of buckets; read, merge and
-        # rewrite only those — plus any loose files appended since the last
-        # bucketing (they can hold ANY bucket's keys, so the matched-row
-        # check must see them and their rows get re-homed into buckets here)
-        updates = updates.persist()
-        touched = {str(r["_b"]) for r in
-                   updates.select(bucket_of.alias("_b")).distinct()
-                   .collect()}
-        tfiles = [f for b in sorted(touched) for f in bucket_files.get(b, [])]
-        tfiles += loose
-        merged = upsert(updates, store.read_files(spark, name, tfiles)
-                        if tfiles else None)
-        # one write over the slice: the updates' buckets plus buckets whose
-        # rows were sitting in loose files (they must land somewhere
-        # bucketed). Touched buckets REPLACE their file-set (their mapped
-        # files were fully read into the slice); the others only had loose
-        # rows in the slice, so the re-homed rows APPEND to their set.
-        staged = store.stage_groups(
-            merged.withColumn("_bucket", bucket_of), name, "_bucket")
-        updates.unpersist()
-        new_map = {k: list(v) for k, v in bucket_files.items()}
-        for b in touched | set(staged):
-            fs = staged.get(b, [])
-            new_map[b] = fs if b in touched else new_map.get(b, []) + fs
-
-    specs: dict = snap.meta.get("bucket_spec", {})
+    files, meta = store.rewrite_buckets(spark, name, updates, upsert, key,
+                                        n_buckets)
     store.commit(epoch=int(snap.meta.get("last_epoch", -1)),
-                 replaces={name: ordered_files(new_map)},
-                 meta={**snap.meta,
-                       "merge_buckets": {**all_buckets, name: new_map},
-                       "bucket_spec": {**specs,
-                                       name: {"key": key,
-                                              "n": int(n_buckets)}}})
+                 replaces={name: files}, meta={**snap.meta, **meta})
+    updates.unpersist()
 
 
 def upsert_row(spark: "SparkSession", store: SnapshotStore, name: str,

@@ -81,7 +81,7 @@ def test_saturation_rebuild_restores_fpp_and_fp_safety(spark):
 
     # bucket 0 rebuilt: sized at BITS_PER_ITEM x actual items, FPP at design
     m2 = len(f2.loc[0, "bits"]) * 8
-    assert m2 == BPI * 2650 * 8
+    assert m2 == (BPI * 2650 + 7) // 8 * 8
     assert int(f2.loc[0, "n_items"]) == 2650
     assert bloom.fpp_estimate(2650, m2, K) < 0.05
 
@@ -131,7 +131,6 @@ def test_rebuild_fires_inside_the_real_crawl_loop(spark, tmp_path,
     from crawlspark.plans.crawler import run_crawl
     from tests.crawl_fixtures import SMALL, init_store, write_fixtures
 
-    monkeypatch.setattr(bloom, "BITS_PER_ITEM", 1)
     monkeypatch.setattr(bloom, "MIN_BITS", 1 << 10)
     cfg = CrawlConfig(batch_size=50, n_filter_buckets=1)
     fx = str(tmp_path / "fx")

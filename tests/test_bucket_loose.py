@@ -3,16 +3,22 @@
 The epoch loop appends url_seen rows WITHOUT re-bucketing (an O(batch)
 append — re-bucketing per epoch would be O(table)). Those appended files
 ("loose" — listed in the table but absent from the ``merge_buckets`` map)
-can hold any bucket's keys, so every bucket-scoped operation must treat
-them as touching EVERY bucket until :meth:`SnapshotStore.compact_bucketed`
-absorbs them. This file pins the two consumers:
+can hold any bucket's keys, so :meth:`SnapshotStore.rewrite_buckets`, the
+one scoped rewrite behind ``compact_bucketed``, ``merge_into`` and
+``forget_urls``, reads every loose file along with the touched buckets and
+applies one rule: a row goes to its bucket if that bucket is touched (or
+the table has no map yet); any other row stays loose. This file pins:
 
 - ``merge_into`` (scoped path): the matched-row newer-wins check must SEE
-  loose rows (or a stale loose row silently survives a newer update), and
-  loose rows must be re-homed into their buckets by the merge.
-- ``compact_bucketed``: absorbs loose files incrementally — only buckets
-  that actually received loose rows are rewritten; every other bucket keeps
-  its exact file paths (O(loose rows), never O(table)).
+  loose rows (or a stale loose row silently survives a newer update);
+  loose rows of the updated buckets are homed, the rest stay loose, and
+  untouched buckets keep their exact paths.
+- ``compact_bucketed``: scoped by the loose rows themselves, so every loose
+  row is homed; only buckets that received loose rows are rewritten and
+  every other bucket keeps its exact file paths (O(loose rows), never
+  O(table)).
+- the recorded bucket spec wins: a merge without ``n_buckets`` stays scoped
+  and keeps the map live, a different ``n_buckets`` is refused.
 """
 
 from __future__ import annotations
@@ -20,6 +26,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from crawlspark.config import CrawlConfig
+from crawlspark.operators import recrawl
 from crawlspark.tables import SnapshotStore, bucket_state, merge_into
 
 NB = 8
@@ -100,44 +108,88 @@ def test_scoped_merge_newer_wins_against_loose_row(spark, tmp_path):
     assert all_rows.count() == all_rows.select("k").distinct().count()
 
 
+def _bucket_of(spark, keys):
+    return {int(r["k"]): int(r["b"]) for r in spark.createDataFrame(
+        [(int(k),) for k in keys], "k long").select(
+            "k", F.pmod(F.xxhash64("k"), F.lit(NB)).cast("int").alias("b"))
+        .collect()}
+
+
+def _assert_layout(snap, name):
+    """Every table file is in exactly one bucket or loose, never both."""
+    m, loose = bucket_state(snap, name)
+    mapped = [f for fs in m.values() for f in fs]
+    assert len(mapped) == len(set(mapped))
+    assert not set(mapped) & set(loose)
+    assert set(mapped) | set(loose) == set(snap.tables[name])
+
+
 def test_scoped_merge_rehomes_loose_rows_into_buckets(spark, tmp_path):
-    """After a merge, no loose files remain (their rows were re-homed:
-    updated keys into their rewritten buckets, untouched keys appended to
-    their own buckets), the table content is the correct merge result, and
-    buckets that had neither updates nor loose rows keep exact paths."""
+    """One rule for loose rows: a merge homes the loose rows of the buckets
+    it touches and leaves every other loose row loose. Untouched buckets
+    keep exactly their paths, every table file is either mapped or loose,
+    and the table content is the correct merge result."""
     store = _store(tmp_path)
     _seed_bucketed(spark, store, n=400)
     map_before = store.snapshot().meta["merge_buckets"]["t"]
 
-    # loose rows: one NEW key per bucket (ids 10000.. spread over buckets)
-    loose_rows = [(10_000 + i, 1, i) for i in range(32)]
-    _append_loose(spark, store, loose_rows)
+    # loose rows: NEW keys 10000.. spread over every bucket
+    loose_keys = list(range(10_000, 10_032))
+    _append_loose(spark, store, [(k, 1, k) for k in loose_keys])
 
     # update confined to key 1's bucket
     merge_into(spark, store, "t", _rows(spark, [(1, 5, -1)]), "k",
                newer_col="ts", n_buckets=NB)
 
     snap = store.snapshot()
+    _assert_layout(snap, "t")
     m_after, loose_after = bucket_state(snap, "t")
-    assert loose_after == []          # everything re-homed
-    # every table file is accounted to exactly one bucket
-    assert sorted(f for fs in m_after.values() for f in fs) \
-        == sorted(snap.tables["t"])
-
-    b_of_1 = spark.range(2).select(
-        F.pmod(F.xxhash64(F.col("id")), F.lit(NB)).cast("int").alias("b")) \
-        .collect()[1]["b"]
+    buckets = _bucket_of(spark, [1] + loose_keys)
+    b1 = buckets[1]
+    assert m_after[str(b1)] != map_before[str(b1)]
     for b in range(NB):
-        if b == b_of_1:
-            continue
-        # untouched buckets: original mapped files all still present
-        # (re-homed loose rows arrive as APPENDED files, never a rewrite)
-        assert set(map_before[str(b)]) <= set(m_after[str(b)])
+        if b != b1:
+            assert m_after[str(b)] == map_before[str(b)]
+
+    # loose rows outside the touched bucket stay loose; those inside it
+    # now live in its rewritten files
+    stay = {k for k in loose_keys if buckets[k] != b1}
+    assert stay and stay != set(loose_keys)
+    assert {r["k"] for r in store.read_files(spark, "t", loose_after)
+            .select("k").collect()} == stay
+    homed = store.read_files(spark, "t", m_after[str(b1)])
+    assert homed.filter(F.col("k") >= 10_000).count() \
+        == len(loose_keys) - len(stay)
 
     got = store.read(spark, "t")
     assert got.count() == 400 + 32
     assert got.filter(F.col("k") == 1).collect()[0]["ts"] == 5
     assert got.filter(F.col("k") >= 10_000).count() == 32
+
+
+def test_recorded_bucket_spec_wins_over_merge_params(spark, tmp_path):
+    """A merge without ``n_buckets`` on a bucketed table is still the
+    scoped merge: the map stays live, so a later compaction reads no dead
+    files and brings back no pre-merge rows. A merge with a different
+    ``n_buckets`` is refused."""
+    store = _store(tmp_path)
+    _seed_bucketed(spark, store, n=100)
+    merge_into(spark, store, "t", _rows(spark, [(7, 5, -1)]), "k",
+               newer_col="ts")
+    store.compact_bucketed(spark, "t")
+
+    snap = store.snapshot()
+    mapped = {f for fs in snap.meta["merge_buckets"]["t"].values()
+              for f in fs}
+    assert mapped <= set(snap.tables["t"])
+    got = store.read(spark, "t")
+    assert got.count() == 100
+    assert got.select("k").distinct().count() == 100
+    assert got.filter(F.col("k") == 7).collect()[0]["ts"] == 5
+
+    with pytest.raises(ValueError, match="bucketed as"):
+        merge_into(spark, store, "t", _rows(spark, [(8, 5, -1)]), "k",
+                   newer_col="ts", n_buckets=2 * NB)
 
 
 def test_compact_bucketed_initial_then_incremental(spark, tmp_path):
@@ -192,24 +244,51 @@ def test_compact_bucketed_initial_then_incremental(spark, tmp_path):
 
 
 def test_scoped_merge_then_compact_roundtrip(spark, tmp_path):
-    """Interleave the two consumers the way the crawl loop does: merge,
-    loose append, compact, loose append, merge — the final content must
-    equal the plain (wholesale) merge result on the same sequence."""
+    """Interleave the three callers of the scoped rewrite the way the crawl
+    loop does: merge, loose append, compact, loose append, merge, loose
+    append, forget, compact — on url_seen, the table ``forget_urls``
+    rewrites. The final content must equal the plain (wholesale) result of
+    the same sequence, and every file stays mapped or loose."""
     store = _store(tmp_path)
-    _seed_bucketed(spark, store, n=100)
-    _append_loose(spark, store, [(200 + i, 1, i) for i in range(10)])
-    store.compact_bucketed(spark, "t")
-    _append_loose(spark, store, [(300 + i, 1, i) for i in range(10)])
-    merge_into(spark, store, "t",
-               _rows(spark, [(0, 9, 99), (205, 9, 99), (305, 9, 99)]),
-               "k", newer_col="ts", n_buckets=NB)
 
-    got = {(r["k"], r["ts"], r["payload"])
-           for r in store.read(spark, "t").collect()}
+    def rows(triples):
+        return spark.createDataFrame(
+            [(int(k), int(t), int(p)) for k, t, p in triples],
+            "url_hash long, ts long, payload long")
+
+    def append_loose(triples):
+        snap = store.snapshot()
+        store.commit(epoch=snap.epoch, meta=snap.meta, appends={
+            "url_seen": store.stage(rows(triples), "url_seen")})
+
+    merge_into(spark, store, "url_seen", rows((k, 0, k) for k in range(100)),
+               "url_hash", newer_col="ts", n_buckets=NB)
+    append_loose((200 + i, 1, i) for i in range(10))
+    store.compact_bucketed(spark, "url_seen")
+    append_loose((300 + i, 1, i) for i in range(10))
+    merge_into(spark, store, "url_seen",
+               rows([(0, 9, 99), (205, 9, 99), (305, 9, 99)]),
+               "url_hash", newer_col="ts", n_buckets=NB)
+    append_loose((400 + i, 1, i) for i in range(10))
+    forgotten = [3, 207, 307, 405, 9999]      # 9999 was never seen
+    assert recrawl.forget_urls(
+        spark, store, CrawlConfig(),
+        spark.createDataFrame([(k,) for k in forgotten], "url_hash long"),
+        epoch=1) == 4
+    _assert_layout(store.snapshot(), "url_seen")
+    store.compact_bucketed(spark, "url_seen")
+    snap = store.snapshot()
+    _assert_layout(snap, "url_seen")
+    assert bucket_state(snap, "url_seen")[1] == []
+
+    got = {(r["url_hash"], r["ts"], r["payload"])
+           for r in store.read(spark, "url_seen").collect()}
     expect = {(k, 0, k) for k in range(1, 100)}
     expect |= {(200 + i, 1, i) for i in range(10) if i != 5}
     expect |= {(300 + i, 1, i) for i in range(10) if i != 5}
+    expect |= {(400 + i, 1, i) for i in range(10)}
     expect |= {(0, 9, 99), (205, 9, 99), (305, 9, 99)}
+    expect = {r for r in expect if r[0] not in forgotten}
     assert got == expect
 
 

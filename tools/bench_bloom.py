@@ -11,6 +11,8 @@ bucket at BITS_PER_ITEM x actual items and restores the design FPP. Records
 BLOOM_BENCH.json; tools/bench_scaling.write_bench_md folds it into BENCH.md.
 
 Usage: python tools/bench_bloom.py [n_initial] [n_grown] [n_probe]
+Only a run at the default sizes rewrites BLOOM_BENCH.json and BENCH.md;
+a run with explicit sizes only prints its numbers.
 """
 
 from __future__ import annotations
@@ -34,10 +36,15 @@ def _seen_pdf(start: int, n: int) -> pd.DataFrame:
                          "host_hash": np.zeros(n, dtype=np.int64)})
 
 
+# the recorded sizes: only a run at these rewrites BLOOM_BENCH.json
+# and BENCH.md
+DEFAULT_SIZES = (5_000, 200_000, 200_000)
+
+
 def main() -> None:
-    n_initial = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000
-    n_grown = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
-    n_probe = int(sys.argv[3]) if len(sys.argv) > 3 else 200_000
+    sizes = tuple(int(a) for a in sys.argv[1:])
+    sizes += DEFAULT_SIZES[len(sizes):]
+    n_initial, n_grown, n_probe = sizes
 
     from pyspark.sql import functions as F
 
@@ -98,9 +105,12 @@ def main() -> None:
         "probe_wall_before_s": probe_wall_before,
         "probe_wall_after_s": probe_wall_after,
     }
+    print(json.dumps(out, indent=2))
+    if sizes != DEFAULT_SIZES:
+        print("explicit sizes: BLOOM_BENCH.json and BENCH.md not rewritten")
+        return
     with open(os.path.join(REPO, "BLOOM_BENCH.json"), "w") as fh:
         json.dump(out, fh, indent=2)
-    print(json.dumps(out, indent=2))
 
     from tools.bench_scaling import load_runs, write_bench_md
     write_bench_md(load_runs())

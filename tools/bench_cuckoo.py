@@ -15,6 +15,8 @@ records only the performance envelope. Writes CUCKOO_BENCH.json;
 tools/bench_scaling.write_bench_md folds it into BENCH.md.
 
 Usage: python tools/bench_cuckoo.py [n_items] [n_probe]
+Only a run at the default sizes rewrites CUCKOO_BENCH.json and BENCH.md;
+a run with explicit sizes only prints its numbers.
 """
 
 from __future__ import annotations
@@ -43,9 +45,15 @@ def _hashes(start: int, n: int) -> np.ndarray:
     return h.astype(np.int64)
 
 
+# the recorded sizes: only a run at these rewrites CUCKOO_BENCH.json
+# and BENCH.md
+DEFAULT_SIZES = (1_000_000, 1_000_000)
+
+
 def main() -> None:
-    n_items = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_probe = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
+    sizes = tuple(int(a) for a in sys.argv[1:])
+    sizes += DEFAULT_SIZES[len(sizes):]
+    n_items, n_probe = sizes
 
     seen = np.unique(_hashes(0, n_items))
     fresh = _hashes(100_000_000, n_probe)
@@ -109,9 +117,12 @@ def main() -> None:
             "forget_cost": "O(deleted) fingerprint clears",
         },
     }
+    print(json.dumps(out, indent=2))
+    if sizes != DEFAULT_SIZES:
+        print("explicit sizes: CUCKOO_BENCH.json and BENCH.md not rewritten")
+        return
     with open(os.path.join(REPO, "CUCKOO_BENCH.json"), "w") as fh:
         json.dump(out, fh, indent=2)
-    print(json.dumps(out, indent=2))
 
     from tools.bench_scaling import load_runs, write_bench_md
     write_bench_md(load_runs())
