@@ -16,8 +16,9 @@ Maps /root/reference/src/main.py's typer commands onto the engine:
   top        top-k crawled rows by a metric + job summary (the show-data
              surface, /root/reference/show_data.py:25-75: ORDER BY metric
              DESC listing, row total, crawl-job info)
-  compact    small-file compaction + snapshot expiry (the Iceberg
-             rewrite_data_files / expire_snapshots maintenance pair an
+  compact    one maintenance pass (plans.crawler.maintain_store): every
+             table compacted in one commit, then snapshot expiry (the
+             Iceberg rewrite_data_files / expire_snapshots pair an
              append-per-epoch store needs at scale)
   pipeline   init -> crawl -> export -> health summary (run-pipeline,
              main.py:276-340)
@@ -212,32 +213,20 @@ def cmd_top(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Small-file compaction + optional snapshot expiry (the Iceberg
+    """One maintenance pass, the crawl loop's own ``maintain_store``: every
+    table compacted in one commit, then snapshot expiry (the Iceberg
     rewrite_data_files / expire_snapshots maintenance pair)."""
+    from .config import CrawlConfig
+    from .plans.crawler import maintain_store
     from .tables import SnapshotStore
 
     spark = _spark(args.cpus)
     store = SnapshotStore(args.store)
-    tables = ([args.table] if args.table
-              else sorted(store.snapshot().tables))
-    compacted = {}
-    skipped = []
-    for t in tables:
-        try:
-            n = store.compact(spark, t, target_files=args.target_files,
-                              sort_cols=args.cluster_by.split(",")
-                              if args.cluster_by else None,
-                              small_file_bytes=args.small_file_bytes)
-        except ValueError:
-            if args.table:   # explicit request -> surface the refusal
-                raise
-            skipped.append(t)   # meta-pinned table (frontier) in all-mode
-            continue
-        if n:
-            compacted[t] = n
-    deleted = store.vacuum(keep_last=args.keep_last) if args.vacuum else []
-    print(json.dumps({"compacted_files": compacted, "skipped": skipped,
-                      "vacuumed": len(deleted)}))
+    compacted = maintain_store(spark, store, CrawlConfig(
+        compact_target_files=args.target_files,
+        vacuum_keep_last=args.keep_last))
+    print(json.dumps({"compacted_files": compacted,
+                      "commit_id": store.snapshot().commit_id}))
     return 0
 
 
@@ -328,21 +317,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--dir", default="migrations")
     p.set_defaults(fn=cmd_migrate)
 
-    p = sub.add_parser("compact", help="small-file compaction + vacuum")
+    p = sub.add_parser("compact", help="one maintenance pass: compact "
+                       "every table in one commit, then vacuum")
     p.add_argument("--store", required=True)
-    p.add_argument("--table", default=None,
-                   help="one table (default: every table in the snapshot)")
     p.add_argument("--target-files", type=int, default=1)
-    p.add_argument("--small-file-bytes", type=int, default=None,
-                   help="bin-pack mode: absorb only files below this size, "
-                        "leaving already-compacted large files untouched "
-                        "(default: wholesale rewrite)")
-    p.add_argument("--cluster-by", default=None,
-                   help="comma-separated sortWithinPartitions columns")
-    p.add_argument("--vacuum", action="store_true",
-                   help="also delete files unreferenced by the last "
-                        "--keep-last commits")
-    p.add_argument("--keep-last", type=int, default=2)
+    p.add_argument("--keep-last", type=int, default=2,
+                   help="commits whose files vacuum keeps")
     p.set_defaults(fn=cmd_compact)
 
     p = sub.add_parser("top", help="top-k crawled rows by a metric")

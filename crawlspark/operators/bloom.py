@@ -91,10 +91,18 @@ def _new_bits(n_items: int, bits_per_item: int, min_bits: int) -> np.ndarray:
 
 
 def latest_filter(filters: DataFrame | None) -> DataFrame | None:
-    """Collapse the append-only filter table to the newest row per bucket."""
+    """Collapse the append-only filter table to the newest row per bucket.
+
+    Ties on ``epoch`` go to the smaller ``n_items``: a bucket's only
+    same-epoch pair is that epoch's update and the forget that follows it
+    (``forget_urls`` runs after the epoch, stamped with its number), and a
+    forget only lowers ``n_items`` — a bloom rebuild counts exactly the
+    remaining rows, cuckoo subtracts the deleted count. So the later write
+    always wins, whatever order the files are read in."""
     if filters is None:
         return None
-    w = Window.partitionBy("bucket").orderBy(F.desc("epoch"))
+    w = Window.partitionBy("bucket").orderBy(F.desc("epoch"),
+                                             F.asc("n_items"))
     return (filters.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
 

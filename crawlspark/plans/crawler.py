@@ -15,13 +15,16 @@ Maps the reference's job lifecycle (T1/T2/T7/T8/T11 in SURVEY.md §2.8):
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
+from ..operators.bloom import latest_filter
 from ..operators.dedup import robots_flag
 from ..operators.recrawl import recrawl_pass
-from ..tables import SnapshotStore, ordered_files
+from ..tables import CommitConflictError, SnapshotStore, ordered_files
 from .epoch import EpochResult, record_failed_epoch, run_epoch
 
 # In-loop compaction is incremental (bin-pack): only files below this size
@@ -107,26 +110,24 @@ def stage_strata(store: SnapshotStore, rows: DataFrame,
 
 
 def compact_frontier_strata(spark: SparkSession, store: SnapshotStore,
-                            target_files: int = 1) -> int:
-    """Compact the frontier WITHIN each priority's pinned file list and
-    rewrite the meta pin atomically (VERDICT r4 #6). The frontier's
-    file-level partition pruning (``frontier_files_by_priority``) grows by
-    one file set per discovery batch / broadening — a long-running ingest
+                            target_files: int = 1) -> tuple | None:
+    """Plan a frontier compaction WITHIN each priority's pinned file list
+    (VERDICT r4 #6). The pin map (``frontier_files_by_priority``) grows by
+    one file set per discovery batch / broadening, so a long-running ingest
     stream would put O(batches) files behind every epoch's pop scan, and
     generic compaction rightly refuses meta-pinned tables (the rewritten
-    paths would dangle). Here each oversized stratum is rewritten into
-    one file re-clustered by (host, seq) — the same layout
-    init_run/broaden_frontier stage — and the table file list AND the pin
-    map are swapped in ONE commit, so no snapshot ever sees them disagree.
-    Strata at or under the target keep their exact files (incremental, like
-    bin-pack). Returns the number of files compacted away."""
+    paths would dangle). Here each oversized stratum is rewritten into one
+    file re-clustered by (host, seq), the layout init_run stages; strata
+    at or under the target keep their exact files. A plan like
+    ``SnapshotStore.compact``'s, with the rewritten pin map as its meta, so
+    the file list and the pins land in the same commit."""
     snap = store.snapshot()
     files_by_p = {k: list(v) for k, v in
                   snap.meta.get("frontier_files_by_priority", {}).items()}
     oversized = [p for p in sorted(files_by_p, key=int)
                  if len(files_by_p[p]) > target_files]
     if not oversized:
-        return 0
+        return None
     # label each stratum from its pin key, not a row column: the pin map,
     # not the rows, defines which stratum a file belongs to
     slice_df = None
@@ -138,76 +139,77 @@ def compact_frontier_strata(spark: SparkSession, store: SnapshotStore,
     staged = store.stage_groups(slice_df, "frontier", "_stratum",
                                 sort_cols=("host", "seq"))
     new_map = {**files_by_p, **{p: staged.get(p, []) for p in oversized}}
-    absorbed = sum(len(files_by_p[p]) for p in oversized)
     pinned_before = {f for fs in files_by_p.values() for f in fs}
     # preserve any frontier files outside the pin map (there are none in the
     # current writers, but a foreign append must survive maintenance)
     unpinned = [f for f in snap.tables.get("frontier", [])
                 if f not in pinned_before]
-    ordered = ordered_files(new_map) + unpinned
-    # Optimistic concurrency (r6, ADVICE item 1): this commit REPLACES the
-    # frontier file list and meta wholesale from the planning snapshot. If
-    # anything committed in between (notably a concurrent streaming
-    # fold_batch), landing the stale plan would silently clobber that
-    # commit's frontier appends, pin-map entries, and discovery-cursor
-    # advances — and the stream's checkpoint has moved on, so the lost
-    # discoveries would never be redelivered. require_base makes the store
-    # refuse; maintenance simply yields (the staged rewrite files stay
-    # unreferenced for vacuum) and the next maintenance pass replans.
-    from ..tables import CommitConflictError
-    try:
-        store.commit(epoch=snap.epoch, replaces={"frontier": ordered},
-                     meta={**snap.meta, "frontier_files_by_priority": new_map},
-                     require_base=snap.commit_id)
-    except CommitConflictError:
-        import warnings
-        warnings.warn(
-            "compact_frontier_strata: a concurrent commit landed between "
-            "planning and publish; yielding this maintenance pass (staged "
-            "rewrite files left for vacuum)")
-        return 0
-    return absorbed
+    return (ordered_files(new_map) + unpinned,
+            {"frontier_files_by_priority": new_map},
+            sum(len(files_by_p[p]) for p in oversized))
 
 
 def maintain_store(spark: SparkSession, store: SnapshotStore,
-                   cfg: CrawlConfig) -> None:
-    """Between-epoch table maintenance: compact every non-meta-pinned table
-    above the file target, then expire old snapshots. Storage-layer only —
-    identical crawl results with or without it (loop-parity-tested).
+                   cfg: CrawlConfig) -> dict[str, int]:
+    """Between-epoch table maintenance, the only code that publishes it
+    (the run loop and the CLI ``compact`` call it): plan every table's
+    compaction, publish all the rewrites in ONE commit, then expire old
+    snapshots. Storage-layer only — identical crawl results with or without
+    it (loop-parity-tested). Returns the files absorbed per rewritten
+    table ({} when the pass yields).
 
-    ``url_seen`` is maintained BUCKETED (key-hash file-sets): per-epoch
-    appends are absorbed into their buckets incrementally, which keeps the
-    TTL-recrawl forget (operators.recrawl.forget_urls) a bucket-scoped
-    DELETE instead of an O(table) rewrite — the difference that matters at
-    10^10 seen rows."""
+    ``url_seen`` is maintained BUCKETED (key-hash file-sets), which keeps
+    the TTL-recrawl forget (operators.recrawl.forget_urls) a bucket-scoped
+    DELETE instead of an O(table) rewrite at 10^10 seen rows.
+    ``seen_filter`` is folded to its newest row per bucket.
+
+    Each planner reads the current snapshot and the commit requires the
+    store to still be at ``snap`` (Iceberg's base-snapshot validation), so
+    every plan is against one snapshot. A commit landing in between
+    (notably a streaming fold_batch, whose stream never redelivers) would
+    otherwise be clobbered: its appends, pins and cursors. The pass then
+    warns and yields, vacuum included, since a writer is active; the next
+    pass replans and a later vacuum reclaims the staged files."""
     snap = store.snapshot()
+    plans = {}
     for name in sorted(snap.tables):
         if name == "url_seen":
-            # first pass records the bucket spec; later passes defer to the
-            # recorded one, so a store bucketed with another count keeps it
-            # (re-bucketing is an explicit offline operation, not something
-            # maintenance does implicitly)
-            if snap.meta.get("bucket_spec", {}).get(name):
-                store.compact_bucketed(spark, name)
-            else:
-                store.compact_bucketed(spark, name, key="url_hash",
-                                       n_buckets=USEEN_N_BUCKETS)
-            continue
-        if (name == "frontier"
+            # the first pass records the bucket spec; later passes keep the
+            # recorded one, whatever its count (re-bucketing is offline)
+            spec = (() if snap.meta.get("bucket_spec", {}).get(name)
+                    else ("url_hash", USEEN_N_BUCKETS))
+            plans[name] = store.compact_bucketed(spark, name, *spec)
+        elif (name == "frontier"
                 and snap.meta.get("frontier_files_by_priority")):
-            # meta-pinned stratum files need the pin-aware path: compact
-            # within each priority's list and rewrite the pin in the same
-            # commit (a long-running discovery stream otherwise grows the
-            # pop scan by one file set per batch)
-            compact_frontier_strata(
+            # meta-pinned strata: compact within each priority's pin list
+            plans[name] = compact_frontier_strata(
                 spark, store, target_files=cfg.compact_target_files)
-            continue
+        else:
+            try:
+                plans[name] = store.compact(
+                    spark, name, target_files=cfg.compact_target_files,
+                    small_file_bytes=COMPACT_SMALL_FILE_BYTES,
+                    transform=latest_filter if name == "seen_filter"
+                    else None)
+            except ValueError:
+                continue   # other meta-pinned tables stay as-is
+    plans = {name: plan for name, plan in plans.items() if plan is not None}
+    if plans:
+        meta = dict(snap.meta)
+        for _, plan_meta, _ in plans.values():
+            meta.update(plan_meta)
         try:
-            store.compact(spark, name, target_files=cfg.compact_target_files,
-                          small_file_bytes=COMPACT_SMALL_FILE_BYTES)
-        except ValueError:
-            continue   # other meta-pinned tables stay as-is
+            store.commit(epoch=snap.epoch, meta=meta,
+                         replaces={n: p[0] for n, p in plans.items()},
+                         require_base=snap.commit_id)
+        except CommitConflictError:
+            warnings.warn(
+                "maintain_store: a concurrent commit landed between planning "
+                "and publish; yielding this maintenance pass (staged "
+                "rewrite files left for vacuum)")
+            return {}
     store.vacuum(keep_last=cfg.vacuum_keep_last)
+    return {name: plan[2] for name, plan in plans.items()}
 
 
 def run_crawl(spark: SparkSession, store: SnapshotStore, images: DataFrame,

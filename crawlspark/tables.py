@@ -20,7 +20,9 @@ reads; the engine only uses ``stage``/``stage_groups``/``stage_pandas`` +
 ``read_files``/``files``/``needs_merge``, ``rewrite_buckets`` (the one scoped
 rewrite of a key-hash-bucketed table: ``MERGE INTO`` / ``DELETE WHERE``) and
 ``compact``/``compact_bucketed``/``vacuum``/``discard`` (maintenance), so the
-swap is config-only (SURVEY.md §7 M0).
+swap is config-only (SURVEY.md §7 M0). The rewrites stage files and return
+a plan without committing, so ``plans.crawler.maintain_store`` publishes a
+whole maintenance pass in one commit.
 
 Commit manifest ``_log/commit-%012d.json``::
 
@@ -262,11 +264,11 @@ class SnapshotStore:
         base-snapshot validation): when set, the commit refuses to land if
         the store's current commit_id no longer equals it — i.e. someone
         committed between this writer's planning snapshot and now. Wholesale
-        REPLACE+meta writers (maintenance that rewrites a whole table or a
-        meta map from a planning snapshot, e.g. compact_frontier_strata)
-        must pass it: without the check a concurrent append/commit's rows
-        and meta advances would be silently clobbered by the stale plan
-        (r6, ADVICE item 1)."""
+        REPLACE+meta writers (maintenance that rewrites tables and meta
+        maps from a planning snapshot, i.e. maintain_store) must pass it:
+        without the check a concurrent append/commit's rows and meta
+        advances would be silently clobbered by the stale plan (r6, ADVICE
+        item 1)."""
         cur = self.snapshot()
         if require_base is not None and cur.commit_id != require_base:
             raise CommitConflictError(
@@ -312,26 +314,25 @@ class SnapshotStore:
 
     def compact(self, spark: "SparkSession", name: str,
                 target_files: int = 1,
-                sort_cols: list[str] | None = None,
-                small_file_bytes: int | None = None) -> int:
-        """Small-file compaction — the Iceberg ``rewrite_data_files`` analog.
-        An append-per-epoch table accumulates one file set per commit (a
-        10^5-epoch crawl would put 10^5 files behind every scan); compaction
-        rewrites files into ``target_files`` files (optionally clustered by
-        ``sort_cols``, e.g. host_hash for per-host locality) and commits the
-        swap as a normal REPLACE. Snapshot isolation makes it safe under
-        concurrent readers: old manifests still reference the old files,
-        which stay on disk until :meth:`vacuum`.
+                small_file_bytes: int | None = None,
+                transform=None) -> tuple | None:
+        """Plan a small-file compaction — the Iceberg ``rewrite_data_files``
+        analog: an append-per-epoch table accumulates one file set per
+        commit (10^5 files behind every scan after 10^5 epochs), and
+        compaction rewrites them into ``target_files`` files, through
+        ``transform`` when given. Old manifests still reference the old
+        files, which stay on disk until :meth:`vacuum`.
 
         With ``small_file_bytes`` set, compaction is INCREMENTAL (Iceberg's
         bin-pack): only files smaller than the threshold are absorbed;
         already-compacted large files keep their exact paths and are never
-        re-read or rewritten. That keeps per-epoch maintenance O(new small
-        files) instead of O(table) — the difference between a bounded
-        maintenance job and rewriting a 100 TB crawl_log every few epochs.
-        ``small_file_bytes=None`` rewrites the whole table (one-off
-        re-clustering). Returns the number of files compacted away
-        (0 = nothing to do)."""
+        re-read or rewritten, so per-epoch maintenance is O(new small
+        files), not O(table). ``None`` rewrites the whole table.
+
+        A plan, not a commit (:meth:`rewrite_buckets`'s contract): returns
+        ``(files, meta, n_absorbed)`` — the table's new file list, the meta
+        entries to commit with it (none here) and the number of files
+        absorbed — or None when there is nothing to do."""
         snap = self.snapshot()
         rels = snap.tables.get(name, [])
         if small_file_bytes is None:
@@ -342,7 +343,7 @@ class SnapshotStore:
                 size = os.path.getsize(os.path.join(self.root, r))
                 (absorb if size < small_file_bytes else keep).append(r)
         if len(absorb) <= target_files:
-            return 0
+            return None
         # guard: a file whose path is tracked in snapshot meta (the
         # stratum-pruned frontier) cannot be absorbed — the meta reference
         # would dangle and a later vacuum would delete the file it points at
@@ -356,46 +357,41 @@ class SnapshotStore:
         reader = (spark.read.option("mergeSchema", "true")
                   if _needs_merge_schema(raw_sigs) else spark.read)
         df = reader.parquet(*[os.path.join(self.root, r) for r in absorb])
-        df = df.repartition(target_files)
-        if sort_cols:
-            df = df.sortWithinPartitions(*sort_cols)
+        if transform is not None:
+            df = transform(df)
         # keep tracking whatever bounds the absorbed files carried, so
         # compaction never silently disables manifest-stats pruning
         tracked = sorted({c for r in absorb
                           for c in snap.stats.get(r, {})
                           if not c.startswith("__")})
-        staged = self.stage(df, name, stats_cols=tracked or None)
-        self.commit(epoch=snap.epoch, replaces={name: keep + staged},
-                    meta=snap.meta)
-        return len(absorb)
+        staged = self.stage(df.repartition(target_files), name,
+                            stats_cols=tracked or None)
+        return keep + staged, {}, len(absorb)
 
     def compact_bucketed(self, spark: "SparkSession", name: str,
                          key: str | None = None,
-                         n_buckets: int | None = None) -> int:
-        """Re-bucket maintenance for a key-hash-bucketed table: home the
-        rows of files appended since the last bucketing ("loose" files,
+                         n_buckets: int | None = None) -> tuple | None:
+        """Plan re-bucket maintenance for a key-hash-bucketed table: home
+        the rows of files appended since the last bucketing ("loose" files,
         e.g. the epoch loop's per-epoch url_seen appends) into their
         buckets. This is :meth:`rewrite_buckets` scoped by the loose rows,
         so only buckets that receive loose rows are rewritten and every
-        other bucket keeps its exact files. The first call performs the one-time
-        full bucketing and needs ``key``/``n_buckets``; later calls use the
-        recorded spec. On Iceberg this is ``rewrite_data_files`` on a
-        bucket-partitioned table. Returns the number of loose files
-        absorbed."""
+        other bucket keeps its exact files. The first call performs the
+        one-time full bucketing and needs ``key``/``n_buckets``; later calls
+        use the recorded spec. On Iceberg this is ``rewrite_data_files`` on
+        a bucket-partitioned table. A plan like :meth:`compact`'s, with the
+        ``merge_buckets``/``bucket_spec`` meta; None when nothing is loose."""
         snap = self.snapshot()
         spec = _bucket_spec(snap, name, key, n_buckets)
         _, loose = bucket_state(snap, name)
         if not loose:
-            return 0
+            return None
         if spec is None:
             raise ValueError(
                 f"table {name!r} has no recorded bucket_spec; pass "
                 "key/n_buckets for the initial bucketing")
-        files, meta = self.rewrite_buckets(spark, name, None,
-                                           lambda rows: rows, *spec)
-        self.commit(epoch=snap.epoch, replaces={name: files},
-                    meta={**snap.meta, **meta})
-        return len(loose)
+        return (*self.rewrite_buckets(spark, name, None, lambda rows: rows,
+                                      *spec), len(loose))
 
     def rewrite_buckets(self, spark: "SparkSession", name: str,
                         scope: "DataFrame | None", transform,

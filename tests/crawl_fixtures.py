@@ -42,6 +42,19 @@ def init_store(spark, tmp: str, store_dir: str) -> SnapshotStore:
     return store
 
 
+def commit_plan(store: SnapshotStore, name: str, plan) -> int:
+    """Publish one maintenance planner's ``(files, meta, n_absorbed)`` plan
+    for table ``name`` on its own, the way ``maintain_store`` publishes a
+    pass; returns the files absorbed (0 for a None plan)."""
+    if plan is None:
+        return 0
+    files, meta, n_absorbed = plan
+    snap = store.snapshot()
+    store.commit(snap.epoch, replaces={name: files},
+                 meta={**snap.meta, **meta})
+    return n_absorbed
+
+
 def make_oracle(pdfs: dict, cfg: CrawlConfig) -> CrawlOracle:
     return CrawlOracle(pdfs["frontier"], pdfs["robots"], pdfs["budgets"],
                        pdfs["image_caption"], cfg)

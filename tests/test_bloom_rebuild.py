@@ -160,3 +160,32 @@ def test_rebuild_fires_inside_the_real_crawl_loop(spark, tmp_path,
     terminal = log[log["status"].isin(
         ["ok", "invalid_payload", "failed", "robots_denied"])]
     assert terminal["url_hash"].is_unique
+
+
+@pytest.mark.slow
+def test_filter_tracks_the_seen_set_across_forgets(spark, tmp_path):
+    """In a TTL-recrawl loop a forget writes its rebuilt rows with the same
+    epoch as that epoch's update rows. The newest row per bucket must be
+    the forget's, so the next epoch's update builds on it: after every
+    epoch and forget, the latest ``n_items`` of each bucket equals the
+    url_seen rows in that bucket, as it does without recrawl."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.plans.crawler import run_crawl
+    from tests.crawl_fixtures import SMALL, init_store, write_fixtures
+
+    nb = 8
+    cfg = CrawlConfig(batch_size=50, n_filter_buckets=nb, recrawl_every=1,
+                      recrawl_ttl_epochs=1, recrawl_topk=20)
+    fx = str(tmp_path / "fx")
+    pdfs = write_fixtures(fx, SMALL)
+    store = init_store(spark, fx, str(tmp_path / "store"))
+    images = spark.createDataFrame(pdfs["image_caption"])
+    for _ in range(4):
+        run_crawl(spark, store, images, cfg, max_epochs=1)
+        seen = store.read(spark, "url_seen").toPandas()
+        want = (seen["host_hash"] % nb).value_counts().to_dict()
+        latest = bloom.latest_filter(
+            store.read(spark, "seen_filter")).toPandas()
+        got = dict(zip(latest["bucket"], latest["n_items"]))
+        assert got == want, store.snapshot().meta.get("last_forget")
+    assert store.snapshot().meta["last_forget"]["n_forgotten"] > 0

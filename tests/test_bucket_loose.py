@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from crawlspark.config import CrawlConfig
 from crawlspark.operators import recrawl
 from crawlspark.tables import SnapshotStore, bucket_state, merge_into
+from tests.crawl_fixtures import commit_plan
 
 NB = 8
 
@@ -176,7 +177,7 @@ def test_recorded_bucket_spec_wins_over_merge_params(spark, tmp_path):
     _seed_bucketed(spark, store, n=100)
     merge_into(spark, store, "t", _rows(spark, [(7, 5, -1)]), "k",
                newer_col="ts")
-    store.compact_bucketed(spark, "t")
+    commit_plan(store, "t", store.compact_bucketed(spark, "t"))
 
     snap = store.snapshot()
     mapped = {f for fs in snap.meta["merge_buckets"]["t"].values()
@@ -202,7 +203,8 @@ def test_compact_bucketed_initial_then_incremental(spark, tmp_path):
     with pytest.raises(ValueError, match="bucket_spec"):
         store.compact_bucketed(spark, "t")
     n_files_before = len(store.snapshot().tables["t"])
-    n_absorbed = store.compact_bucketed(spark, "t", key="k", n_buckets=NB)
+    n_absorbed = commit_plan(store, "t", store.compact_bucketed(
+        spark, "t", key="k", n_buckets=NB))
     assert n_absorbed == n_files_before
     snap = store.snapshot()
     assert snap.meta["bucket_spec"]["t"] == {"key": "k", "n": NB}
@@ -210,7 +212,7 @@ def test_compact_bucketed_initial_then_incremental(spark, tmp_path):
     assert loose0 == [] and set(m0) == {str(b) for b in range(NB)}
 
     # no-op when nothing is loose
-    assert store.compact_bucketed(spark, "t") == 0
+    assert store.compact_bucketed(spark, "t") is None
     assert store.snapshot().meta["merge_buckets"]["t"] == m0
 
     # incremental: loose rows confined to key 1's bucket -> ONLY that
@@ -225,7 +227,8 @@ def test_compact_bucketed_initial_then_incremental(spark, tmp_path):
     _append_loose(spark, store, [(k, 1, -1) for k in keys_b1])
     n_loose = len(bucket_state(store.snapshot(), "t")[1])
     assert n_loose >= 1
-    assert store.compact_bucketed(spark, "t") == n_loose
+    assert commit_plan(store, "t",
+                       store.compact_bucketed(spark, "t")) == n_loose
 
     m1, loose1 = bucket_state(store.snapshot(), "t")
     assert loose1 == []
@@ -264,7 +267,7 @@ def test_scoped_merge_then_compact_roundtrip(spark, tmp_path):
     merge_into(spark, store, "url_seen", rows((k, 0, k) for k in range(100)),
                "url_hash", newer_col="ts", n_buckets=NB)
     append_loose((200 + i, 1, i) for i in range(10))
-    store.compact_bucketed(spark, "url_seen")
+    commit_plan(store, "url_seen", store.compact_bucketed(spark, "url_seen"))
     append_loose((300 + i, 1, i) for i in range(10))
     merge_into(spark, store, "url_seen",
                rows([(0, 9, 99), (205, 9, 99), (305, 9, 99)]),
@@ -276,7 +279,7 @@ def test_scoped_merge_then_compact_roundtrip(spark, tmp_path):
         spark.createDataFrame([(k,) for k in forgotten], "url_hash long"),
         epoch=1) == 4
     _assert_layout(store.snapshot(), "url_seen")
-    store.compact_bucketed(spark, "url_seen")
+    commit_plan(store, "url_seen", store.compact_bucketed(spark, "url_seen"))
     snap = store.snapshot()
     _assert_layout(snap, "url_seen")
     assert bucket_state(snap, "url_seen")[1] == []

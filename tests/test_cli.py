@@ -60,3 +60,22 @@ def test_top_rejects_missing_table(tmp_path, capfd):
 
     SnapshotStore(str(tmp_path / "empty"))  # store with no commits
     assert main(["top", "--store", str(tmp_path / "empty")]) == 1
+
+
+def test_compact_is_the_maintenance_pass(spark, crawled_store, capfd):
+    """``compact`` runs ``maintain_store``: one commit for every table's
+    rewrite, url_seen bucketed like in-loop maintenance, rows unchanged."""
+    from crawlspark.tables import SnapshotStore
+
+    store = SnapshotStore(crawled_store)
+    before = store.snapshot()
+    n_log = store.read(spark, "crawl_log").count()
+    capfd.readouterr()
+    assert main(["compact", "--store", crawled_store]) == 0
+    out = json.loads(capfd.readouterr().out.strip().splitlines()[-1])
+    snap = store.snapshot()
+    assert snap.commit_id == before.commit_id + 1 == out["commit_id"]
+    assert "url_seen" in snap.meta["bucket_spec"]
+    assert out["compacted_files"]["crawl_log"] > 1
+    assert len(snap.tables["crawl_log"]) == 1
+    assert store.read(spark, "crawl_log").count() == n_log

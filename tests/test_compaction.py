@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.tables import SnapshotStore
+from tests.crawl_fixtures import commit_plan
 
 
 @pytest.fixture()
@@ -36,20 +37,19 @@ def test_compact_preserves_content(spark, appended_store):
     pre_rows = sorted(map(tuple, pre.collect()))
     assert len(store.files("log")) == 10
 
-    n = store.compact(spark, "log", target_files=2,
-                      sort_cols=["host_hash"])
+    n = commit_plan(store, "log", store.compact(spark, "log", target_files=2))
     assert n == 10
     assert len(store.files("log")) == 2
     post = store.read(spark, "log")
     assert sorted(map(tuple, post.collect())) == pre_rows
     # already compact -> no-op
-    assert store.compact(spark, "log", target_files=2) == 0
+    assert store.compact(spark, "log", target_files=2) is None
 
 
 def test_time_travel_survives_compaction_until_vacuum(spark, appended_store):
     store = appended_store
     pre_cid = store.snapshot().commit_id
-    store.compact(spark, "log", target_files=1)
+    commit_plan(store, "log", store.compact(spark, "log", target_files=1))
     # the pre-compaction snapshot still resolves to the old files on disk
     old = store.read(spark, "log", commit_id=pre_cid)
     assert old.count() == 500
@@ -135,7 +135,8 @@ def test_binpack_compaction_leaves_large_files_untouched(spark, appended_store):
     pre_rows = sorted(map(tuple, store.read(spark, "log").collect()))
 
     # make one file decisively "large": full-table compact into 1 file first
-    assert store.compact(spark, "log", target_files=1) == 10
+    assert commit_plan(store, "log",
+                       store.compact(spark, "log", target_files=1)) == 10
     big = store.snapshot().tables["log"]
     assert len(big) == 1
     big_size = os.path.getsize(os.path.join(store.root, big[0]))
@@ -149,8 +150,9 @@ def test_binpack_compaction_leaves_large_files_untouched(spark, appended_store):
                      meta={"last_epoch": e})
     assert len(store.files("log")) == 7   # 1 big + 6 small
 
-    n = store.compact(spark, "log", target_files=1,
-                      small_file_bytes=big_size)   # big file is >= threshold
+    n = commit_plan(store, "log", store.compact(
+        spark, "log", target_files=1,
+        small_file_bytes=big_size))                # big file is >= threshold
     assert n == 6                                  # only the smalls absorbed
     post_files = store.snapshot().tables["log"]
     assert len(post_files) == 2
@@ -165,7 +167,7 @@ def test_binpack_compaction_leaves_large_files_untouched(spark, appended_store):
     small_now = [f for f in store.snapshot().tables["log"]
                  if os.path.getsize(os.path.join(store.root, f)) < big_size]
     assert store.compact(spark, "log", target_files=len(small_now),
-                         small_file_bytes=big_size) == 0
+                         small_file_bytes=big_size) is None
 
 
 def test_vacuum_reclaims_crashed_stage_dirs(spark, appended_store):
@@ -254,15 +256,9 @@ def test_commit_require_base_conflict(spark, appended_store):
     assert store.snapshot().meta["last_epoch"] == 100
 
 
-def test_frontier_pin_compaction_yields_on_concurrent_commit(
-        spark, tmp_path, recwarn, monkeypatch):
-    """compact_frontier_strata REPLACES the frontier list and meta wholesale
-    from its planning snapshot; if a commit (e.g. a streaming fold_batch)
-    lands in between, it must yield instead of clobbering the interleaved
-    commit's appends/pin entries/cursors (r6, ADVICE item 1)."""
-    from crawlspark.plans.crawler import compact_frontier_strata
-    from crawlspark.tables import SnapshotStore
-
+def _pinned_frontier_store(spark, tmp_path):
+    """A store whose frontier is 2 priority strata of 3 files each, pinned
+    in ``frontier_files_by_priority``, with discovery cursor 7."""
     store = SnapshotStore(str(tmp_path / "store"))
     files = {}
     for p in ("0", "1"):
@@ -275,8 +271,39 @@ def test_frontier_pin_compaction_yields_on_concurrent_commit(
                  appends={"frontier": files["0"] + files["1"]},
                  meta={"frontier_files_by_priority": files,
                        "discovery_cursors": {"ckpt": 7}})
+    return store
 
-    # interpose: after compact's planning snapshot is taken, land a commit
+
+def _fold_batch_commit(spark, store, n_files=1):
+    """Land what ``ingest.fold_batch`` commits: new frontier files, their
+    priority-0 pins and the discovery cursor 7 -> 8. Returns the files."""
+    df = (spark.range(900, 900 + 10 * n_files)
+          .select(F.col("id").alias("seq"), (F.col("id") % 5).alias("host"))
+          .repartition(n_files))
+    staged = store.stage(df, "frontier")
+    snap = store.snapshot()
+    meta = dict(snap.meta)
+    meta["discovery_cursors"] = {"ckpt": 8}
+    by_p = {k: list(v) for k, v in
+            meta["frontier_files_by_priority"].items()}
+    by_p["0"] = by_p["0"] + staged
+    meta["frontier_files_by_priority"] = by_p
+    store.commit(epoch=1, appends={"frontier": staged}, meta=meta)
+    return staged
+
+
+def test_frontier_pin_compaction_yields_on_concurrent_commit(
+        spark, tmp_path, recwarn, monkeypatch):
+    """maintain_store REPLACES the frontier list and meta wholesale from
+    its planning snapshot; if a commit (e.g. a streaming fold_batch) lands
+    in between, it must yield instead of clobbering the interleaved
+    commit's appends/pin entries/cursors (r6, ADVICE item 1)."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.plans.crawler import maintain_store
+
+    store = _pinned_frontier_store(spark, tmp_path)
+    # interpose: after maintenance's planning snapshot is taken, land a
+    # commit
     real_snapshot = store.snapshot
     fired = {"done": False}
 
@@ -284,27 +311,164 @@ def test_frontier_pin_compaction_yields_on_concurrent_commit(
         snap = real_snapshot(*a, **kw)
         if not fired["done"]:
             fired["done"] = True
-            df = (spark.range(900, 910)
-                  .select(F.col("id").alias("seq"),
-                          (F.col("id") % 5).alias("host")))
-            staged = store.stage(df, "frontier")
-            meta = dict(snap.meta)
-            meta["discovery_cursors"] = {"ckpt": 8}
-            by_p = {k: list(v) for k, v in
-                    meta["frontier_files_by_priority"].items()}
-            by_p["0"] = by_p["0"] + staged
-            meta["frontier_files_by_priority"] = by_p
-            store.commit(epoch=1, appends={"frontier": staged}, meta=meta)
+            _fold_batch_commit(spark, store)
         return snap
 
     monkeypatch.setattr(store, "snapshot", racing_snapshot)
-    absorbed = compact_frontier_strata(spark, store, target_files=1)
+    absorbed = maintain_store(spark, store, CrawlConfig(
+        compact_target_files=1, vacuum_keep_last=1))
     monkeypatch.undo()
-    assert absorbed == 0
+    assert absorbed == {}
     assert [w for w in recwarn.list
             if "concurrent commit" in str(w.message)]
     # the racing commit's meta advances survive
     assert store.snapshot().meta["discovery_cursors"]["ckpt"] == 8
+    # the pass yielded before its vacuum
+    assert store.commits() == [0, 1]
+
+
+def test_maintenance_yields_on_commit_during_another_tables_stage(
+        spark, tmp_path, recwarn, monkeypatch):
+    """The race lands while maintenance stages a non-frontier table, after
+    the frontier's rewrite is planned: one commit for the whole pass means
+    the stale frontier plan never lands, so the racing commit's cursor,
+    frontier files and pins survive, and no vacuum runs."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.plans.crawler import maintain_store
+
+    store = _pinned_frontier_store(spark, tmp_path)
+    for e in range(3):
+        snap = store.snapshot()
+        store.commit(epoch=e, meta=snap.meta, appends={"log": store.stage(
+            spark.range(e * 10, e * 10 + 10).coalesce(1), "log")})
+    log_files = store.snapshot().tables["log"]
+    raced = {}
+    real_stage = store.stage
+
+    def racing_stage(df, name, *a, **kw):
+        if name == "log" and not raced:
+            raced["files"] = _fold_batch_commit(spark, store, n_files=4)
+        return real_stage(df, name, *a, **kw)
+
+    monkeypatch.setattr(store, "stage", racing_stage)
+    absorbed = maintain_store(spark, store, CrawlConfig(
+        compact_target_files=1, vacuum_keep_last=1))
+    monkeypatch.undo()
+    assert absorbed == {}
+    assert [w for w in recwarn.list
+            if "concurrent commit" in str(w.message)]
+    snap = store.snapshot()
+    assert snap.meta["discovery_cursors"]["ckpt"] == 8
+    assert len(raced["files"]) == 4
+    pins = snap.meta["frontier_files_by_priority"]
+    assert set(raced["files"]) <= set(pins["0"])
+    assert set(raced["files"]) <= set(snap.tables["frontier"])
+    assert {f for fs in pins.values() for f in fs} == \
+        set(snap.tables["frontier"])
+    assert snap.tables["log"] == log_files
+    # no vacuum: every manifest is still there
+    assert store.commits() == list(range(snap.commit_id + 1))
+
+
+def test_maintenance_pass_is_one_commit_and_keeps_the_epoch_commit(
+        spark, tmp_path):
+    """Every table's rewrite lands in ONE commit, so with
+    ``vacuum_keep_last=2`` the last epoch's commit survives the pass. The
+    pass buckets url_seen, compacts the pinned frontier strata and folds
+    seen_filter to its newest row per bucket, where a same-epoch tie (the
+    epoch's update, then the forget's lower count) goes to the forget."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.plans.crawler import maintain_store
+
+    store = _pinned_frontier_store(spark, tmp_path)
+    for e in range(3):
+        flt = spark.createDataFrame(
+            [(b, 10 * e + b, e) for b in range(4)],
+            "bucket int, n_items long, epoch int")
+        appends = {
+            "log": store.stage(spark.range(e * 10, e * 10 + 10)
+                               .coalesce(1), "log"),
+            "url_seen": store.stage(spark.range(e * 10, e * 10 + 10)
+                                    .withColumnRenamed("id", "url_hash")
+                                    .coalesce(1), "url_seen"),
+            "seen_filter": store.stage(flt.coalesce(1), "seen_filter")}
+        if e == 2:     # the forget after epoch 2 lowers buckets 0 and 1
+            appends["seen_filter"] += store.stage(
+                spark.createDataFrame([(0, 3, 2), (1, 4, 2)],
+                                      "bucket int, n_items long, epoch int")
+                .coalesce(1), "seen_filter")
+        store.commit(epoch=e, appends=appends, meta=store.snapshot().meta)
+    epoch_cid = store.snapshot().commit_id
+
+    absorbed = maintain_store(spark, store, CrawlConfig(
+        compact_target_files=1, vacuum_keep_last=2))
+    assert absorbed == {"frontier": 6, "log": 3, "seen_filter": 4,
+                        "url_seen": 3}
+    snap = store.snapshot()
+    assert snap.commit_id == epoch_cid + 1
+    # the epoch commit is still readable, files and all
+    assert store.snapshot(epoch_cid).commit_id == epoch_cid
+    assert store.read(spark, "log", commit_id=epoch_cid).count() == 30
+    assert store.commits() == [epoch_cid, epoch_cid + 1]
+
+    assert len(snap.tables["log"]) == 1
+    assert store.read(spark, "log").count() == 30
+    assert snap.meta["bucket_spec"]["url_seen"]["key"] == "url_hash"
+    assert store.read(spark, "url_seen").count() == 30
+    pins = snap.meta["frontier_files_by_priority"]
+    assert all(len(fs) == 1 for fs in pins.values())
+    assert [f for p in sorted(pins, key=int) for f in pins[p]] == \
+        snap.tables["frontier"]
+    assert store.read(spark, "frontier").count() == 100
+    assert snap.meta["discovery_cursors"] == {"ckpt": 7}
+    folded = sorted(map(tuple, store.read(spark, "seen_filter").collect()))
+    assert folded == [(0, 3, 2), (1, 4, 2), (2, 22, 2), (3, 23, 2)]
+
+
+@pytest.mark.slow
+def test_seen_filter_fold_keeps_loop_parity(spark, tmp_path):
+    """With maintenance after every epoch, seen_filter holds at most one
+    row per bucket, and the crawl and the newest filter row per bucket
+    equal those of the same crawl without maintenance."""
+    import dataclasses
+
+    from crawlspark import datagen
+    from crawlspark.operators.bloom import latest_filter
+    from crawlspark.plans.crawler import run_crawl
+    from tests.crawl_fixtures import SMALL, SMALL_CFG, init_store, \
+        write_fixtures
+
+    fx = str(tmp_path / "fx")
+    write_fixtures(fx, SMALL)
+    images = spark.createDataFrame(datagen.gen_image_caption(SMALL))
+
+    def crawl(store_dir, cfg):
+        store = init_store(spark, fx, store_dir)
+        run_crawl(spark, store, images, cfg, max_epochs=4)
+        return store
+
+    plain = crawl(str(tmp_path / "plain"), SMALL_CFG)
+    folded = crawl(str(tmp_path / "folded"),
+                   dataclasses.replace(SMALL_CFG, compact_every=1,
+                                       compact_target_files=1,
+                                       vacuum_keep_last=2))
+
+    def rows(store, table):
+        return sorted(repr(sorted(r.asDict().items()))
+                      for r in store.read(spark, table).collect())
+
+    for table in ("crawl_log", "url_seen"):
+        assert rows(plain, table) == rows(folded, table), table
+    assert folded.read(spark, "seen_filter").count() \
+        <= SMALL_CFG.n_filter_buckets
+    assert plain.read(spark, "seen_filter").count() \
+        > SMALL_CFG.n_filter_buckets
+
+    def latest(store):
+        return sorted(map(tuple, latest_filter(store.read(
+            spark, "seen_filter")).collect()))
+
+    assert latest(plain) == latest(folded)
 
 
 def test_read_merges_schema_for_pre_feature_file_like_compact(

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.tables import SnapshotStore
+from tests.crawl_fixtures import commit_plan
 
 
 @pytest.fixture()
@@ -76,7 +77,8 @@ def test_unstatted_files_are_never_skipped(spark, store):
 
 def test_stats_follow_replaces_and_compaction(spark, store):
     _commit_epochs(spark, store, range(8))
-    n_absorbed = store.compact(spark, "crawl_log", target_files=2)
+    n_absorbed = commit_plan(store, "crawl_log", store.compact(
+        spark, "crawl_log", target_files=2))
     assert n_absorbed == 8
     snap = store.snapshot()
     rels = snap.tables["crawl_log"]

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from crawlspark.config import CrawlConfig
 from crawlspark.operators import recrawl
 from crawlspark.plans.crawler import run_crawl
-from tests.crawl_fixtures import SMALL, init_store, write_fixtures
+from tests.crawl_fixtures import SMALL, commit_plan, init_store, \
+    write_fixtures
 
 TERMINAL = ("ok", "invalid_payload")
 
@@ -139,8 +140,8 @@ def test_bucketed_forget_rewrites_only_touched_buckets(spark, tmp_path):
         F.lit(0).cast("int").alias("first_seen_epoch"),
         F.lit(1).cast("int").alias("first_seen_priority"))
     store.commit(0, appends={"url_seen": store.stage(seen, "url_seen")})
-    assert store.compact_bucketed(spark, "url_seen", key="url_hash",
-                                  n_buckets=8) > 0
+    assert commit_plan(store, "url_seen", store.compact_bucketed(
+        spark, "url_seen", key="url_hash", n_buckets=8)) > 0
     # loose append after bucketing (the per-epoch url_seen append shape)
     extra = spark.range(400, 430).select(
         F.col("id").alias("url_hash"), (F.col("id") % 13).alias("host_hash"),
@@ -236,7 +237,8 @@ def test_maintenance_survives_bucket_count_change_across_resume(
         F.lit(0).cast("int").alias("first_seen_epoch"),
         F.lit(1).cast("int").alias("first_seen_priority"))
     store.commit(0, appends={"url_seen": store.stage(seen, "url_seen")})
-    store.compact_bucketed(spark, "url_seen", key="url_hash", n_buckets=4)
+    commit_plan(store, "url_seen", store.compact_bucketed(
+        spark, "url_seen", key="url_hash", n_buckets=4))
     assert store.snapshot().meta["bucket_spec"]["url_seen"]["n"] == 4
     # maintenance with a DIFFERENT bucket count of its own: no crash, the
     # recorded spec wins
@@ -265,8 +267,8 @@ def test_bucketed_forget_preserves_evolved_schema(spark, tmp_path):
         F.lit(0).cast("int").alias("first_seen_epoch"),
         F.lit(1).cast("int").alias("first_seen_priority"))
     store.commit(0, appends={"url_seen": store.stage(v1, "url_seen")})
-    assert store.compact_bucketed(spark, "url_seen", key="url_hash",
-                                  n_buckets=4) > 0
+    assert commit_plan(store, "url_seen", store.compact_bucketed(
+        spark, "url_seen", key="url_hash", n_buckets=4)) > 0
     # evolved loose append: a new column the bucketed files lack
     v2 = spark.range(100, 130).select(
         F.col("id").alias("url_hash"),

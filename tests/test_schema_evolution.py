@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.tables import SnapshotStore
+from tests.crawl_fixtures import commit_plan
 
 
 @pytest.fixture()
@@ -60,7 +61,8 @@ def test_homogeneous_table_stays_single_variant(spark, store):
 def test_compaction_unifies_evolved_schema(spark, store):
     store.commit(0, appends={"t": store.stage(_v1(spark).coalesce(1), "t")})
     store.commit(1, appends={"t": store.stage(_v2(spark).coalesce(1), "t")})
-    assert store.compact(spark, "t", target_files=1) == 2
+    assert commit_plan(store, "t",
+                       store.compact(spark, "t", target_files=1)) == 2
     # rewrite unified the schema: fast path back, evolved column intact
     assert store.schema_variants("t") == 1
     df = store.read(spark, "t")
@@ -83,12 +85,12 @@ def test_bucketed_maintenance_handles_evolved_loose_files(spark, store):
     # initial bucketing at v1, then loose v2 appends with an added column:
     # compact_bucketed must fold them in without dropping the new column
     store.commit(0, appends={"t": store.stage(_v1(spark, n=40), "t")})
-    assert store.compact_bucketed(spark, "t", key="url_hash",
-                                  n_buckets=4) > 0
+    assert commit_plan(store, "t", store.compact_bucketed(
+        spark, "t", key="url_hash", n_buckets=4)) > 0
     store.commit(2, appends={"t": store.stage(_v2(spark, n=10,
                                                   base=5000), "t")},
                  meta=store.snapshot().meta)   # carry bucket_spec forward
-    assert store.compact_bucketed(spark, "t") > 0
+    assert commit_plan(store, "t", store.compact_bucketed(spark, "t")) > 0
     df = store.read(spark, "t")
     assert set(df.columns) == {"url_hash", "epoch", "image_fmt"}
     assert df.count() == 50

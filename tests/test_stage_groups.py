@@ -20,6 +20,7 @@ from pyspark.sql.readwriter import DataFrameWriter
 from crawlspark.config import CrawlConfig
 from crawlspark.operators import recrawl
 from crawlspark.tables import SnapshotStore, bucket_state
+from tests.crawl_fixtures import commit_plan
 
 NB = 8
 
@@ -61,7 +62,8 @@ def _append(store, name, files):
 def _bucketed_seen(spark, tmp_path, n=400):
     store = SnapshotStore(str(tmp_path / "st"))
     _append(store, "url_seen", store.stage(_seen_rows(spark, 0, n), "url_seen"))
-    store.compact_bucketed(spark, "url_seen", key="url_hash", n_buckets=NB)
+    commit_plan(store, "url_seen", store.compact_bucketed(
+        spark, "url_seen", key="url_hash", n_buckets=NB))
     return store
 
 
@@ -105,7 +107,8 @@ def test_compact_bucketed_is_one_write(spark, tmp_path, writes):
     _append(store, "url_seen",
             store.stage(_seen_rows(spark, 1000, 1040, 1), "url_seen"))
     del writes[:]
-    assert store.compact_bucketed(spark, "url_seen") == 1
+    assert commit_plan(store, "url_seen",
+                       store.compact_bucketed(spark, "url_seen")) == 1
     assert len(writes) == 1
     m1, loose = bucket_state(store.snapshot(), "url_seen")
     assert loose == [] and all(len(fs) == 1 for fs in m1.values())
@@ -120,7 +123,7 @@ def test_grouped_bucketing_keeps_plain_reads(spark, tmp_path):
     _append(store, "url_seen",
             store.stage(_seen_rows(spark, 1000, 1010, 1), "url_seen"))
     assert not store.needs_merge("url_seen")
-    store.compact_bucketed(spark, "url_seen")
+    commit_plan(store, "url_seen", store.compact_bucketed(spark, "url_seen"))
     assert not store.needs_merge("url_seen")
 
 
@@ -150,7 +153,8 @@ def test_forget_is_one_write_over_buckets_and_loose(spark, tmp_path, writes):
             assert after_map[b] != before_map[b]
         else:
             assert after_map[b] == before_map[b]
-    # loose rows stay loose: rewritten, not re-homed into buckets
+    # the forget homes the loose rows of the buckets it touches; the rest
+    # stay loose, rewritten into one new loose file
     assert len(after_loose) == 1 and after_loose != loose
     got = store.read(spark, "url_seen")
     assert got.count() == 430 - len(targets)

@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from crawlspark import datagen
 from crawlspark.streaming import ingest
-from tests.crawl_fixtures import SMALL, init_store, write_fixtures
+from tests.crawl_fixtures import SMALL, commit_plan, init_store, \
+    write_fixtures
 
 DISC_COLS = ["url", "priority", "seq", "image_id", "discovered_at"]
 
@@ -277,7 +278,8 @@ def test_frontier_pin_compaction_bounds_file_growth(spark, tmp_path_factory):
     pre_rows = rows_by_name(store.read(spark, "frontier"))
     pre_remaining = snap.meta["remaining_by_priority"]
 
-    absorbed = compact_frontier_strata(spark, store, target_files=1)
+    absorbed = commit_plan(store, "frontier", compact_frontier_strata(
+        spark, store, target_files=1))
     assert absorbed > 0
     snap2 = store.snapshot()
     pins2 = snap2.meta["frontier_files_by_priority"]
@@ -289,13 +291,14 @@ def test_frontier_pin_compaction_bounds_file_growth(spark, tmp_path_factory):
     assert rows_by_name(store.read(spark, "frontier")) == pre_rows
     assert snap2.meta["remaining_by_priority"] == pre_remaining
     # idempotent at steady state
-    assert compact_frontier_strata(spark, store, target_files=1) == 0
+    assert compact_frontier_strata(spark, store, target_files=1) is None
 
     # growth resumes, the next maintenance pass re-bounds it
     for b in range(n_batches, n_batches + 3):
         ingest.fold_batch(spark, store, _mini_batch(spark, seed=500 + b), b,
                           cursor_tag="ckpt-C")
-    assert compact_frontier_strata(spark, store, target_files=1) > 0
+    assert commit_plan(store, "frontier", compact_frontier_strata(
+        spark, store, target_files=1)) > 0
     pins3 = store.snapshot().meta["frontier_files_by_priority"]
     assert all(len(fs) == 1 for fs in pins3.values())
     # the old files stay readable until vacuum (snapshot isolation), then go
