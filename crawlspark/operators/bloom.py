@@ -165,25 +165,29 @@ def rebuild_buckets(all_seen: DataFrame, buckets: list[int],
     ``BITS_PER_ITEM`` per actual item — the saturation answer: the new array
     is sized to the bucket's real cardinality, restoring the design-point FPP
     (~1.2% at 10 bits / 4 hashes). ``all_seen`` needs url_hash + host_hash
-    and must include the current epoch's new rows. One groupBy+applyInPandas
-    pass over only the saturated buckets' rows — O(bucket), not O(table).
-    FP-safety holds by construction: every seen hash sets its bits in the
-    rebuilt array, so no false negatives are possible."""
+    and must include the current epoch's new rows. One cogroup+applyInPandas
+    pass over only the listed buckets' rows — O(bucket), not O(table). Every
+    listed bucket gets a row: one with no seen rows left is ``n_items`` 0 at
+    ``MIN_BITS``. FP-safety holds by construction: every seen hash sets its
+    bits in the rebuilt array, so no false negatives are possible."""
     k, bits_per_item, min_bits = NUM_HASHES, BITS_PER_ITEM, MIN_BITS
     sb = (all_seen
           .withColumn("bucket",
                       F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int"))
           .filter(F.col("bucket").isin([int(b) for b in buckets])))
+    wanted = all_seen.sparkSession.createDataFrame(
+        [(int(b),) for b in buckets], "bucket int")
 
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
+    def _build(pdf: pd.DataFrame, want: pd.DataFrame) -> pd.DataFrame:
         hashes = pdf["url_hash"].unique()
         bits = _new_bits(len(hashes), bits_per_item, min_bits)
         _set_bits(bits, hashes, k)
-        return pd.DataFrame({"bucket": [bucket], "bits": [bits.tobytes()],
+        return pd.DataFrame({"bucket": [int(want["bucket"].iloc[0])],
+                             "bits": [bits.tobytes()],
                              "n_items": [len(hashes)], "epoch": [epoch]})
 
     return (sb.select("bucket", "url_hash").groupBy("bucket")
+            .cogroup(wanted.groupBy("bucket"))
             .applyInPandas(_build, schema=FILTER_SCHEMA))
 
 
@@ -256,9 +260,10 @@ def forgotten_buckets(hit: DataFrame, remaining: DataFrame,
     """New filter rows after ``hit`` leaves the seen set. Bits are shared,
     so clearing one would false-negative other URLs: the buckets ``hit``
     touches are instead rebuilt from ``remaining`` (the seen set after the
-    forget) — O(bucket), the cost cuckoo's delete avoids. Both frames need
-    ``url_hash`` + ``host_hash``; ``filters`` is not read (a rebuild needs
-    no prior state)."""
+    forget) — O(bucket), the cost cuckoo's delete avoids; a bucket the
+    forget empties gets an ``n_items`` 0 row, as cuckoo's does. Both frames
+    need ``url_hash`` + ``host_hash``; ``filters`` is not read (a rebuild
+    needs no prior state)."""
     touched = sorted(r["bucket"] for r in hit.select(
         F.pmod(F.col("host_hash"), F.lit(n_buckets)).cast("int")
         .alias("bucket")).distinct().collect())

@@ -13,13 +13,14 @@ Admission itself is pure window algebra (JVM, whole-stage codegen) — no UDF on
 the hot path. The per-host skew kill (north_rule) is a two-phase top-k:
 
   phase 1: rank within (host, salt = pmod(url_hash, SALTS)) and keep
-           rank <= max capacity  — a mega-host's millions of candidate rows
-           collapse to at most SALTS * capacity rows without ever hashing the
+           rank <= avail(h)  — a mega-host's millions of candidate rows
+           collapse to at most SALTS * avail rows without ever hashing the
            whole host into one task;
   phase 2: rank within host on the survivors (tiny groups) vs avail tokens.
 
-Phase 1 is lossless: any row in the host's true top-``capacity`` by global
-order is also in the top-``capacity`` of its salt group.
+Phase 1 is lossless: any row in the host's true top-``avail`` by global
+order is also in the top-``avail`` of its salt group. Any smaller cap would
+drop rows of a host whose tokens exceed it.
 
 :func:`admit` is the engine's one admission implementation; the reference
 semantics it must reproduce are ``oracle.simulator.host_availability`` and
@@ -54,8 +55,7 @@ def _order():
 
 
 def admit(candidates: DataFrame, budgets: DataFrame, epoch: int,
-          batch_size: int, max_capacity: int = 64,
-          host_key: str = "host",
+          batch_size: int, host_key: str = "host",
           derive_missing_host_key: bool = False) -> DataFrame:
     """Returns the admitted batch with ``admission_idx`` (0-based position in
     global crawl order) — the engine's TakeOrderedAndProject with a per-host
@@ -91,9 +91,9 @@ def admit(candidates: DataFrame, budgets: DataFrame, epoch: int,
 
     # broadcast-join avail BEFORE the windows: hosts with no budget this
     # epoch (backed off / drained) drop before any sort, and phase 1 caps at
-    # each host's own avail rather than the global max — both prune shuffle
-    # volume; phase 1 stays lossless (a row in the host's true top-avail is
-    # in its salt group's top-avail)
+    # each host's own avail — both prune shuffle volume; phase 1 stays
+    # lossless (a row in the host's true top-avail is in its salt group's
+    # top-avail)
     budgeted = (candidates
                 .join(F.broadcast(avail.select(host_key, "avail")),
                       host_key, "left")
@@ -101,8 +101,7 @@ def admit(candidates: DataFrame, budgets: DataFrame, epoch: int,
                 .filter(F.col("avail") > 0))
     pruned = (budgeted
               .withColumn("_sr", F.row_number().over(w_salt))
-              .filter(F.col("_sr") <= F.least(F.col("avail"),
-                                              F.lit(max_capacity)))
+              .filter(F.col("_sr") <= F.col("avail"))
               .drop("_sr"))
     ranked = (pruned
               .withColumn("_hr", F.row_number().over(w_host))

@@ -8,7 +8,7 @@ cannot, which is why the cuckoo backend exists).
 ``forget_urls`` makes a set of URLs eligible again in ONE atomic commit:
 
 * ``url_seen``      — exact ground truth: anti-join the targets out
-  through :meth:`crawlspark.tables.SnapshotStore.rewrite_buckets`, the
+  through :meth:`crawlspark.tables.SnapshotStore.rewrite_partitions`, the
   store's scoped rewrite (the Iceberg ``DELETE WHERE`` analog: only the
   part of the table that can hold the targets is rewritten);
 * ``seen_filter``   — the backend's ``forgotten_buckets``:
@@ -56,9 +56,9 @@ def forget_urls(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
         return 0
     remaining = url_seen.join(keys, "url_hash", "left_anti")
 
-    files, rewrite_meta = store.rewrite_buckets(
-        spark, "url_seen", hit,
-        lambda rows: rows.join(keys, "url_hash", "left_anti"))
+    files, _ = store.rewrite_partitions(
+        spark, "url_seen", lambda rows: rows.join(keys, "url_hash", "left_anti"),
+        scope=hit)
 
     appends: dict = {}
     seen_filter = store.read(spark, "seen_filter")
@@ -71,7 +71,6 @@ def forget_urls(spark: SparkSession, store: SnapshotStore, cfg: CrawlConfig,
 
     store.commit(epoch, appends=appends, replaces={"url_seen": files}, meta={
         **snap.meta,
-        **rewrite_meta,
         **(meta_extra or {}),
         "last_forget": {"epoch": epoch, "n_forgotten": n_forgotten},
     })

@@ -3,7 +3,7 @@
 Maps the reference's job lifecycle (T1/T2/T7/T8/T11 in SURVEY.md §2.8):
 
 * ``init_run``   — stage the frontier one file-set per priority stratum
-                   (manual partition pruning, analog of the ordered strata
+                   (identity(priority) partitions, analog of the ordered strata
                    list /root/reference/src/infrastructure/github_api.py:221-462),
                    robots + budget dims, and commit snapshot 0.
 * ``run_crawl``  — epoch loop; each epoch is one atomic snapshot commit, so a
@@ -15,56 +15,64 @@ Maps the reference's job lifecycle (T1/T2/T7/T8/T11 in SURVEY.md §2.8):
 
 from __future__ import annotations
 
+import os
 import warnings
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..operators.bloom import latest_filter
 from ..operators.dedup import robots_flag
 from ..operators.recrawl import recrawl_pass
-from ..tables import CommitConflictError, SnapshotStore, ordered_files
+from ..tables import (CommitConflictError, SnapshotStore, ordered_files,
+                      partition_label)
 from .epoch import EpochResult, record_failed_epoch, run_epoch
 
 # In-loop compaction is incremental (bin-pack): only files below this size
 # are absorbed, so steady-state maintenance is O(new small files), never
 # O(table).
 COMPACT_SMALL_FILE_BYTES = 64 << 20
-# url_seen is maintained key-hash BUCKETED (merge_buckets file-sets) so the
-# TTL-recrawl forget is a bucket-scoped DELETE, never an O(table) rewrite.
-# At production scale this is sized so one bucket ~ one task's worth of seen
-# rows; a store keeps the count its first bucketing recorded.
+# url_seen is partitioned bucket(url_hash, USEEN_N_BUCKETS) so the TTL-recrawl
+# forget is a bucket-scoped DELETE, never an O(table) rewrite. At production
+# scale this is sized so one bucket ~ one task's worth of seen rows; a store
+# keeps the spec its first init_run recorded.
 USEEN_N_BUCKETS = 16
+# the frontier is partitioned identity(priority): an epoch reads only the
+# strata its prefix rule selects; files are clustered by (host, seq)
+FRONTIER_SPEC = {"key": "priority", "sort": ["host", "seq"]}
 
 
 def init_run(spark: SparkSession, store: SnapshotStore, frontier: DataFrame,
              robots: DataFrame, budgets: DataFrame) -> None:
     """Commit snapshot 0: frontier split by priority (file-level partition
-    pruning), broadcast dims, exact per-stratum remaining counts. The
-    ``robots_denied`` flag is precomputed here (enqueue-time evaluation of
-    the static per-run robots dim) so epoch scheduling never needs URL
-    strings before materialization."""
-    frontier = robots_flag(frontier, robots)
-    counts = {int(r["priority"]): int(r["n"]) for r in
-              frontier.groupBy("priority").agg(F.count("*").alias("n")).collect()}
-    files_by_priority: dict[str, list[str]] = {}
-    appends = {"frontier": stage_strata(store, frontier, files_by_priority),
-               "robots": store.stage(robots, "robots")}
-    replaces = {"politeness_budget": store.stage(budgets, "politeness_budget")}
+    pruning), broadcast dims, exact per-stratum remaining counts, and the
+    partition specs of ``frontier`` and ``url_seen``. The ``robots_denied``
+    flag is precomputed here (enqueue-time evaluation of the static per-run
+    robots dim) so epoch scheduling never needs URL strings before
+    materialization. Re-running it on a store replaces the frontier, robots
+    and budgets."""
+    files, counts = stage_strata(store, robots_flag(frontier, robots))
+    replaces = {"frontier": files,
+                "robots": store.stage(robots, "robots"),
+                "politeness_budget": store.stage(budgets, "politeness_budget")}
     # Carry pre-init snapshot meta forward (the reference's setup order runs
     # migrations BEFORE init — migrations_applied must survive init), but
     # NOT crawl-lifecycle keys: re-initializing an existing store starts the
     # crawl state fresh (a stale fallback_added would silently disable
-    # broadening on the new run).
-    _CRAWL_KEYS = {"remaining_by_priority", "frontier_files_by_priority",
-                   "last_epoch", "cum_terminal", "counters", "fallback_added"}
+    # broadening on the new run). A recorded partition spec wins: the
+    # files it labelled may still be live.
+    _CRAWL_KEYS = {"remaining_by_priority", "last_epoch", "cum_terminal",
+                   "counters", "fallback_added"}
     prior_meta = {k: v for k, v in store.snapshot().meta.items()
                   if k not in _CRAWL_KEYS}
-    store.commit(epoch=-1, appends=appends, replaces=replaces, meta={
+    store.commit(epoch=-1, replaces=replaces, meta={
         **prior_meta,
+        "partition_spec": {
+            "frontier": FRONTIER_SPEC,
+            "url_seen": {"key": "url_hash", "n": USEEN_N_BUCKETS},
+            **prior_meta.get("partition_spec", {})},
         "remaining_by_priority": {str(k): v for k, v in counts.items()},
-        "frontier_files_by_priority": files_by_priority,
         "last_epoch": -1,
     })
 
@@ -78,128 +86,70 @@ def broaden_frontier(spark: SparkSession, store: SnapshotStore,
     commit: new stratum files + bumped remaining counters + the
     ``fallback_added`` flag (so a resumed run never re-broadens)."""
     snap = store.snapshot()
-    fallback = robots_flag(fallback, store.read(spark, "robots"))
-    counts = {int(r["priority"]): int(r["n"]) for r in
-              fallback.groupBy("priority").agg(F.count("*").alias("n")).collect()}
+    files, counts = stage_strata(
+        store, robots_flag(fallback, store.read(spark, "robots")))
     remaining = {int(k): int(v) for k, v in
                  snap.meta.get("remaining_by_priority", {}).items()}
     for p, n in counts.items():
         remaining[p] = remaining.get(p, 0) + n
-    files_by_p = {k: list(v) for k, v in
-                  snap.meta.get("frontier_files_by_priority", {}).items()}
     store.commit(
         epoch=int(snap.meta.get("last_epoch", -1)),
-        appends={"frontier": stage_strata(store, fallback, files_by_p)},
+        appends={"frontier": files},
         meta={**snap.meta,
               "remaining_by_priority": {str(k): v for k, v in remaining.items()},
-              "frontier_files_by_priority": files_by_p,
               "fallback_added": True})
 
 
-def stage_strata(store: SnapshotStore, rows: DataFrame,
-                 pins: dict[str, list[str]]) -> list[str]:
-    """Stage frontier rows one file per priority stratum, clustered by
-    (host, seq), in one write. Appends each stratum's new files to ``pins``
-    (a ``frontier_files_by_priority`` map) and returns them all."""
+def stage_strata(store: SnapshotStore,
+                 rows: DataFrame) -> tuple[list[str], dict[int, int]]:
+    """Stage frontier rows one file per priority stratum (``FRONTIER_SPEC``),
+    clustered by (host, seq), in one write. Returns the files and each
+    stratum's row count, read from the staged files' parquet footers, so
+    counting the enqueue costs no Spark job."""
     staged = store.stage_groups(
-        rows.withColumn("_stratum", F.col("priority")), "frontier",
-        "_stratum", sort_cols=("host", "seq"))
-    for p, fs in staged.items():
-        pins[p] = pins.get(p, []) + fs
-    return ordered_files(staged)
-
-
-def compact_frontier_strata(spark: SparkSession, store: SnapshotStore,
-                            target_files: int = 1) -> tuple | None:
-    """Plan a frontier compaction WITHIN each priority's pinned file list
-    (VERDICT r4 #6). The pin map (``frontier_files_by_priority``) grows by
-    one file set per discovery batch / broadening, so a long-running ingest
-    stream would put O(batches) files behind every epoch's pop scan, and
-    generic compaction rightly refuses meta-pinned tables (the rewritten
-    paths would dangle). Here each oversized stratum is rewritten into one
-    file re-clustered by (host, seq), the layout init_run stages; strata
-    at or under the target keep their exact files. A plan like
-    ``SnapshotStore.compact``'s, with the rewritten pin map as its meta, so
-    the file list and the pins land in the same commit."""
-    snap = store.snapshot()
-    files_by_p = {k: list(v) for k, v in
-                  snap.meta.get("frontier_files_by_priority", {}).items()}
-    oversized = [p for p in sorted(files_by_p, key=int)
-                 if len(files_by_p[p]) > target_files]
-    if not oversized:
-        return None
-    # label each stratum from its pin key, not a row column: the pin map,
-    # not the rows, defines which stratum a file belongs to
-    slice_df = None
-    for p in oversized:
-        part = (store.read_files(spark, "frontier", files_by_p[p])
-                .withColumn("_stratum", F.lit(int(p))))
-        slice_df = (part if slice_df is None else slice_df
-                    .unionByName(part, allowMissingColumns=True))
-    staged = store.stage_groups(slice_df, "frontier", "_stratum",
-                                sort_cols=("host", "seq"))
-    new_map = {**files_by_p, **{p: staged.get(p, []) for p in oversized}}
-    pinned_before = {f for fs in files_by_p.values() for f in fs}
-    # preserve any frontier files outside the pin map (there are none in the
-    # current writers, but a foreign append must survive maintenance)
-    unpinned = [f for f in snap.tables.get("frontier", [])
-                if f not in pinned_before]
-    return (ordered_files(new_map) + unpinned,
-            {"frontier_files_by_priority": new_map},
-            sum(len(files_by_p[p]) for p in oversized))
+        rows.withColumn("_stratum", partition_label(FRONTIER_SPEC)),
+        "frontier", "_stratum", sort_cols=FRONTIER_SPEC["sort"])
+    counts = {int(p): sum(pq.ParquetFile(os.path.join(store.root, f))
+                          .metadata.num_rows for f in fs)
+              for p, fs in staged.items()}
+    return ordered_files(staged), counts
 
 
 def maintain_store(spark: SparkSession, store: SnapshotStore,
                    cfg: CrawlConfig) -> dict[str, int]:
     """Between-epoch table maintenance, the only code that publishes it
     (the run loop and the CLI ``compact`` call it): plan every table's
-    compaction, publish all the rewrites in ONE commit, then expire old
-    snapshots. Storage-layer only — identical crawl results with or without
-    it (loop-parity-tested). Returns the files absorbed per rewritten
-    table ({} when the pass yields).
+    ``SnapshotStore.compact``, publish all the rewrites in ONE commit, then
+    expire old snapshots. Storage-layer only — identical crawl results with
+    or without it (loop-parity-tested). Returns the files absorbed per
+    rewritten table ({} when the pass yields).
 
-    ``url_seen`` is maintained BUCKETED (key-hash file-sets), which keeps
-    the TTL-recrawl forget (operators.recrawl.forget_urls) a bucket-scoped
-    DELETE instead of an O(table) rewrite at 10^10 seen rows.
+    A partitioned table (``frontier`` by priority, ``url_seen`` by url_hash
+    bucket, as recorded by ``init_run``) has its loose rows homed and its
+    oversized partitions rewritten, which keeps the TTL-recrawl forget
+    (operators.recrawl.forget_urls) a bucket-scoped DELETE instead of an
+    O(table) rewrite at 10^10 seen rows. Other tables are bin-packed, and
     ``seen_filter`` is folded to its newest row per bucket.
 
     Each planner reads the current snapshot and the commit requires the
     store to still be at ``snap`` (Iceberg's base-snapshot validation), so
     every plan is against one snapshot. A commit landing in between
     (notably a streaming fold_batch, whose stream never redelivers) would
-    otherwise be clobbered: its appends, pins and cursors. The pass then
-    warns and yields, vacuum included, since a writer is active; the next
-    pass replans and a later vacuum reclaims the staged files."""
+    otherwise be clobbered: its appends and cursors. The pass then warns
+    and yields, vacuum included, since a writer is active; the next pass
+    replans and a later vacuum reclaims the staged files."""
     snap = store.snapshot()
     plans = {}
     for name in sorted(snap.tables):
-        if name == "url_seen":
-            # the first pass records the bucket spec; later passes keep the
-            # recorded one, whatever its count (re-bucketing is offline)
-            spec = (() if snap.meta.get("bucket_spec", {}).get(name)
-                    else ("url_hash", USEEN_N_BUCKETS))
-            plans[name] = store.compact_bucketed(spark, name, *spec)
-        elif (name == "frontier"
-                and snap.meta.get("frontier_files_by_priority")):
-            # meta-pinned strata: compact within each priority's pin list
-            plans[name] = compact_frontier_strata(
-                spark, store, target_files=cfg.compact_target_files)
-        else:
-            try:
-                plans[name] = store.compact(
-                    spark, name, target_files=cfg.compact_target_files,
-                    small_file_bytes=COMPACT_SMALL_FILE_BYTES,
-                    transform=latest_filter if name == "seen_filter"
-                    else None)
-            except ValueError:
-                continue   # other meta-pinned tables stay as-is
-    plans = {name: plan for name, plan in plans.items() if plan is not None}
+        plan = store.compact(
+            spark, name, target_files=cfg.compact_target_files,
+            small_file_bytes=COMPACT_SMALL_FILE_BYTES,
+            transform=latest_filter if name == "seen_filter" else None)
+        if plan is not None:
+            plans[name] = plan
     if plans:
-        meta = dict(snap.meta)
-        for _, plan_meta, _ in plans.values():
-            meta.update(plan_meta)
         try:
-            store.commit(epoch=snap.epoch, meta=meta,
+            store.commit(epoch=snap.epoch, meta=snap.meta,
                          replaces={n: p[0] for n, p in plans.items()},
                          require_base=snap.commit_id)
         except CommitConflictError:
@@ -209,7 +159,7 @@ def maintain_store(spark: SparkSession, store: SnapshotStore,
                 "rewrite files left for vacuum)")
             return {}
     store.vacuum(keep_last=cfg.vacuum_keep_last)
-    return {name: plan[2] for name, plan in plans.items()}
+    return {name: plan[1] for name, plan in plans.items()}
 
 
 def run_crawl(spark: SparkSession, store: SnapshotStore, images: DataFrame,

@@ -29,8 +29,8 @@ is a real cut. The scratch files are deleted when the epoch ends, and
 ``SnapshotStore.vacuum`` reclaims them after a crash.
 
 Scale levers (explicit, per north_rule):
-  * **priority partition pruning** — the frontier is stored one file-set per
-    stratum; an epoch reads only the shortest stratum prefix whose remaining
+  * **priority partition pruning** — the frontier is partitioned
+    identity(priority), one file-set per stratum; an epoch reads only the shortest stratum prefix whose remaining
     row budget covers 2x batch_size (the prefix rule is part of the defined
     semantics: the oracle applies the identical rule, so parity holds).
     The rest of a 10^10-row frontier is never touched.
@@ -58,7 +58,7 @@ from ..operators import dedup, politeness
 from ..operators.validate import (OUTCOME_DEFERRED, OUTCOME_FETCHED,
                                   OUTCOME_RETRY, fetch_and_validate,
                                   outcome_col)
-from ..tables import SnapshotStore
+from ..tables import SnapshotStore, partition_state
 
 BASE_TS = "2026-01-01 00:00:00"
 
@@ -153,13 +153,14 @@ def run_epoch(spark: SparkSession, store: SnapshotStore, images: DataFrame,
     snap = store.snapshot()
     remaining = {int(k): int(v)
                  for k, v in snap.meta.get("remaining_by_priority", {}).items()}
-    frontier_files = snap.meta.get("frontier_files_by_priority", {})
+    # the frontier's strata are its partitions: labels on the files, so a
+    # file appended under a stale committer's meta stays poppable
+    strata, _ = partition_state(snap, "frontier")
 
     p_max = choose_prefix(remaining, cfg.batch_size)
-    files = []
-    for p in sorted(int(k) for k in frontier_files):
-        if p <= p_max and remaining.get(p, 0) > 0:
-            files.extend(frontier_files[str(p)])
+    files = [f for p in sorted(strata or {}, key=int)
+             if int(p) <= p_max and remaining.get(int(p), 0) > 0
+             for f in strata[p]]
     res = EpochResult(epoch=epoch, p_max=p_max, remaining_by_priority=dict(remaining))
 
     # -- COMPACT scheduling read: every stage up to admission runs on hashed
@@ -395,7 +396,6 @@ def run_epoch(spark: SparkSession, store: SnapshotStore, images: DataFrame,
     store.commit(epoch, appends=appends, replaces=replaces, meta={
         **snap.meta,
         "remaining_by_priority": {str(k): v for k, v in remaining.items()},
-        "frontier_files_by_priority": frontier_files,
         "last_epoch": epoch,
         "cum_terminal": int(snap.meta.get("cum_terminal", 0)) + res.n_terminal,
         "counters": {"ok": res.n_ok, "invalid": res.n_invalid,

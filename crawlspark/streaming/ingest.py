@@ -133,21 +133,17 @@ def fold_batch(spark: SparkSession, store: SnapshotStore,
     if enqueued is not None:
         batch = batch.join(enqueued.select("url_hash"), "url_hash",
                            "left_anti")
-    batch = batch.persist()
-    counts = {int(r["priority"]): int(r["n"]) for r in
-              batch.groupBy("priority").agg(F.count("*").alias("n"))
-              .collect()}
-    if not counts:
+    # the batch is read once, by the staging write; the per-stratum counts
+    # come from the staged files' footers
+    staged, counts = stage_strata(store, batch)
+    if not staged:
         # nothing new — no commit (no manifest churn for all-dup batches);
         # the cursor intentionally does not advance, replaying a no-op
         # batch is another no-op
-        batch.unpersist()
         return
     snap = store.snapshot()
     remaining = {int(k): int(v) for k, v in
                  snap.meta.get("remaining_by_priority", {}).items()}
-    files_by_p = dict(snap.meta.get("frontier_files_by_priority", {}))
-    staged = stage_strata(store, batch, files_by_p)
     for p, n in counts.items():
         remaining[p] = remaining.get(p, 0) + n
     cursors = dict(snap.meta.get("discovery_cursors", {}))
@@ -159,10 +155,8 @@ def fold_batch(spark: SparkSession, store: SnapshotStore,
         meta={**snap.meta,
               "remaining_by_priority":
                   {str(k): v for k, v in remaining.items()},
-              "frontier_files_by_priority": files_by_p,
               "discovery_cursors": cursors,
               "last_discovery_batch": int(batch_id)})
-    batch.unpersist()
 
 
 def lineage_tag(checkpoint_dir: str) -> str:

@@ -17,12 +17,22 @@ same guarantees the design relies on:
 On a real cluster this class is swapped for Iceberg ``MERGE INTO`` / snapshot
 reads; the engine only uses ``stage``/``stage_groups``/``stage_pandas`` +
 ``commit`` (write, then publish atomically), ``snapshot``/``read``/
-``read_files``/``files``/``needs_merge``, ``rewrite_buckets`` (the one scoped
-rewrite of a key-hash-bucketed table: ``MERGE INTO`` / ``DELETE WHERE``) and
-``compact``/``compact_bucketed``/``vacuum``/``discard`` (maintenance), so the
-swap is config-only (SURVEY.md §7 M0). The rewrites stage files and return
-a plan without committing, so ``plans.crawler.maintain_store`` publishes a
-whole maintenance pass in one commit.
+``read_files``/``files``/``needs_merge``, ``rewrite_partitions`` (the one
+scoped rewrite of a partitioned table: ``MERGE INTO`` / ``DELETE WHERE``)
+and ``compact``/``vacuum``/``discard`` (maintenance), so the swap is
+config-only (SURVEY.md §7 M0). The rewrites stage files and return a plan
+without committing, so ``plans.crawler.maintain_store`` publishes a whole
+maintenance pass in one commit.
+
+**Partitioned tables.** A table may carry one partition spec, recorded once
+in meta ``partition_spec[name]``: identity(``key``) or bucket(``key``,
+``n``) = ``pmod(xxhash64(key), n)``, plus an optional write ``sort``. Like
+an Iceberg manifest entry, each file :meth:`SnapshotStore.stage_groups`
+writes records its partition label in its stats entry (``__part__``), so a
+table's ``{label: files}`` map and its loose files (appended unpartitioned,
+e.g. the epoch's per-epoch url_seen rows) are derived from the snapshot
+(:func:`partition_state`). No meta value names a data file, so an append
+that lands under a committer with stale meta keeps its label.
 
 Commit manifest ``_log/commit-%012d.json``::
 
@@ -52,12 +62,14 @@ class Snapshot:
     epoch: int
     tables: dict  # name -> list[str] (paths relative to store root)
     meta: dict
-    # relpath -> {col: [min, max], "__schema__": sig, "__empty__": bool} —
-    # per-file column bounds + schema fingerprint recorded at stage time
-    # (Iceberg manifest column stats / schema tracking), used for
-    # scan-planning file skips and schema-evolution detection; absence of a
+    # relpath -> {col: [min, max], "__schema__": sig, "__empty__": bool,
+    # "__part__": label} — per-file column bounds, schema fingerprint and
+    # partition label recorded at stage time (Iceberg manifest column stats /
+    # schema tracking / partition tuple), used for scan-planning file skips,
+    # schema-evolution detection and partition layout; absence of a
     # file/col entry means "no information" (the file is always read, with
-    # the plain first-footer schema), so old manifests stay valid.
+    # the plain first-footer schema; a file without a label is loose), so
+    # old manifests stay valid.
     stats: dict = None  # type: ignore[assignment]
 
     def __post_init__(self):
@@ -185,9 +197,11 @@ class SnapshotStore:
         """Stage ``df`` split by the integer label column ``by`` in ONE
         write job (Iceberg's partitioned write behind ``DELETE WHERE`` /
         ``rewrite_data_files``). Returns ``{str(label): paths}``; a label
-        with no rows is absent. One task, so one file, per label, clustered
-        by ``sort_cols``. The label is neither written nor fingerprinted, so
-        the files read exactly like :meth:`stage`'d ones."""
+        with no rows is absent, and rows with a NULL label go to one
+        unlabeled (loose) file under key None. One task, so one file, per
+        label, clustered by ``sort_cols``. The label is neither written nor
+        fingerprinted, so the files read exactly like :meth:`stage`'d ones;
+        it is recorded as the file's ``__part__`` in the next manifest."""
         df = df.repartition(by).sortWithinPartitions(by, *sort_cols)
         return self._write(df, name, stats_cols, by=by)
 
@@ -195,7 +209,8 @@ class SnapshotStore:
                stats_cols: tuple | list | None,
                by: str | None = None) -> dict:
         """Write, rename, fingerprint and stats for :meth:`stage` (files
-        under key None) and :meth:`stage_groups` (files under their label)."""
+        under key None) and :meth:`stage_groups` (files under their label,
+        recorded as ``__part__``; NULL-label files under key None)."""
         tdir = os.path.join(self.root, name)
         os.makedirs(tdir, exist_ok=True)
         tmp = os.path.join(tdir, f".stage-{uuid.uuid4().hex}")
@@ -211,6 +226,8 @@ class SnapshotStore:
         # files sit in tmp itself, or in tmp/<by>=<label>/ when grouped
         for src, _, names in sorted(os.walk(tmp)):
             label = os.path.basename(src).partition("=")[2] or None
+            if label == "__HIVE_DEFAULT_PARTITION__":   # a NULL label
+                label = None
             for f in sorted(names):
                 if f.endswith(".parquet"):
                     dst = f"{uuid.uuid4().hex}-{f}"
@@ -219,6 +236,8 @@ class SnapshotStore:
                     out.setdefault(label, []).append(rel)
                     entry = self._pending_stats.setdefault(rel, {})
                     entry["__schema__"] = sig
+                    if label is not None:
+                        entry["__part__"] = int(label)
                     if stats_cols:
                         entry.update(
                             _file_stats(os.path.join(tdir, dst), stats_cols))
@@ -264,8 +283,8 @@ class SnapshotStore:
         base-snapshot validation): when set, the commit refuses to land if
         the store's current commit_id no longer equals it — i.e. someone
         committed between this writer's planning snapshot and now. Wholesale
-        REPLACE+meta writers (maintenance that rewrites tables and meta
-        maps from a planning snapshot, i.e. maintain_store) must pass it:
+        REPLACE writers (maintenance that rewrites tables from a planning
+        snapshot, i.e. maintain_store) must pass it:
         without the check a concurrent append/commit's rows and meta
         advances would be silently clobbered by the stale plan (r6, ADVICE
         item 1)."""
@@ -281,9 +300,11 @@ class SnapshotStore:
             tables[name] = tables[name] + list(files)
         for name, files in (replaces or {}).items():
             tables[name] = list(files)
-        # stats lifecycle follows the file list: carry forward bounds of
-        # files still live, adopt pending bounds of newly referenced files,
-        # drop bounds of files replaced away
+        # stats lifecycle follows the file list: carry forward bounds and
+        # partition labels of files still live (from the CURRENT snapshot,
+        # so a concurrent append keeps its label under a stale committer),
+        # adopt pending entries of newly referenced files, drop entries of
+        # files replaced away
         live = {f for fs in tables.values() for f in fs}
         stats = {f: v for f, v in cur.stats.items() if f in live}
         for f in list(self._pending_stats):
@@ -319,22 +340,34 @@ class SnapshotStore:
         """Plan a small-file compaction — the Iceberg ``rewrite_data_files``
         analog: an append-per-epoch table accumulates one file set per
         commit (10^5 files behind every scan after 10^5 epochs), and
-        compaction rewrites them into ``target_files`` files, through
-        ``transform`` when given. Old manifests still reference the old
-        files, which stay on disk until :meth:`vacuum`.
+        compaction rewrites them, through ``transform`` when given. Old
+        manifests still reference the old files, which stay on disk until
+        :meth:`vacuum`.
 
+        A partitioned table is rewritten through :meth:`rewrite_partitions`,
+        touching the partitions that receive loose rows or hold more than
+        ``target_files`` files; every other partition keeps its exact files.
+
+        An unpartitioned table is bin-packed into ``target_files`` files.
         With ``small_file_bytes`` set, compaction is INCREMENTAL (Iceberg's
         bin-pack): only files smaller than the threshold are absorbed;
         already-compacted large files keep their exact paths and are never
         re-read or rewritten, so per-epoch maintenance is O(new small
         files), not O(table). ``None`` rewrites the whole table.
 
-        A plan, not a commit (:meth:`rewrite_buckets`'s contract): returns
-        ``(files, meta, n_absorbed)`` — the table's new file list, the meta
-        entries to commit with it (none here) and the number of files
-        absorbed — or None when there is nothing to do."""
+        A plan, not a commit: returns ``(files, n_absorbed)`` — the table's
+        new file list and the number of files it replaces — or None when
+        there is nothing to do."""
         snap = self.snapshot()
         rels = snap.tables.get(name, [])
+        parts, loose = partition_state(snap, name)
+        if parts is not None:
+            oversized = [p for p, fs in parts.items() if len(fs) > target_files]
+            if not loose and not oversized:
+                return None
+            files, _ = self.rewrite_partitions(
+                spark, name, transform or (lambda rows: rows), labels=oversized)
+            return files, len(set(rels) - set(files))
         if small_file_bytes is None:
             absorb, keep = list(rels), []
         else:
@@ -344,90 +377,54 @@ class SnapshotStore:
                 (absorb if size < small_file_bytes else keep).append(r)
         if len(absorb) <= target_files:
             return None
-        # guard: a file whose path is tracked in snapshot meta (the
-        # stratum-pruned frontier) cannot be absorbed — the meta reference
-        # would dangle and a later vacuum would delete the file it points at
-        meta_blob = json.dumps(snap.meta)
-        if any(rel in meta_blob for rel in absorb):
-            raise ValueError(
-                f"table {name!r} has file paths referenced in snapshot meta "
-                "(file-level partition pruning); compact it per partition, "
-                "not wholesale")
         raw_sigs = [snap.stats.get(r, {}).get("__schema__") for r in absorb]
         reader = (spark.read.option("mergeSchema", "true")
                   if _needs_merge_schema(raw_sigs) else spark.read)
         df = reader.parquet(*[os.path.join(self.root, r) for r in absorb])
         if transform is not None:
             df = transform(df)
-        # keep tracking whatever bounds the absorbed files carried, so
-        # compaction never silently disables manifest-stats pruning
-        tracked = sorted({c for r in absorb
-                          for c in snap.stats.get(r, {})
-                          if not c.startswith("__")})
         staged = self.stage(df.repartition(target_files), name,
-                            stats_cols=tracked or None)
-        return keep + staged, {}, len(absorb)
+                            stats_cols=_tracked(snap, absorb))
+        return keep + staged, len(absorb)
 
-    def compact_bucketed(self, spark: "SparkSession", name: str,
-                         key: str | None = None,
-                         n_buckets: int | None = None) -> tuple | None:
-        """Plan re-bucket maintenance for a key-hash-bucketed table: home
-        the rows of files appended since the last bucketing ("loose" files,
-        e.g. the epoch loop's per-epoch url_seen appends) into their
-        buckets. This is :meth:`rewrite_buckets` scoped by the loose rows,
-        so only buckets that receive loose rows are rewritten and every
-        other bucket keeps its exact files. The first call performs the
-        one-time full bucketing and needs ``key``/``n_buckets``; later calls
-        use the recorded spec. On Iceberg this is ``rewrite_data_files`` on
-        a bucket-partitioned table. A plan like :meth:`compact`'s, with the
-        ``merge_buckets``/``bucket_spec`` meta; None when nothing is loose."""
-        snap = self.snapshot()
-        spec = _bucket_spec(snap, name, key, n_buckets)
-        _, loose = bucket_state(snap, name)
-        if not loose:
-            return None
-        if spec is None:
-            raise ValueError(
-                f"table {name!r} has no recorded bucket_spec; pass "
-                "key/n_buckets for the initial bucketing")
-        return (*self.rewrite_buckets(spark, name, None, lambda rows: rows,
-                                      *spec), len(loose))
-
-    def rewrite_buckets(self, spark: "SparkSession", name: str,
-                        scope: "DataFrame | None", transform,
-                        key: str | None = None,
-                        n_buckets: int | None = None) -> tuple[list, dict]:
-        """The one scoped rewrite of a key-hash-bucketed table, behind
-        :meth:`compact_bucketed`, :func:`merge_into` and
+    def rewrite_partitions(self, spark: "SparkSession", name: str, transform,
+                           scope: "DataFrame | None" = None, labels=(),
+                           spec: dict | None = None) -> tuple[list, dict]:
+        """The one scoped rewrite of a partitioned table, behind
+        :meth:`compact`, :func:`merge_into` and
         :func:`crawlspark.operators.recrawl.forget_urls` (Iceberg
-        ``rewrite_data_files`` / ``MERGE INTO`` / ``DELETE WHERE`` on a
-        ``bucket(n, key)`` table).
+        ``rewrite_data_files`` / ``MERGE INTO`` / ``DELETE WHERE``).
 
-        The layout is ``pmod(xxhash64(key), n)`` file-sets recorded in
-        snapshot meta ``merge_buckets[name]`` under ``bucket_spec[name]``,
-        plus loose files (:func:`bucket_state`). A recorded spec wins; a
-        different ``key``/``n_buckets`` raises. With no spec and no
-        ``n_buckets`` the whole table is rewritten unbucketed.
+        The table's spec is the recorded ``partition_spec[name]``; a passed
+        ``spec`` is recorded on first use and must match afterwards (a
+        different one raises). With neither, the whole table is rewritten
+        unpartitioned.
 
-        The buckets the ``scope`` rows hash to (None: the loose rows) are
-        touched. Their files plus every loose file are read, passed through
-        ``transform`` (which gets None for an empty slice) and written in
-        ONE :meth:`stage_groups` job. A row goes to its bucket if that
-        bucket is touched, or if the table has no map yet; any other row
-        stays loose. Untouched buckets keep their exact files, so the cost
-        is O(touched buckets + loose), never O(table).
+        Touched are the partitions in ``labels`` and those the ``scope``
+        rows fall in (no scope: those the loose rows fall in). Their files
+        plus every loose file are read, passed through ``transform`` (which
+        gets None for an empty slice) and written in ONE
+        :meth:`stage_groups` job. A row goes to its partition if that
+        partition is touched, or if no file of the table is partitioned
+        yet; any other row stays loose. Untouched partitions keep their
+        exact files, so the cost is O(touched partitions + loose), never
+        O(table).
 
         Nothing is committed: returns the table's new file list and the
-        meta entries to commit with it, so a caller can publish the rewrite
-        atomically with its own changes."""
+        meta to commit with it (the spec, when this call records it), so a
+        caller can publish the rewrite atomically with its own changes."""
         from pyspark.sql import functions as F
 
         snap = self.snapshot()
         rels = snap.tables.get(name, [])
-        spec = _bucket_spec(snap, name, key, n_buckets)
-        # keep tracking whatever bounds the table's files carry
-        tracked = sorted({c for r in rels for c in snap.stats.get(r, {})
-                          if not c.startswith("__")}) or None
+        recorded = snap.meta.get("partition_spec", {}).get(name)
+        if recorded is not None and spec not in (None, recorded):
+            raise ValueError(
+                f"table {name!r} is partitioned as {recorded}; "
+                "repartitioning requires a fresh full rewrite (drop the spec "
+                "first)")
+        spec = recorded or spec
+        tracked = _tracked(snap, rels)
 
         def read(files):
             return self.read_files(spark, name, files) if files else None
@@ -435,33 +432,31 @@ class SnapshotStore:
         if spec is None:
             return self.stage(transform(read(rels)), name,
                               stats_cols=tracked), {}
-        key, n_buckets = spec
-        bucket_of = F.pmod(F.xxhash64(F.col(key)),
-                           F.lit(n_buckets)).cast("int")
-        bucket_map, loose = bucket_state(snap, name)
-        if bucket_map is None:
-            # first bucketing: the whole table, every row homed
-            touched, files, label = None, rels, bucket_of
+        label = partition_label(spec)
+        parts, loose = partition_state(snap, name)
+        if not parts:
+            # nothing partitioned yet: the whole table, every row homed
+            touched, files = None, rels
         else:
             scope = read(loose) if scope is None else scope
-            touched = sorted({str(r["_b"]) for r in scope.select(
-                bucket_of.alias("_b")).distinct().collect()})
-            files = [f for b in touched
-                     for f in bucket_map.get(b, [])] + loose
-            label = F.when(bucket_of.isin([int(b) for b in touched]),
-                           bucket_of).otherwise(-1)
+            touched = {str(p) for p in labels}
+            if scope is not None:
+                touched |= {str(r["_p"]) for r in scope.select(
+                    label.alias("_p")).distinct().collect()
+                    if r["_p"] is not None}
+            files = [f for p in sorted(touched, key=int)
+                     for f in parts.get(p, [])] + loose
+            # a NULL label is no partition: those rows stay loose
+            label = F.when(label.isin([int(p) for p in touched]), label)
         staged = self.stage_groups(
-            transform(read(files)).withColumn("_bucket", label), name,
-            "_bucket", stats_cols=tracked)
-        # -1 is never a pmod bucket: those rows stay loose
-        still_loose = staged.pop("-1", [])
-        new_map = staged if touched is None else {
-            **bucket_map, **{b: staged.get(b, []) for b in touched}}
-        return ordered_files(new_map) + still_loose, {
-            "merge_buckets": {**snap.meta.get("merge_buckets", {}),
-                              name: new_map},
-            "bucket_spec": {**snap.meta.get("bucket_spec", {}),
-                            name: {"key": key, "n": n_buckets}}}
+            transform(read(files)).withColumn("_part", label), name, "_part",
+            stats_cols=tracked, sort_cols=spec.get("sort", ()))
+        still_loose = staged.pop(None, [])
+        new_parts = staged if touched is None else {
+            **parts, **{p: staged.get(p, []) for p in touched}}
+        meta = {} if recorded else {"partition_spec": {
+            **snap.meta.get("partition_spec", {}), name: spec}}
+        return ordered_files(new_parts) + still_loose, meta
 
     def vacuum(self, keep_last: int = 2) -> list[str]:
         """Delete data files not referenced by any of the last ``keep_last``
@@ -596,43 +591,50 @@ class SnapshotStore:
         return spark.read.parquet(*fs)
 
 
-def _bucket_spec(snap: Snapshot, name: str, key: str | None,
-                 n_buckets: int | None) -> tuple[str, int] | None:
-    """The (key, n_buckets) a table is bucketed by: the recorded
-    ``bucket_spec`` wins (passing a different one raises), else the passed
-    pair, else None (unbucketed)."""
-    spec = snap.meta.get("bucket_spec", {}).get(name)
-    if spec is None:
-        return None if key is None or n_buckets is None \
-            else (key, int(n_buckets))
-    if key not in (None, spec["key"]) \
-            or n_buckets not in (None, int(spec["n"])):
-        raise ValueError(
-            f"table {name!r} is bucketed as {spec}; re-bucketing with "
-            "different params requires a fresh full bucketing (drop the "
-            "spec first)")
-    return spec["key"], int(spec["n"])
+def _tracked(snap: Snapshot, rels: list[str]) -> list[str] | None:
+    """The columns whose bounds ``rels`` carry, so a rewrite keeps tracking
+    them and never silently disables manifest-stats pruning."""
+    return sorted({c for r in rels for c in snap.stats.get(r, {})
+                   if not c.startswith("__")}) or None
 
 
-def bucket_state(snap: Snapshot, name: str) -> tuple[dict | None, list[str]]:
-    """(bucket_map, loose_files) for a table: the per-bucket file-sets
-    recorded in snapshot meta ``merge_buckets[name]`` (None if the table
-    was never bucketed) plus any files appended since the map was last
-    written — the epoch loop appends url_seen rows without re-bucketing,
-    so :meth:`SnapshotStore.rewrite_buckets` treats those "loose" files as
-    touching EVERY bucket until :meth:`SnapshotStore.compact_bucketed`
-    homes their rows."""
-    m = snap.meta.get("merge_buckets", {}).get(name)
+def partition_label(spec: dict):
+    """A row's partition label under ``spec``: identity(key) or, with
+    ``n``, bucket(key, n) = ``pmod(xxhash64(key), n)``."""
+    from pyspark.sql import functions as F
+
+    key = F.col(spec["key"])
+    if spec.get("n") is None:
+        return key.cast("int")
+    return F.pmod(F.xxhash64(key), F.lit(int(spec["n"]))).cast("int")
+
+
+def partition_state(snap: Snapshot,
+                    name: str) -> tuple[dict | None, list[str]]:
+    """(``{str(label): files}``, loose files) for a table, derived from the
+    ``__part__`` labels in the manifest stats; the map is None when the
+    table has no recorded partition spec (every file is loose). Loose files
+    (e.g. the epoch loop's per-epoch url_seen appends) can hold any
+    partition's rows, so :meth:`SnapshotStore.rewrite_partitions` reads
+    them with every rewrite until :meth:`SnapshotStore.compact` homes
+    their rows."""
     files = snap.tables.get(name, [])
-    if m is None:
+    if name not in snap.meta.get("partition_spec", {}):
         return None, list(files)
-    mapped = {f for fs in m.values() for f in fs}
-    return m, [f for f in files if f not in mapped]
+    parts: dict[str, list[str]] = {}
+    loose = []
+    for f in files:
+        label = snap.stats.get(f, {}).get("__part__")
+        if label is None:
+            loose.append(f)
+        else:
+            parts.setdefault(str(label), []).append(f)
+    return parts, loose
 
 
 def ordered_files(files_by_label: dict) -> list[str]:
-    """A table's file list from its ``{label: files}`` map (bucket or
-    stratum pins), in label order."""
+    """A table's file list from its ``{label: files}`` map, in label
+    order."""
     return [f for k in sorted(files_by_label, key=int)
             for f in files_by_label[k]]
 
@@ -676,13 +678,13 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
     skew-safe), so the emulation carries the same scale shape.
 
     ``n_buckets`` makes the merge PARTITION-SCOPED (the Iceberg
-    bucket-partitioned MERGE) through :meth:`SnapshotStore.rewrite_buckets`:
+    bucket-partitioned MERGE) through :meth:`SnapshotStore.rewrite_partitions`:
     the table is kept as ``pmod(xxhash64(key), n_buckets)`` bucket
     file-sets, and a merge rewrites ONLY buckets containing updated keys
     (plus the loose files, which can hold any key) — untouched buckets keep
     their exact files. The first bucketed merge on an unbucketed table
-    performs the one-time full bucketing; a table's recorded bucket spec
-    wins thereafter, so a merge without ``n_buckets`` stays scoped and a
+    performs the one-time full bucketing; the table's recorded partition
+    spec wins thereafter, so a merge without ``n_buckets`` stays scoped and a
     different ``n_buckets`` raises. The matched-row check and the anti-join
     read only that slice (the bucket is a pure function of the key, so
     matches cannot live elsewhere)."""
@@ -713,8 +715,9 @@ def merge_into(spark: "SparkSession", store: SnapshotStore, name: str,
         return (target.join(won.select(key), key, "left_anti")
                 .unionByName(won, allowMissingColumns=True))
 
-    files, meta = store.rewrite_buckets(spark, name, updates, upsert, key,
-                                        n_buckets)
+    files, meta = store.rewrite_partitions(
+        spark, name, upsert, scope=updates,
+        spec={"key": key, "n": int(n_buckets)} if n_buckets else None)
     store.commit(epoch=int(snap.meta.get("last_epoch", -1)),
                  replaces={name: files}, meta={**snap.meta, **meta})
     updates.unpersist()

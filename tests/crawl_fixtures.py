@@ -43,16 +43,23 @@ def init_store(spark, tmp: str, store_dir: str) -> SnapshotStore:
 
 
 def commit_plan(store: SnapshotStore, name: str, plan) -> int:
-    """Publish one maintenance planner's ``(files, meta, n_absorbed)`` plan
+    """Publish one ``SnapshotStore.compact`` plan ``(files, n_absorbed)``
     for table ``name`` on its own, the way ``maintain_store`` publishes a
     pass; returns the files absorbed (0 for a None plan)."""
     if plan is None:
         return 0
-    files, meta, n_absorbed = plan
+    files, n_absorbed = plan
     snap = store.snapshot()
-    store.commit(snap.epoch, replaces={name: files},
-                 meta={**snap.meta, **meta})
+    store.commit(snap.epoch, replaces={name: files}, meta=snap.meta)
     return n_absorbed
+
+
+def record_spec(store: SnapshotStore, name: str, spec: dict) -> None:
+    """Record table ``name``'s partition spec, as ``init_run`` does for
+    ``frontier`` and ``url_seen``."""
+    snap = store.snapshot()
+    specs = {**snap.meta.get("partition_spec", {}), name: spec}
+    store.commit(snap.epoch, meta={**snap.meta, "partition_spec": specs})
 
 
 def make_oracle(pdfs: dict, cfg: CrawlConfig) -> CrawlOracle:

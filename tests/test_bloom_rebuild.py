@@ -103,6 +103,25 @@ def test_saturation_rebuild_restores_fpp_and_fp_safety(spark):
     assert sel_after < sel_before / 3
 
 
+def test_forget_that_empties_a_bucket_writes_its_row(spark):
+    """The ``n_items`` invariant (the latest filter row of each bucket
+    counts that bucket's seen rows) holds for a forget that empties a
+    bucket: bloom writes an ``n_items`` 0 row at ``MIN_BITS`` for it, as
+    cuckoo does, instead of leaving the pre-forget row newest."""
+    seen = spark.createDataFrame([(i, i % 2) for i in range(20)],
+                                 "url_hash long, host_hash long")
+    f0 = bloom.updated_buckets(seen, None, n_buckets=2, epoch=0).toPandas()
+    hit = seen.filter(F.col("host_hash") == 1)
+    rest = seen.filter(F.col("host_hash") == 0)
+    forgot = bloom.forgotten_buckets(hit, rest, _filters_df(spark, f0),
+                                     n_buckets=2, epoch=1)
+    latest = bloom.latest_filter(
+        _filters_df(spark, f0).unionByName(forgot)).toPandas()
+    assert dict(zip(latest["bucket"], latest["n_items"])) == {0: 10, 1: 0}
+    row = latest[latest["bucket"] == 1].iloc[0]
+    assert len(row["bits"]) * 8 == MIN_BITS and not any(row["bits"])
+
+
 def test_no_rebuild_below_threshold(spark):
     """Under-threshold buckets keep the incremental path even when the
     rebuild machinery is armed (all_seen supplied)."""
@@ -187,5 +206,7 @@ def test_filter_tracks_the_seen_set_across_forgets(spark, tmp_path):
         latest = bloom.latest_filter(
             store.read(spark, "seen_filter")).toPandas()
         got = dict(zip(latest["bucket"], latest["n_items"]))
+        # a bucket a forget emptied has an n_items 0 row
+        want = {b: want.get(b, 0) for b in set(got) | set(want)}
         assert got == want, store.snapshot().meta.get("last_forget")
     assert store.snapshot().meta["last_forget"]["n_forgotten"] > 0

@@ -2,23 +2,24 @@
 
 The epoch loop appends url_seen rows WITHOUT re-bucketing (an O(batch)
 append — re-bucketing per epoch would be O(table)). Those appended files
-("loose" — listed in the table but absent from the ``merge_buckets`` map)
-can hold any bucket's keys, so :meth:`SnapshotStore.rewrite_buckets`, the
-one scoped rewrite behind ``compact_bucketed``, ``merge_into`` and
-``forget_urls``, reads every loose file along with the touched buckets and
-applies one rule: a row goes to its bucket if that bucket is touched (or
-the table has no map yet); any other row stays loose. This file pins:
+("loose" — listed in the table but carrying no partition label in the
+manifest) can hold any bucket's keys, so
+:meth:`SnapshotStore.rewrite_partitions`, the one scoped rewrite behind
+``compact``, ``merge_into`` and ``forget_urls``, reads every loose file
+along with the touched buckets and applies one rule: a row goes to its
+bucket if that bucket is touched (or no file is partitioned yet); any other
+row stays loose. This file pins:
 
 - ``merge_into`` (scoped path): the matched-row newer-wins check must SEE
   loose rows (or a stale loose row silently survives a newer update);
   loose rows of the updated buckets are homed, the rest stay loose, and
   untouched buckets keep their exact paths.
-- ``compact_bucketed``: scoped by the loose rows themselves, so every loose
+- ``compact``: scoped by the loose rows themselves, so every loose
   row is homed; only buckets that received loose rows are rewritten and
   every other bucket keeps its exact file paths (O(loose rows), never
   O(table)).
-- the recorded bucket spec wins: a merge without ``n_buckets`` stays scoped
-  and keeps the map live, a different ``n_buckets`` is refused.
+- the recorded partition spec wins: a merge without ``n_buckets`` stays
+  scoped and keeps the map live, a different ``n_buckets`` is refused.
 """
 
 from __future__ import annotations
@@ -28,8 +29,8 @@ from pyspark.sql import functions as F
 
 from crawlspark.config import CrawlConfig
 from crawlspark.operators import recrawl
-from crawlspark.tables import SnapshotStore, bucket_state, merge_into
-from tests.crawl_fixtures import commit_plan
+from crawlspark.tables import SnapshotStore, merge_into, partition_state
+from tests.crawl_fixtures import commit_plan, record_spec
 
 NB = 8
 
@@ -54,7 +55,7 @@ def _seed_bucketed(spark, store, n=400):
 
 
 def _append_loose(spark, store, rows):
-    """What the epoch loop does: stage + append, no bucket-map update."""
+    """What the epoch loop does: stage + append, unpartitioned."""
     snap = store.snapshot()
     store.commit(epoch=snap.epoch,
                  appends={"t": store.stage(_rows(spark, rows), "t")},
@@ -64,11 +65,11 @@ def _append_loose(spark, store, rows):
 def test_bucket_state_classifies_loose_files(spark, tmp_path):
     store = _store(tmp_path)
     _seed_bucketed(spark, store)
-    m0, loose0 = bucket_state(store.snapshot(), "t")
+    m0, loose0 = partition_state(store.snapshot(), "t")
     assert m0 is not None and loose0 == []
 
     _append_loose(spark, store, [(9001, 1, 1)])
-    m1, loose1 = bucket_state(store.snapshot(), "t")
+    m1, loose1 = partition_state(store.snapshot(), "t")
     assert m1 == m0
     mapped = {f for fs in m1.values() for f in fs}
     assert loose1 and not set(loose1) & mapped
@@ -77,7 +78,7 @@ def test_bucket_state_classifies_loose_files(spark, tmp_path):
     store.commit(epoch=0, appends={"u": store.stage(
         _rows(spark, [(1, 1, 1)]), "u")}, meta=store.snapshot().meta)
     snap_u = store.snapshot()
-    m_u, loose_u = bucket_state(snap_u, "u")
+    m_u, loose_u = partition_state(snap_u, "u")
     assert m_u is None and loose_u == snap_u.tables["u"]
 
 
@@ -118,7 +119,7 @@ def _bucket_of(spark, keys):
 
 def _assert_layout(snap, name):
     """Every table file is in exactly one bucket or loose, never both."""
-    m, loose = bucket_state(snap, name)
+    m, loose = partition_state(snap, name)
     mapped = [f for fs in m.values() for f in fs]
     assert len(mapped) == len(set(mapped))
     assert not set(mapped) & set(loose)
@@ -132,7 +133,7 @@ def test_scoped_merge_rehomes_loose_rows_into_buckets(spark, tmp_path):
     and the table content is the correct merge result."""
     store = _store(tmp_path)
     _seed_bucketed(spark, store, n=400)
-    map_before = store.snapshot().meta["merge_buckets"]["t"]
+    map_before, _ = partition_state(store.snapshot(), "t")
 
     # loose rows: NEW keys 10000.. spread over every bucket
     loose_keys = list(range(10_000, 10_032))
@@ -144,7 +145,7 @@ def test_scoped_merge_rehomes_loose_rows_into_buckets(spark, tmp_path):
 
     snap = store.snapshot()
     _assert_layout(snap, "t")
-    m_after, loose_after = bucket_state(snap, "t")
+    m_after, loose_after = partition_state(snap, "t")
     buckets = _bucket_of(spark, [1] + loose_keys)
     b1 = buckets[1]
     assert m_after[str(b1)] != map_before[str(b1)]
@@ -177,10 +178,10 @@ def test_recorded_bucket_spec_wins_over_merge_params(spark, tmp_path):
     _seed_bucketed(spark, store, n=100)
     merge_into(spark, store, "t", _rows(spark, [(7, 5, -1)]), "k",
                newer_col="ts")
-    commit_plan(store, "t", store.compact_bucketed(spark, "t"))
+    commit_plan(store, "t", store.compact(spark, "t"))
 
     snap = store.snapshot()
-    mapped = {f for fs in snap.meta["merge_buckets"]["t"].values()
+    mapped = {f for fs in partition_state(snap, "t")[0].values()
               for f in fs}
     assert mapped <= set(snap.tables["t"])
     got = store.read(spark, "t")
@@ -188,7 +189,7 @@ def test_recorded_bucket_spec_wins_over_merge_params(spark, tmp_path):
     assert got.select("k").distinct().count() == 100
     assert got.filter(F.col("k") == 7).collect()[0]["ts"] == 5
 
-    with pytest.raises(ValueError, match="bucketed as"):
+    with pytest.raises(ValueError, match="partitioned as"):
         merge_into(spark, store, "t", _rows(spark, [(8, 5, -1)]), "k",
                    newer_col="ts", n_buckets=2 * NB)
 
@@ -199,21 +200,22 @@ def test_compact_bucketed_initial_then_incremental(spark, tmp_path):
     _append_loose(spark, store, [(i, 0, i) for i in range(200)])
     _append_loose(spark, store, [(i, 0, i) for i in range(200, 400)])
 
-    # initial bucketing: params required, whole table absorbed
-    with pytest.raises(ValueError, match="bucket_spec"):
-        store.compact_bucketed(spark, "t")
+    # initial bucketing needs a recorded spec: without one, compact
+    # bin-packs and labels no file
     n_files_before = len(store.snapshot().tables["t"])
-    n_absorbed = commit_plan(store, "t", store.compact_bucketed(
-        spark, "t", key="k", n_buckets=NB))
+    assert store.compact(spark, "t", target_files=n_files_before) is None
+    assert partition_state(store.snapshot(), "t")[0] is None
+    record_spec(store, "t", {"key": "k", "n": NB})
+    n_absorbed = commit_plan(store, "t", store.compact(spark, "t"))
     assert n_absorbed == n_files_before
     snap = store.snapshot()
-    assert snap.meta["bucket_spec"]["t"] == {"key": "k", "n": NB}
-    m0, loose0 = bucket_state(snap, "t")
+    assert snap.meta["partition_spec"]["t"] == {"key": "k", "n": NB}
+    m0, loose0 = partition_state(snap, "t")
     assert loose0 == [] and set(m0) == {str(b) for b in range(NB)}
 
     # no-op when nothing is loose
-    assert store.compact_bucketed(spark, "t") is None
-    assert store.snapshot().meta["merge_buckets"]["t"] == m0
+    assert store.compact(spark, "t") is None
+    assert partition_state(store.snapshot(), "t")[0] == m0
 
     # incremental: loose rows confined to key 1's bucket -> ONLY that
     # bucket rewritten, all others keep exact paths
@@ -225,12 +227,13 @@ def test_compact_bucketed_initial_then_incremental(spark, tmp_path):
         F.pmod(F.xxhash64(F.col("id")), F.lit(NB)).cast("int").alias("b"))
         .filter(F.col("b") == b1).limit(10).collect()]
     _append_loose(spark, store, [(k, 1, -1) for k in keys_b1])
-    n_loose = len(bucket_state(store.snapshot(), "t")[1])
+    n_loose = len(partition_state(store.snapshot(), "t")[1])
     assert n_loose >= 1
-    assert commit_plan(store, "t",
-                       store.compact_bucketed(spark, "t")) == n_loose
+    # absorbed: the loose files plus the one touched bucket's files
+    assert commit_plan(store, "t", store.compact(spark, "t")) \
+        == n_loose + len(m0[str(b1)])
 
-    m1, loose1 = bucket_state(store.snapshot(), "t")
+    m1, loose1 = partition_state(store.snapshot(), "t")
     assert loose1 == []
     assert m1[str(b1)] != m0[str(b1)]
     for b in range(NB):
@@ -242,8 +245,9 @@ def test_compact_bucketed_initial_then_incremental(spark, tmp_path):
     assert got.filter(F.col("ts") == 1).count() == len(keys_b1)
 
     # re-bucketing with conflicting params is refused
-    with pytest.raises(ValueError, match="bucketed as"):
-        store.compact_bucketed(spark, "t", key="k", n_buckets=16)
+    with pytest.raises(ValueError, match="partitioned as"):
+        store.rewrite_partitions(spark, "t", lambda rows: rows,
+                                 spec={"key": "k", "n": 16})
 
 
 def test_scoped_merge_then_compact_roundtrip(spark, tmp_path):
@@ -267,7 +271,7 @@ def test_scoped_merge_then_compact_roundtrip(spark, tmp_path):
     merge_into(spark, store, "url_seen", rows((k, 0, k) for k in range(100)),
                "url_hash", newer_col="ts", n_buckets=NB)
     append_loose((200 + i, 1, i) for i in range(10))
-    commit_plan(store, "url_seen", store.compact_bucketed(spark, "url_seen"))
+    commit_plan(store, "url_seen", store.compact(spark, "url_seen"))
     append_loose((300 + i, 1, i) for i in range(10))
     merge_into(spark, store, "url_seen",
                rows([(0, 9, 99), (205, 9, 99), (305, 9, 99)]),
@@ -279,10 +283,10 @@ def test_scoped_merge_then_compact_roundtrip(spark, tmp_path):
         spark.createDataFrame([(k,) for k in forgotten], "url_hash long"),
         epoch=1) == 4
     _assert_layout(store.snapshot(), "url_seen")
-    commit_plan(store, "url_seen", store.compact_bucketed(spark, "url_seen"))
+    commit_plan(store, "url_seen", store.compact(spark, "url_seen"))
     snap = store.snapshot()
     _assert_layout(snap, "url_seen")
-    assert bucket_state(snap, "url_seen")[1] == []
+    assert partition_state(snap, "url_seen")[1] == []
 
     got = {(r["url_hash"], r["ts"], r["payload"])
            for r in store.read(spark, "url_seen").collect()}

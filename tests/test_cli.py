@@ -65,7 +65,7 @@ def test_top_rejects_missing_table(tmp_path, capfd):
 def test_compact_is_the_maintenance_pass(spark, crawled_store, capfd):
     """``compact`` runs ``maintain_store``: one commit for every table's
     rewrite, url_seen bucketed like in-loop maintenance, rows unchanged."""
-    from crawlspark.tables import SnapshotStore
+    from crawlspark.tables import SnapshotStore, partition_state
 
     store = SnapshotStore(crawled_store)
     before = store.snapshot()
@@ -75,7 +75,8 @@ def test_compact_is_the_maintenance_pass(spark, crawled_store, capfd):
     out = json.loads(capfd.readouterr().out.strip().splitlines()[-1])
     snap = store.snapshot()
     assert snap.commit_id == before.commit_id + 1 == out["commit_id"]
-    assert "url_seen" in snap.meta["bucket_spec"]
+    parts, loose = partition_state(snap, "url_seen")
+    assert parts and loose == []
     assert out["compacted_files"]["crawl_log"] > 1
     assert len(snap.tables["crawl_log"]) == 1
     assert store.read(spark, "crawl_log").count() == n_log

@@ -2,8 +2,8 @@
 rewrite_data_files analog) and vacuum (expire_snapshots analog). An
 append-per-epoch table accumulates one file set per commit; compaction must
 collapse the files without changing content, keep time travel alive until
-vacuum, and refuse tables whose file paths are pinned in snapshot meta (the
-stratum-pruned frontier).
+vacuum, and keep every row of a partitioned table (the stratum-pruned
+frontier) in its own partition.
 """
 
 from __future__ import annotations
@@ -13,8 +13,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from crawlspark.tables import SnapshotStore
-from tests.crawl_fixtures import commit_plan
+from crawlspark.plans.crawler import FRONTIER_SPEC, stage_strata
+from crawlspark.tables import SnapshotStore, partition_state
+from tests.crawl_fixtures import commit_plan, record_spec
 
 
 @pytest.fixture()
@@ -116,14 +117,30 @@ def test_crawl_loop_with_maintenance_is_parity(spark, tmp_path):
     assert len(compacted.commits()) <= 5 < len(plain.commits())
 
 
-def test_compact_refuses_meta_pinned_table(spark, tmp_path):
-    store = SnapshotStore(str(tmp_path / "store"))
-    fs = store.stage(spark.range(20).repartition(2), "frontier")
-    store.commit(epoch=-1, appends={"frontier": fs},
-                 meta={"frontier_files_by_priority": {"0": fs},
-                       "last_epoch": -1})
-    with pytest.raises(ValueError, match="snapshot meta"):
-        store.compact(spark, "frontier")
+def test_compact_keeps_rows_in_their_partitions(spark, tmp_path):
+    """Compacting a partitioned table rewrites its oversized partitions and
+    homes its loose rows, and every row lands in the partition its own key
+    labels: a file's ``__part__`` is the priority of every row in it."""
+    store = _partitioned_frontier_store(spark, tmp_path)
+    # a loose append holding rows of both strata
+    loose = store.stage(_frontier_rows(spark, 500, 520, F.col("id") % 2)
+                        .coalesce(1), "frontier")
+    store.commit(epoch=1, appends={"frontier": loose},
+                 meta=store.snapshot().meta)
+    before = sorted(map(tuple, store.read(spark, "frontier").collect()))
+
+    assert commit_plan(store, "frontier", store.compact(
+        spark, "frontier", target_files=1)) == 7
+    snap = store.snapshot()
+    parts, still_loose = partition_state(snap, "frontier")
+    assert still_loose == [] and set(parts) == {"0", "1"}
+    for p, fs in parts.items():
+        assert len(fs) == 1
+        got = store.read_files(spark, "frontier", fs)
+        assert {r["priority"] for r in got.select("priority")
+                .distinct().collect()} == {int(p)}
+    assert sorted(map(tuple, store.read(spark, "frontier").collect())) \
+        == before
 
 
 def test_binpack_compaction_leaves_large_files_untouched(spark, appended_store):
@@ -256,39 +273,42 @@ def test_commit_require_base_conflict(spark, appended_store):
     assert store.snapshot().meta["last_epoch"] == 100
 
 
-def _pinned_frontier_store(spark, tmp_path):
-    """A store whose frontier is 2 priority strata of 3 files each, pinned
-    in ``frontier_files_by_priority``, with discovery cursor 7."""
+def _frontier_rows(spark, lo, hi, priority):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("seq"), (F.col("id") % 5).alias("host"),
+        priority.cast("int").alias("priority"))
+
+
+def _stage_stratum(spark, store, lo, hi, p):
+    """Stage one priority-``p`` frontier file labelled with its partition."""
+    return stage_strata(store, _frontier_rows(spark, lo, hi, F.lit(p)))[0]
+
+
+def _partitioned_frontier_store(spark, tmp_path):
+    """A store whose frontier is partitioned identity(priority), 2 strata
+    of 3 files each, with discovery cursor 7."""
     store = SnapshotStore(str(tmp_path / "store"))
-    files = {}
-    for p in ("0", "1"):
-        df = (spark.range(int(p) * 50, int(p) * 50 + 50)
-              .select(F.col("id").alias("seq"),
-                      (F.col("id") % 5).alias("host"))
-              .repartition(3))
-        files[p] = store.stage(df, "frontier")
-    store.commit(epoch=0,
-                 appends={"frontier": files["0"] + files["1"]},
-                 meta={"frontier_files_by_priority": files,
-                       "discovery_cursors": {"ckpt": 7}})
+    record_spec(store, "frontier", FRONTIER_SPEC)
+    files = []
+    for p in (0, 1):
+        for i in range(3):
+            lo = p * 50 + i * 17
+            files += _stage_stratum(spark, store, lo, min(lo + 17,
+                                                          p * 50 + 50), p)
+    snap = store.snapshot()
+    store.commit(epoch=0, appends={"frontier": files},
+                 meta={**snap.meta, "discovery_cursors": {"ckpt": 7}})
     return store
 
 
 def _fold_batch_commit(spark, store, n_files=1):
-    """Land what ``ingest.fold_batch`` commits: new frontier files, their
-    priority-0 pins and the discovery cursor 7 -> 8. Returns the files."""
-    df = (spark.range(900, 900 + 10 * n_files)
-          .select(F.col("id").alias("seq"), (F.col("id") % 5).alias("host"))
-          .repartition(n_files))
-    staged = store.stage(df, "frontier")
+    """Land what ``ingest.fold_batch`` commits: new priority-0 frontier
+    files and the discovery cursor 7 -> 8. Returns the files."""
+    staged = [f for i in range(n_files) for f in _stage_stratum(
+        spark, store, 900 + 10 * i, 910 + 10 * i, 0)]
     snap = store.snapshot()
-    meta = dict(snap.meta)
-    meta["discovery_cursors"] = {"ckpt": 8}
-    by_p = {k: list(v) for k, v in
-            meta["frontier_files_by_priority"].items()}
-    by_p["0"] = by_p["0"] + staged
-    meta["frontier_files_by_priority"] = by_p
-    store.commit(epoch=1, appends={"frontier": staged}, meta=meta)
+    store.commit(epoch=1, appends={"frontier": staged},
+                 meta={**snap.meta, "discovery_cursors": {"ckpt": 8}})
     return staged
 
 
@@ -297,11 +317,11 @@ def test_frontier_pin_compaction_yields_on_concurrent_commit(
     """maintain_store REPLACES the frontier list and meta wholesale from
     its planning snapshot; if a commit (e.g. a streaming fold_batch) lands
     in between, it must yield instead of clobbering the interleaved
-    commit's appends/pin entries/cursors (r6, ADVICE item 1)."""
+    commit's appends/cursors (r6, ADVICE item 1)."""
     from crawlspark.config import CrawlConfig
     from crawlspark.plans.crawler import maintain_store
 
-    store = _pinned_frontier_store(spark, tmp_path)
+    store = _partitioned_frontier_store(spark, tmp_path)
     # interpose: after maintenance's planning snapshot is taken, land a
     # commit
     real_snapshot = store.snapshot
@@ -324,19 +344,19 @@ def test_frontier_pin_compaction_yields_on_concurrent_commit(
     # the racing commit's meta advances survive
     assert store.snapshot().meta["discovery_cursors"]["ckpt"] == 8
     # the pass yielded before its vacuum
-    assert store.commits() == [0, 1]
+    assert store.commits() == [0, 1, 2]
 
 
 def test_maintenance_yields_on_commit_during_another_tables_stage(
         spark, tmp_path, recwarn, monkeypatch):
     """The race lands while maintenance stages a non-frontier table, after
     the frontier's rewrite is planned: one commit for the whole pass means
-    the stale frontier plan never lands, so the racing commit's cursor,
-    frontier files and pins survive, and no vacuum runs."""
+    the stale frontier plan never lands, so the racing commit's cursor and
+    labelled frontier files survive, and no vacuum runs."""
     from crawlspark.config import CrawlConfig
     from crawlspark.plans.crawler import maintain_store
 
-    store = _pinned_frontier_store(spark, tmp_path)
+    store = _partitioned_frontier_store(spark, tmp_path)
     for e in range(3):
         snap = store.snapshot()
         store.commit(epoch=e, meta=snap.meta, appends={"log": store.stage(
@@ -360,11 +380,12 @@ def test_maintenance_yields_on_commit_during_another_tables_stage(
     snap = store.snapshot()
     assert snap.meta["discovery_cursors"]["ckpt"] == 8
     assert len(raced["files"]) == 4
-    pins = snap.meta["frontier_files_by_priority"]
+    pins, loose = partition_state(snap, "frontier")
     assert set(raced["files"]) <= set(pins["0"])
     assert set(raced["files"]) <= set(snap.tables["frontier"])
     assert {f for fs in pins.values() for f in fs} == \
         set(snap.tables["frontier"])
+    assert loose == []
     assert snap.tables["log"] == log_files
     # no vacuum: every manifest is still there
     assert store.commits() == list(range(snap.commit_id + 1))
@@ -380,7 +401,8 @@ def test_maintenance_pass_is_one_commit_and_keeps_the_epoch_commit(
     from crawlspark.config import CrawlConfig
     from crawlspark.plans.crawler import maintain_store
 
-    store = _pinned_frontier_store(spark, tmp_path)
+    store = _partitioned_frontier_store(spark, tmp_path)
+    record_spec(store, "url_seen", {"key": "url_hash", "n": 4})
     for e in range(3):
         flt = spark.createDataFrame(
             [(b, 10 * e + b, e) for b in range(4)],
@@ -413,9 +435,10 @@ def test_maintenance_pass_is_one_commit_and_keeps_the_epoch_commit(
 
     assert len(snap.tables["log"]) == 1
     assert store.read(spark, "log").count() == 30
-    assert snap.meta["bucket_spec"]["url_seen"]["key"] == "url_hash"
+    seen_parts, seen_loose = partition_state(snap, "url_seen")
+    assert seen_loose == [] and seen_parts
     assert store.read(spark, "url_seen").count() == 30
-    pins = snap.meta["frontier_files_by_priority"]
+    pins, _ = partition_state(snap, "frontier")
     assert all(len(fs) == 1 for fs in pins.values())
     assert [f for p in sorted(pins, key=int) for f in pins[p]] == \
         snap.tables["frontier"]

@@ -13,7 +13,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from crawlspark.tables import SnapshotStore, dedup_updates, merge_into
+from crawlspark.tables import (SnapshotStore, dedup_updates, merge_into,
+                               partition_state)
 
 N = 20_000
 HOT = 7  # the skewed key
@@ -89,7 +90,7 @@ def test_partition_scoped_merge_rewrites_only_touched_buckets(spark, tmp_path):
         F.col("id").alias("k"), F.lit(0).cast("long").alias("ts"),
         F.col("id").alias("payload"))
     merge_into(spark, store, "t", seed, "k", newer_col="ts", n_buckets=NB)
-    map_before = store.snapshot().meta["merge_buckets"]["t"]
+    map_before, _ = partition_state(store.snapshot(), "t")
     assert set(map_before) == {str(b) for b in range(NB)}  # 2000 keys span all
 
     # updates confined to the bucket of key 1: pick keys sharing that bucket
@@ -103,7 +104,7 @@ def test_partition_scoped_merge_rewrites_only_touched_buckets(spark, tmp_path):
                                     "k long, ts long, payload long")
     merge_into(spark, store, "t", updates, "k", newer_col="ts", n_buckets=NB)
 
-    map_after = store.snapshot().meta["merge_buckets"]["t"]
+    map_after, _ = partition_state(store.snapshot(), "t")
     for b in range(NB):
         if b == target_bucket:
             assert map_after[str(b)] != map_before[str(b)]   # rewritten

@@ -59,6 +59,26 @@ def test_admit_equals_grouped_map(dfs, pdfs):
         assert expected
 
 
+def test_admit_big_host_equals_oracle(spark):
+    """A host whose tokens exceed any per-salt cap: phase 1 must keep its
+    salt groups' top-``avail`` rows, so all 2000 of its tokens are spent,
+    as the oracle's ``admit_rows`` spends them."""
+    cand = pd.DataFrame({"url_hash": range(1, 3001), "host": "big.example",
+                         "priority": 0, "seq": range(3000)})
+    budgets = pd.DataFrame([{"host": "big.example", "capacity": 2000,
+                             "refill_per_epoch": 0, "tokens": 2000,
+                             "backoff_until_epoch": 0}])
+    avail = host_availability({"big.example": (2000, 0)},
+                              {"big.example": 2000}, {}, epoch=0)
+    a = politeness.admit(spark.createDataFrame(cand),
+                         spark.createDataFrame(budgets), epoch=0,
+                         batch_size=5000)
+    expected = [(i, int(r["url_hash"])) for i, r in
+                enumerate(admit_rows(cand.to_dict("records"), avail, 5000))]
+    assert len(expected) == 2000
+    assert _admitted_keys(a) == expected
+
+
 def test_admit_host_hash_key_equivalent(dfs):
     frontier, budgets = dfs
     cand = dedup.supersede(frontier)

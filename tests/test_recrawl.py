@@ -21,8 +21,9 @@ from pyspark.sql import functions as F
 from crawlspark.config import CrawlConfig
 from crawlspark.operators import recrawl
 from crawlspark.plans.crawler import run_crawl
+from crawlspark.tables import partition_state
 from tests.crawl_fixtures import SMALL, commit_plan, init_store, \
-    write_fixtures
+    record_spec, write_fixtures
 
 TERMINAL = ("ok", "invalid_payload")
 
@@ -140,8 +141,8 @@ def test_bucketed_forget_rewrites_only_touched_buckets(spark, tmp_path):
         F.lit(0).cast("int").alias("first_seen_epoch"),
         F.lit(1).cast("int").alias("first_seen_priority"))
     store.commit(0, appends={"url_seen": store.stage(seen, "url_seen")})
-    assert commit_plan(store, "url_seen", store.compact_bucketed(
-        spark, "url_seen", key="url_hash", n_buckets=8)) > 0
+    record_spec(store, "url_seen", {"key": "url_hash", "n": 8})
+    assert commit_plan(store, "url_seen", store.compact(spark, "url_seen")) > 0
     # loose append after bucketing (the per-epoch url_seen append shape)
     extra = spark.range(400, 430).select(
         F.col("id").alias("url_hash"), (F.col("id") % 13).alias("host_hash"),
@@ -158,14 +159,14 @@ def test_bucketed_forget_rewrites_only_touched_buckets(spark, tmp_path):
         F.pmod(F.xxhash64("url_hash"), F.lit(8)).cast("int").alias("_b"))
         .distinct().collect()}
     before = store.snapshot()
-    before_map = before.meta["merge_buckets"]["url_seen"]
+    before_map, _ = partition_state(before, "url_seen")
 
     cfg = CrawlConfig()
     n = recrawl.forget_urls(spark, store, cfg, targets, epoch=2)
     assert n == 5
 
     after = store.snapshot()
-    after_map = after.meta["merge_buckets"]["url_seen"]
+    after_map, _ = partition_state(after, "url_seen")
     for b in range(8):
         if b in tgt_buckets:
             assert after_map[str(b)] != before_map[str(b)]
@@ -209,9 +210,10 @@ def test_loop_with_bucketed_maintenance_and_ttl_recrawl(spark, tmp_path,
     # uniqueness survived forget+re-crawl cycles
     assert seen.count() == seen.select("url_hash").distinct().count()
     # bucket map consistent with the manifest after interleaved
-    # compact_bucketed (maintenance) and scoped deletes (recrawl)
-    bmap = snap.meta.get("merge_buckets", {}).get("url_seen")
-    assert bmap is not None, "maintenance never bucketed url_seen"
+    # compact (maintenance) and scoped deletes (recrawl)
+    bmap, _ = partition_state(snap, "url_seen")
+    assert bmap, "maintenance never bucketed url_seen"
+    assert snap.meta["partition_spec"]["url_seen"]["n"] == 4
     mapped = {f for fs in bmap.values() for f in fs}
     assert mapped <= set(snap.tables["url_seen"])
     # TTL refresh really re-fetched: some url has >1 terminal log row
@@ -237,9 +239,9 @@ def test_maintenance_survives_bucket_count_change_across_resume(
         F.lit(0).cast("int").alias("first_seen_epoch"),
         F.lit(1).cast("int").alias("first_seen_priority"))
     store.commit(0, appends={"url_seen": store.stage(seen, "url_seen")})
-    commit_plan(store, "url_seen", store.compact_bucketed(
-        spark, "url_seen", key="url_hash", n_buckets=4))
-    assert store.snapshot().meta["bucket_spec"]["url_seen"]["n"] == 4
+    record_spec(store, "url_seen", {"key": "url_hash", "n": 4})
+    commit_plan(store, "url_seen", store.compact(spark, "url_seen"))
+    assert store.snapshot().meta["partition_spec"]["url_seen"]["n"] == 4
     # maintenance with a DIFFERENT bucket count of its own: no crash, the
     # recorded spec wins
     extra = spark.range(100, 120).select(
@@ -249,7 +251,9 @@ def test_maintenance_survives_bucket_count_change_across_resume(
     store.commit(1, appends={"url_seen": store.stage(extra, "url_seen")},
                  meta=store.snapshot().meta)
     maintain_store(spark, store, CrawlConfig())
-    assert store.snapshot().meta["bucket_spec"]["url_seen"]["n"] == 4
+    assert store.snapshot().meta["partition_spec"]["url_seen"]["n"] == 4
+    assert set(partition_state(store.snapshot(), "url_seen")[0]) \
+        <= {"0", "1", "2", "3"}
     assert store.read(spark, "url_seen").count() == 120
 
 
@@ -267,8 +271,8 @@ def test_bucketed_forget_preserves_evolved_schema(spark, tmp_path):
         F.lit(0).cast("int").alias("first_seen_epoch"),
         F.lit(1).cast("int").alias("first_seen_priority"))
     store.commit(0, appends={"url_seen": store.stage(v1, "url_seen")})
-    assert commit_plan(store, "url_seen", store.compact_bucketed(
-        spark, "url_seen", key="url_hash", n_buckets=4)) > 0
+    record_spec(store, "url_seen", {"key": "url_hash", "n": 4})
+    assert commit_plan(store, "url_seen", store.compact(spark, "url_seen")) > 0
     # evolved loose append: a new column the bucketed files lack
     v2 = spark.range(100, 130).select(
         F.col("id").alias("url_hash"),

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.tables import SnapshotStore
-from tests.crawl_fixtures import commit_plan
+from tests.crawl_fixtures import commit_plan, record_spec
 
 
 @pytest.fixture()
@@ -83,14 +83,14 @@ def test_dropped_column_reads_null_for_new_files(spark, store):
 
 def test_bucketed_maintenance_handles_evolved_loose_files(spark, store):
     # initial bucketing at v1, then loose v2 appends with an added column:
-    # compact_bucketed must fold them in without dropping the new column
+    # compact must fold them in without dropping the new column
     store.commit(0, appends={"t": store.stage(_v1(spark, n=40), "t")})
-    assert commit_plan(store, "t", store.compact_bucketed(
-        spark, "t", key="url_hash", n_buckets=4)) > 0
+    record_spec(store, "t", {"key": "url_hash", "n": 4})
+    assert commit_plan(store, "t", store.compact(spark, "t")) > 0
     store.commit(2, appends={"t": store.stage(_v2(spark, n=10,
                                                   base=5000), "t")},
-                 meta=store.snapshot().meta)   # carry bucket_spec forward
-    assert commit_plan(store, "t", store.compact_bucketed(spark, "t")) > 0
+                 meta=store.snapshot().meta)   # carry partition_spec forward
+    assert commit_plan(store, "t", store.compact(spark, "t")) > 0
     df = store.read(spark, "t")
     assert set(df.columns) == {"url_hash", "epoch", "image_fmt"}
     assert df.count() == 50

@@ -1,10 +1,10 @@
 """``SnapshotStore.stage_groups``: one partitioned write per grouped rewrite.
 
-Bucket- and stratum-scoped rewrites (``compact_bucketed``, ``merge_into``,
-``forget_urls``, the frontier strata writers) stage a frame split by an
-integer label in ONE Spark write job instead of one ``stage`` per group.
-These tests pin the write count, the per-file layout (one label per file,
-no label column), the label-free schema fingerprint, the stats bounds and
+Partition-scoped rewrites (``compact``, ``merge_into``, ``forget_urls``,
+the frontier strata writers) stage a frame split by an integer label in ONE
+Spark write job instead of one ``stage`` per group. These tests pin the
+write count, the per-file layout (one label per file, no label column), the
+label-free schema fingerprint, the stats bounds and partition labels, and
 the emptied-bucket mapping.
 """
 
@@ -19,8 +19,8 @@ from pyspark.sql.readwriter import DataFrameWriter
 
 from crawlspark.config import CrawlConfig
 from crawlspark.operators import recrawl
-from crawlspark.tables import SnapshotStore, bucket_state
-from tests.crawl_fixtures import commit_plan
+from crawlspark.tables import SnapshotStore, partition_state
+from tests.crawl_fixtures import commit_plan, record_spec
 
 NB = 8
 
@@ -62,8 +62,8 @@ def _append(store, name, files):
 def _bucketed_seen(spark, tmp_path, n=400):
     store = SnapshotStore(str(tmp_path / "st"))
     _append(store, "url_seen", store.stage(_seen_rows(spark, 0, n), "url_seen"))
-    commit_plan(store, "url_seen", store.compact_bucketed(
-        spark, "url_seen", key="url_hash", n_buckets=NB))
+    record_spec(store, "url_seen", {"key": "url_hash", "n": NB})
+    commit_plan(store, "url_seen", store.compact(spark, "url_seen"))
     return store
 
 
@@ -95,22 +95,26 @@ def test_stage_groups_records_stats_in_next_manifest(spark, tmp_path):
     assert stats[groups["1"][0]]["id"] == [50, 99]
     assert all("__schema__" in stats[f]
                for rels in groups.values() for f in rels)
+    # each file's label is its partition in the manifest
+    assert all(stats[f]["__part__"] == int(g)
+               for g, rels in groups.items() for f in rels)
 
 
 def test_compact_bucketed_is_one_write(spark, tmp_path, writes):
     store = _bucketed_seen(spark, tmp_path)
     assert len(writes) == 2                   # the stage + the bucketing
-    m0, _ = bucket_state(store.snapshot(), "url_seen")
+    m0, _ = partition_state(store.snapshot(), "url_seen")
     assert set(m0) == {str(b) for b in range(NB)}
 
-    # loose rows spread over every bucket: still one rewrite
+    # loose rows spread over every bucket: still one rewrite, absorbing the
+    # loose file and every bucket's file
     _append(store, "url_seen",
             store.stage(_seen_rows(spark, 1000, 1040, 1), "url_seen"))
     del writes[:]
     assert commit_plan(store, "url_seen",
-                       store.compact_bucketed(spark, "url_seen")) == 1
+                       store.compact(spark, "url_seen")) == 1 + NB
     assert len(writes) == 1
-    m1, loose = bucket_state(store.snapshot(), "url_seen")
+    m1, loose = partition_state(store.snapshot(), "url_seen")
     assert loose == [] and all(len(fs) == 1 for fs in m1.values())
     assert store.read(spark, "url_seen").count() == 440
 
@@ -123,7 +127,7 @@ def test_grouped_bucketing_keeps_plain_reads(spark, tmp_path):
     _append(store, "url_seen",
             store.stage(_seen_rows(spark, 1000, 1010, 1), "url_seen"))
     assert not store.needs_merge("url_seen")
-    commit_plan(store, "url_seen", store.compact_bucketed(spark, "url_seen"))
+    commit_plan(store, "url_seen", store.compact(spark, "url_seen"))
     assert not store.needs_merge("url_seen")
 
 
@@ -132,7 +136,7 @@ def test_forget_is_one_write_over_buckets_and_loose(spark, tmp_path, writes):
     _append(store, "url_seen",
             store.stage(_seen_rows(spark, 400, 430, 1), "url_seen"))
     before = store.snapshot()
-    before_map, loose = bucket_state(before, "url_seen")
+    before_map, loose = partition_state(before, "url_seen")
     assert len(loose) == 1
     targets = [3, 41, 77, 150, 299, 405]
     buckets = _bucket(spark, targets)
@@ -146,7 +150,7 @@ def test_forget_is_one_write_over_buckets_and_loose(spark, tmp_path, writes):
     assert len(writes) == 1
 
     after = store.snapshot()
-    after_map, after_loose = bucket_state(after, "url_seen")
+    after_map, after_loose = partition_state(after, "url_seen")
     touched = {str(buckets[k]) for k in targets if k < 400}
     for b in before_map:
         if b in touched:
@@ -163,7 +167,7 @@ def test_forget_is_one_write_over_buckets_and_loose(spark, tmp_path, writes):
 
 def test_forget_emptying_a_bucket_maps_it_to_no_files(spark, tmp_path):
     store = _bucketed_seen(spark, tmp_path, n=100)
-    before_map, _ = bucket_state(store.snapshot(), "url_seen")
+    before_map, _ = partition_state(store.snapshot(), "url_seen")
     buckets = _bucket(spark, range(100))
     b0 = buckets[0]
     victims = [k for k, b in buckets.items() if b == b0]
@@ -173,7 +177,7 @@ def test_forget_emptying_a_bucket_maps_it_to_no_files(spark, tmp_path):
         spark.createDataFrame([(k,) for k in victims], "url_hash long"), 1)
     assert n == len(victims)
     after = store.snapshot()
-    after_map, _ = bucket_state(after, "url_seen")
-    assert after_map[str(b0)] == []
+    after_map, _ = partition_state(after, "url_seen")
+    assert after_map.get(str(b0), []) == []
     assert not set(before_map[str(b0)]) & set(after.tables["url_seen"])
     assert store.read(spark, "url_seen").count() == 100 - len(victims)

@@ -250,12 +250,11 @@ def test_fold_batch_warns_when_batch_below_cursor(
 
 def test_frontier_pin_compaction_bounds_file_growth(spark, tmp_path_factory):
     """A long-running discovery stream appends one file set per micro-batch
-    per priority, so the pin map (and the pop scan behind every epoch) grows
-    without bound; compact_frontier_strata must rewrite WITHIN each
-    priority's list and swap the pin atomically, keeping file count
-    O(priorities x target_files) across many batches with zero row churn
-    (VERDICT r4 #6)."""
-    from crawlspark.plans.crawler import compact_frontier_strata
+    per priority, so each stratum partition (and the pop scan behind every
+    epoch) grows without bound; ``compact`` must rewrite WITHIN each
+    priority partition, keeping file count O(priorities x target_files)
+    across many batches with zero row churn (VERDICT r4 #6)."""
+    from crawlspark.tables import partition_state
 
     tmp = tmp_path_factory.mktemp("pincompact_fx")
     write_fixtures(str(tmp), SMALL)
@@ -267,7 +266,8 @@ def test_frontier_pin_compaction_bounds_file_growth(spark, tmp_path_factory):
         ingest.fold_batch(spark, store, _mini_batch(spark, seed=500 + b), b,
                           cursor_tag="ckpt-C")
     snap = store.snapshot()
-    pins = snap.meta["frontier_files_by_priority"]
+    pins, loose = partition_state(snap, "frontier")
+    assert loose == []
     assert max(len(fs) for fs in pins.values()) > 2   # growth happened
 
     def rows_by_name(df):
@@ -278,11 +278,11 @@ def test_frontier_pin_compaction_bounds_file_growth(spark, tmp_path_factory):
     pre_rows = rows_by_name(store.read(spark, "frontier"))
     pre_remaining = snap.meta["remaining_by_priority"]
 
-    absorbed = commit_plan(store, "frontier", compact_frontier_strata(
-        spark, store, target_files=1))
+    absorbed = commit_plan(store, "frontier", store.compact(
+        spark, "frontier", target_files=1))
     assert absorbed > 0
     snap2 = store.snapshot()
-    pins2 = snap2.meta["frontier_files_by_priority"]
+    pins2, _ = partition_state(snap2, "frontier")
     # bounded: one file per stratum, map and table list agree exactly
     assert all(len(fs) == 1 for fs in pins2.values())
     assert [f for p in sorted(pins2, key=int) for f in pins2[p]] == \
@@ -291,15 +291,15 @@ def test_frontier_pin_compaction_bounds_file_growth(spark, tmp_path_factory):
     assert rows_by_name(store.read(spark, "frontier")) == pre_rows
     assert snap2.meta["remaining_by_priority"] == pre_remaining
     # idempotent at steady state
-    assert compact_frontier_strata(spark, store, target_files=1) is None
+    assert store.compact(spark, "frontier", target_files=1) is None
 
     # growth resumes, the next maintenance pass re-bounds it
     for b in range(n_batches, n_batches + 3):
         ingest.fold_batch(spark, store, _mini_batch(spark, seed=500 + b), b,
                           cursor_tag="ckpt-C")
-    assert commit_plan(store, "frontier", compact_frontier_strata(
-        spark, store, target_files=1)) > 0
-    pins3 = store.snapshot().meta["frontier_files_by_priority"]
+    assert commit_plan(store, "frontier", store.compact(
+        spark, "frontier", target_files=1)) > 0
+    pins3, _ = partition_state(store.snapshot(), "frontier")
     assert all(len(fs) == 1 for fs in pins3.values())
     # the old files stay readable until vacuum (snapshot isolation), then go
     store.vacuum(keep_last=1)
